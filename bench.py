@@ -378,10 +378,6 @@ def phase_stream(cpus: int, tmp_root: str) -> None:
     # startups (~7 s fixed across both checkpointed runs) stop
     # dominating the rows/s — see BENCH.md r4 streaming breakdown
     n_conv = int(os.environ.get("SATYA_BENCH_STREAM_NCONV", "360000"))
-    # before the JVM starts: the TWS worker processes inherit this env
-    from satya_spark.streaming.tws_support import ensure_protobuf_pythonpath
-
-    ensure_protobuf_pythonpath()
     spark = _session(cpus)
     all_dir = os.path.join(tmp_root, "stream_all")
     synthesize(spark, n_conv=n_conv, partitions=8).write.mode(
@@ -483,51 +479,22 @@ def phase_stream(cpus: int, tmp_root: str) -> None:
         spark.read.parquet(out_d).count() for _, _, _, out_d in reps
     )
 
-    # solo stateful-runtime comparison over the full input (fresh
-    # checkpoints, single query — no concurrent kernel stream):
-    # applyInPandasWithState packed-bucket state vs transformWithState
-    # (RocksDB, per-conv MapState entries). TWS is skipped when its
-    # protobuf runtime is absent (tws_support gates it).
-    from satya_spark.streaming.tws_support import ROCKSDB_PROVIDER, tws_available
-
-    def solo_state(tag: str, build) -> float:
-        ck = os.path.join(tmp_root, f"ck_solo_{tag}")
-        op = os.path.join(tmp_root, f"out_solo_{tag}")
-        t0 = time.monotonic()
-        q = (
-            build(spark.readStream.schema(schema).parquet(in_dir))
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", op)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    # solo stateful-operator throughput over the full input (fresh
+    # checkpoint, single query — no concurrent kernel stream)
+    t0 = time.monotonic()
+    q = (
+        stateful_turn_checks(
+            spark.readStream.schema(schema).parquet(in_dir), bucket_by=4096
         )
-        q.awaitTermination(900)
-        return time.monotonic() - t0
-
-    solo: dict = {}
-    t_aipws = solo_state(
-        "aipws", lambda s: stateful_turn_checks(s, bucket_by=4096)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", os.path.join(tmp_root, "out_solo"))
+        .option("checkpointLocation", os.path.join(tmp_root, "ck_solo"))
+        .trigger(availableNow=True)
+        .start()
     )
-    solo["stateful_aipws_rows_per_sec"] = round(gt_rows / t_aipws)
-    if tws_available():
-        from satya_spark.streaming.stateful_tws import stateful_turn_checks_tws
-
-        key = "spark.sql.streaming.stateStore.providerClass"
-        spark.conf.set(key, ROCKSDB_PROVIDER)
-        t_tws = solo_state(
-            "tws", lambda s: stateful_turn_checks_tws(s, bucket_by=4096)
-        )
-        solo["stateful_tws_map_rows_per_sec"] = round(gt_rows / t_tws)
-        t_twsp = solo_state(
-            "twsp",
-            lambda s: stateful_turn_checks_tws(
-                s, bucket_by=4096, layout="packed"
-            ),
-        )
-        solo["stateful_tws_packed_rows_per_sec"] = round(gt_rows / t_twsp)
-        spark.conf.unset(key)
+    q.awaitTermination(900)
+    t_solo = time.monotonic() - t0
     print(
         json.dumps(
             {
@@ -540,7 +507,7 @@ def phase_stream(cpus: int, tmp_root: str) -> None:
                 "stateful_anomaly_rows": anomalies,
                 "state_survived_restart": anomalies >= replayed_rows,
                 "resumed_from_checkpoint": True,
-                **solo,
+                "stateful_aipws_rows_per_sec": round(gt_rows / t_solo),
             }
         )
     )

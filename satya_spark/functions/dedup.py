@@ -22,8 +22,6 @@ Embedding-cosine near-dup lives in similarity.py.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -64,24 +62,6 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 
 
 # --- n-gram Jaccard ------------------------------------------------------
-
-
-def _blocked_pairs(
-    with_tokens: DataFrame, id_col: str, block_cols: Sequence[str]
-) -> DataFrame:
-    a = with_tokens.select(
-        F.col(id_col).alias("id_a"),
-        F.col("toks").alias("toks_a"),
-        *[F.col(c) for c in block_cols],
-    )
-    b = with_tokens.select(
-        F.col(id_col).alias("id_b"),
-        F.col("toks").alias("toks_b"),
-        *[F.col(c).alias(f"__b_{c}") for c in block_cols],
-    )
-    cond = [a[c] == b[f"__b_{c}"] for c in block_cols]
-    joined = a.join(b, cond, "inner").filter(F.col("id_a") < F.col("id_b"))
-    return joined
 
 
 def jaccard_pairs(
@@ -617,6 +597,7 @@ def dup_clusters(
         ).select("e.src", "e.dst")
 
     n_edges = None  # unknown-large until the first contraction counts
+    n_nodes = None
     edges = _both(und)
     labels = None
     for rnd in range(max_iter):
@@ -712,8 +693,11 @@ def dup_clusters(
             # guard bounds BOTH collected frames by row count, so the
             # path never fires when the label table is corpus-sized —
             # at 100 TB the distributed loop simply continues.
+            # The node set is fixed from round 0 on, so its count is
+            # scanned at most once.
             if n_edges <= finish_collect_max:
-                n_nodes = labels.count()
+                if n_nodes is None:
+                    n_nodes = labels.count()
                 if n_nodes + n_edges // 2 <= finish_collect_max:
                     return _cc_finish_driver(labels, und)
     raise RuntimeError(

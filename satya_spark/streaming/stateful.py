@@ -21,7 +21,7 @@ is bounded by the active-conversation working set.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
 
@@ -50,11 +50,42 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_validator(idle_timeout_ms: int):
-    def _validate_conv(key, pdfs, state):
-        return _validate_conv_impl(key, pdfs, state, idle_timeout_ms)
+_OUT_COLUMNS = ["conv_id", "turn_idx", "anomaly", "max_seen", "state_capped"]
 
-    return _validate_conv
+
+def _check_turns(conv_id, turns, max_turn, seen, capped, out_rows):
+    """The per-turn verdict kernel shared by both state layouts:
+    appends one row per duplicate/regressed turn to ``out_rows`` and
+    returns the updated (max_turn, seen, capped). Once the seen-set
+    is capped, a late turn below the kept window is reported as
+    regressed (duplicate and late-but-new are indistinguishable)."""
+    for t in turns:
+        t = int(t)
+        if t in seen:
+            out_rows.append((conv_id, t, "duplicate_turn", max_turn, capped))
+        elif t < max_turn:
+            out_rows.append((conv_id, t, "regressed_turn", max_turn, capped))
+        max_turn = max(max_turn, t)
+        seen.add(t)
+        if len(seen) > STATE_CAP:
+            # keep the most recent window; flag the cap
+            seen = set(sorted(seen)[-STATE_CAP:])
+            capped = True
+    return max_turn, seen, capped
+
+
+def _make_validator(impl, idle_timeout_ms: int):
+    def _validate(key, pdfs, state):
+        return impl(key, pdfs, state, idle_timeout_ms)
+
+    return _validate
+
+
+def _emit(state: GroupState, out_rows: list, idle_timeout_ms: int):
+    if idle_timeout_ms > 0:
+        state.setTimeoutDuration(idle_timeout_ms)
+    if out_rows:
+        yield pd.DataFrame(out_rows, columns=_OUT_COLUMNS)
 
 
 def _validate_conv_impl(
@@ -77,31 +108,11 @@ def _validate_conv_impl(
 
     out_rows = []
     for pdf in pdfs:
-        for t in pdf["turn_idx"]:
-            t = int(t)
-            if t in seen:
-                out_rows.append((conv_id, t, "duplicate_turn", max_turn, capped))
-            elif t < max_turn and capped and t not in seen:
-                # under a capped state we can no longer distinguish
-                # duplicate from late-but-new below the window
-                out_rows.append((conv_id, t, "regressed_turn", max_turn, capped))
-            elif t < max_turn:
-                out_rows.append((conv_id, t, "regressed_turn", max_turn, capped))
-            max_turn = max(max_turn, t)
-            seen.add(t)
-            if len(seen) > STATE_CAP:
-                # keep the most recent window; flag the cap
-                seen = set(sorted(seen)[-STATE_CAP:])
-                capped = True
-
-    state.update((max_turn, sorted(seen), capped))
-    if idle_timeout_ms > 0:
-        state.setTimeoutDuration(idle_timeout_ms)
-    if out_rows:
-        yield pd.DataFrame(
-            out_rows,
-            columns=["conv_id", "turn_idx", "anomaly", "max_seen", "state_capped"],
+        max_turn, seen, capped = _check_turns(
+            conv_id, pdf["turn_idx"].to_numpy(), max_turn, seen, capped, out_rows
         )
+    state.update((max_turn, sorted(seen), capped))
+    yield from _emit(state, out_rows, idle_timeout_ms)
 
 
 BUCKET_STATE_SCHEMA = T.StructType(
@@ -112,13 +123,6 @@ BUCKET_STATE_SCHEMA = T.StructType(
         T.StructField("caps", T.ArrayType(T.BooleanType())),
     ]
 )
-
-
-def _make_bucket_validator(idle_timeout_ms: int):
-    def _validate_bucket(key, pdfs, state):
-        return _validate_bucket_impl(key, pdfs, state, idle_timeout_ms)
-
-    return _validate_bucket
 
 
 def _validate_bucket_impl(
@@ -146,22 +150,9 @@ def _validate_bucket_impl(
     for pdf in pdfs:
         for conv_id, sub in pdf.groupby("conv_id", sort=False):
             max_turn, seen, capped = st.get(conv_id, (-1, set(), False))
-            for t in sub["turn_idx"].to_numpy():
-                t = int(t)
-                if t in seen:
-                    out_rows.append(
-                        (conv_id, t, "duplicate_turn", max_turn, capped)
-                    )
-                elif t < max_turn:
-                    out_rows.append(
-                        (conv_id, t, "regressed_turn", max_turn, capped)
-                    )
-                max_turn = max(max_turn, t)
-                seen.add(t)
-                if len(seen) > STATE_CAP:
-                    seen = set(sorted(seen)[-STATE_CAP:])
-                    capped = True
-            st[conv_id] = (max_turn, seen, capped)
+            st[conv_id] = _check_turns(
+                conv_id, sub["turn_idx"].to_numpy(), max_turn, seen, capped, out_rows
+            )
 
     items = sorted(st.items())
     state.update(
@@ -172,13 +163,7 @@ def _validate_bucket_impl(
             [v[2] for _, v in items],
         )
     )
-    if idle_timeout_ms > 0:
-        state.setTimeoutDuration(idle_timeout_ms)
-    if out_rows:
-        yield pd.DataFrame(
-            out_rows,
-            columns=["conv_id", "turn_idx", "anomaly", "max_seen", "state_capped"],
-        )
+    yield from _emit(state, out_rows, idle_timeout_ms)
 
 
 def stateful_turn_checks(
@@ -220,7 +205,7 @@ def stateful_turn_checks(
             )
             .groupBy("__bucket")
             .applyInPandasWithState(
-                _make_bucket_validator(idle_timeout_ms),
+                _make_validator(_validate_bucket_impl, idle_timeout_ms),
                 outputStructType=OUTPUT_SCHEMA,
                 stateStructType=BUCKET_STATE_SCHEMA,
                 outputMode="append",
@@ -228,7 +213,7 @@ def stateful_turn_checks(
             )
         )
     return base.groupBy("conv_id").applyInPandasWithState(
-        _make_validator(idle_timeout_ms),
+        _make_validator(_validate_conv_impl, idle_timeout_ms),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -13,13 +13,6 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     [_TESTS, _ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
 )
 
-# transformWithState needs google.protobuf in the TWS worker processes
-# (which inherit this env) — expose the sandbox shim BEFORE the JVM
-# starts; no-op when a real protobuf wheel is installed
-from satya_spark.streaming.tws_support import ensure_protobuf_pythonpath  # noqa: E402
-
-ensure_protobuf_pythonpath()
-
 
 @pytest.fixture(scope="session")
 def spark():

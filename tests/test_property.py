@@ -9,6 +9,7 @@ from __future__ import annotations
 import re
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import HealthCheck, given, settings
 from pyspark.sql import types as T
 
@@ -849,16 +850,21 @@ def _py_components(edges):
     return {n: find(n) for n in parent}
 
 
+# finish_collect_max=0 turns off the driver-side union-find finish, so
+# the distributed rounds are checked on their own
+@pytest.mark.parametrize(
+    "kw", [{}, {"finish_collect_max": 0}], ids=["default", "distributed"]
+)
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=_edge_lists)
-def test_dup_clusters_matches_union_find(spark, edges):
+def test_dup_clusters_matches_union_find(spark, kw, edges):
     from satya_spark.functions.dedup import dup_clusters
 
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a long, id_b long"
     )
     got = {
-        r["doc_id"]: r["cluster_id"] for r in dup_clusters(df).collect()
+        r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, **kw).collect()
     }
     assert got == _py_components(edges)
 

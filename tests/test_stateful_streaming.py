@@ -7,7 +7,7 @@ import json
 
 from pyspark.sql import types as T
 
-from satya_spark.streaming.stateful import stateful_turn_checks
+from satya_spark.streaming.stateful import STATE_CAP, stateful_turn_checks
 
 SCHEMA = T.StructType(
     [
@@ -85,7 +85,13 @@ def test_bucketed_state_matches_per_conv(spark, tmp_path):
         for i in range(40)
         for t in ([0, 1, 2] if i % 3 else [2, 0, 0])  # dups + regressions
     ]
+    # one hot conversation outgrows the seen-set cap: its state keeps
+    # only turns 2..STATE_CAP+1, so the batch-2 replay of turns 0 and 1
+    # (below the kept window) is reported as regressed and a replay
+    # inside the window still as duplicate, all marked state_capped
+    rows1 += [{"conv_id": "hot", "turn_idx": t} for t in range(STATE_CAP + 2)]
     rows2 = [{"conv_id": f"c{i}", "turn_idx": 1} for i in range(0, 40, 3)]
+    rows2 += [{"conv_id": "hot", "turn_idx": t} for t in (0, 1, STATE_CAP)]
     outs = {}
     for name, kw in (("perconv", {}), ("bucketed", {"bucket_by": 4})):
         indir = tmp_path / f"in_{name}"
@@ -98,16 +104,25 @@ def test_bucketed_state_matches_per_conv(spark, tmp_path):
         _write(indir / "b2.ndjson", rows2)
         _run_batch(spark, indir, ckpt, outdir, **kw)
         outs[name] = sorted(
-            (r["conv_id"], r["turn_idx"], r["anomaly"], r["max_seen"])
+            (r["conv_id"], r["turn_idx"], r["anomaly"], r["max_seen"],
+             r["state_capped"])
             for r in spark.read.parquet(str(outdir)).collect()
         )
     assert outs["perconv"], "fixture must produce anomalies"
     assert outs["bucketed"] == outs["perconv"]
+    hot = STATE_CAP + 1
+    assert [r for r in outs["bucketed"] if r[4]] == [
+        ("hot", 0, "regressed_turn", hot, True),
+        ("hot", 1, "regressed_turn", hot, True),
+        ("hot", STATE_CAP, "duplicate_turn", hot, True),
+    ]
     # batch-2's turn 1 arrives at convs whose batch-1 max is 2 with 1
     # unseen → regressed_turn, detectable only via cross-batch state;
     # with 40 convs over 4 buckets every bucket holds many convs
     n_reg_batch2 = sum(
-        1 for c, t, a, _ in outs["bucketed"] if t == 1 and a == "regressed_turn"
+        1
+        for c, t, a, _, _ in outs["bucketed"]
+        if c != "hot" and t == 1 and a == "regressed_turn"
     )
     assert n_reg_batch2 == 14  # i = 0, 3, ..., 39
 
@@ -144,83 +159,3 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
         for r in spark.read.parquet(str(outdir)).collect()
     ]
     assert rows.count(("c1", 0, "duplicate_turn")) == 2
-
-
-def _run_tws_batch(spark, indir, ckpt, outdir, **kw):
-    from satya_spark.streaming.stateful_tws import stateful_turn_checks_tws
-    from satya_spark.streaming.tws_support import ROCKSDB_PROVIDER
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = spark.readStream.schema(SCHEMA).json(str(indir))
-        q = (
-            stateful_turn_checks_tws(stream, **kw)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", str(outdir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_tws_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """transformWithState twin (RocksDB state store, MapState
-    per-conversation entries in bucketed mode) emits IDENTICAL
-    verdicts to the applyInPandasWithState operator, including
-    cross-micro-batch state — both per-conv and bucketed keying."""
-    import pytest
-
-    from satya_spark.streaming.tws_support import tws_available
-
-    if not tws_available():
-        pytest.skip("no protobuf runtime for transformWithState here")
-
-    rows1 = [
-        {"conv_id": f"c{i}", "turn_idx": t}
-        for i in range(30)
-        for t in ([0, 1, 2] if i % 3 else [2, 0, 0])
-    ]
-    rows2 = [{"conv_id": f"c{i}", "turn_idx": 1} for i in range(0, 30, 3)]
-
-    outs = {}
-    runs = [
-        ("aipws", _run_batch, {}),
-        ("tws_conv", _run_tws_batch, {}),
-        ("tws_bucket", _run_tws_batch, {"bucket_by": 4}),
-        # fraction 0 forces the bulk iterator() read path on every
-        # batch; inf forces point reads — both must match the oracle
-        ("tws_dense", _run_tws_batch, {"bucket_by": 4, "dense_read_fraction": 0.0}),
-        (
-            "tws_point",
-            _run_tws_batch,
-            {"bucket_by": 4, "dense_read_fraction": float("inf")},
-        ),
-        ("tws_packed", _run_tws_batch, {"bucket_by": 4, "layout": "packed"}),
-    ]
-    for name, runner, kw in runs:
-        indir = tmp_path / f"in_{name}"
-        indir.mkdir()
-        ckpt, outdir = tmp_path / f"ck_{name}", tmp_path / f"out_{name}"
-        _write(indir / "b1.ndjson", rows1)
-        runner(spark, indir, ckpt, outdir, **kw)
-        _write(indir / "b2.ndjson", rows2)
-        runner(spark, indir, ckpt, outdir, **kw)
-        outs[name] = sorted(
-            (r["conv_id"], r["turn_idx"], r["anomaly"], r["max_seen"])
-            for r in spark.read.parquet(str(outdir)).collect()
-        )
-    assert outs["aipws"], "fixture must produce anomalies"
-    assert outs["tws_conv"] == outs["aipws"]
-    assert outs["tws_bucket"] == outs["aipws"]
-    assert outs["tws_dense"] == outs["aipws"]
-    assert outs["tws_point"] == outs["aipws"]
-    assert outs["tws_packed"] == outs["aipws"]
