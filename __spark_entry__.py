@@ -193,8 +193,8 @@ def q_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation stats via the skew-safe two-phase salted
-    aggregation (north rule)."""
+    """Per-conversation stats: one algebraic groupBy, whose map-side
+    partial aggregation defuses hot-conversation skew (north rule)."""
     from satya_spark.crossrow import conv_stats
 
     return conv_stats(from_tpch(spark, sf_dir))
@@ -366,7 +366,7 @@ def q_violations_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_top_violating_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Worst-10 conversations by violation count — salted two-phase
+    """Worst-10 conversations by violation count — one-exchange
     count + TakeOrderedAndProject top-n (no full sort)."""
     from satya_spark.crossrow import top_violating_groups
 

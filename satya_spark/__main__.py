@@ -77,6 +77,19 @@ def _input_fingerprint(path: str) -> str:
     return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()[:16]
 
 
+def _write_observed(frame, path: str, **aggs) -> dict:
+    """Write ``frame`` as parquet to ``path`` and return ``aggs``
+    (name -> aggregate Column) as observed on that write: summary
+    counts come from the pass that writes the rows, not a re-read."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    frame.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get
+
+
 def cmd_validate(args) -> int:
     from pyspark.sql import functions as F
 
@@ -131,7 +144,13 @@ def cmd_validate(args) -> int:
         )
     else:
         verdicts = eng.shard_verdicts(eng.annotate(df))
-    verdicts.write.mode("overwrite").parquet(f"{args.output}/verdicts")
+    counts = _write_observed(
+        verdicts,
+        f"{args.output}/verdicts",
+        shards=F.count(F.lit(1)),
+        rows=F.sum("n_rows"),
+        invalid=F.sum("n_invalid_rows"),
+    )
 
     if args.sample_per_shard:
         viol = eng.violations_sampled(df, per_shard_cap=args.sample_per_shard)
@@ -139,25 +158,15 @@ def cmd_validate(args) -> int:
         viol = eng.violations(df)
     viol.write.mode("overwrite").parquet(f"{args.output}/violations")
 
-    sides = None
-    if args.quarantine:
-        sides = eng.write_split(df, f"{args.output}/split")
-
-    v = spark.read.parquet(f"{args.output}/verdicts")
-    row = v.agg(
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_invalid_rows").alias("invalid"),
-    ).collect()[0]
-    n_rows = int(row["rows"] or 0)
-    n_invalid = int(row["invalid"] or 0)
+    n_invalid = int(counts["invalid"] or 0)
     summary = {
-        "rows": n_rows,
+        "rows": int(counts["rows"] or 0),
         "invalid_rows": n_invalid,
-        "shards": v.count(),
+        "shards": counts["shards"],
         "output": args.output,
     }
-    if sides is not None:
-        summary["split"] = sides
+    if args.quarantine:
+        summary["split"] = eng.write_split(df, f"{args.output}/split")
     print(json.dumps(summary))
     return 0 if n_invalid == 0 else 3
 
@@ -330,6 +339,13 @@ def cmd_clean(args) -> int:
                 F.concat(F.col("drop_reasons"), F.array(F.lit("duplicate"))),
             ).otherwise(F.col("drop_reasons")),
         )
+    # the per-document frame, materialized ONCE: the output columns
+    # plus text_redacted and drop_reasons (join order: id column
+    # first). The near-dedup canon choice and both writes read this
+    # checkpoint, so the hygiene subtree (repetition explode, PII
+    # regexes, gopher) executes once per pass, not once per action.
+    out_cols = [c for c in df.columns if c not in (idc, "__c4_page_dropped")]
+    d = d.select(idc, *out_cols, "text_redacted", "drop_reasons").localCheckpoint()
     if args.near_dedup:
         # MinHash-LSH pairs -> connected components. Pairs scan the
         # post-C4 (id, text) projection, NOT the fully-annotated
@@ -351,15 +367,10 @@ def cmd_clean(args) -> int:
         # the kept copy must be one the OTHER rules keep: blindly
         # taking the min id can hand the cluster to a row already
         # dropped (e.g. too_long), deleting every copy of the content
-        # localCheckpoint pins the annotation pipeline to ONE run:
-        # without it this projection re-enters the output plan via the
-        # losers join below, and the hygiene subtree (repetition
-        # explode, PII regexes, gopher) executes twice per action
-        # (ADVICE r5). Fixed-width (id, bool) rows — cheap at any scale.
         ok = d.select(
             F.col(idc).alias("doc_id"),
             (F.size("drop_reasons") == 0).alias("__ok"),
-        ).localCheckpoint()
+        )
         cl = clusters.join(ok, "doc_id")
         canon = cl.groupBy("cluster_id").agg(
             F.min(F.when(F.col("__ok"), F.col("doc_id"))).alias("__canon")
@@ -381,30 +392,23 @@ def cmd_clean(args) -> int:
                 F.col("__neardup"),
                 F.concat(F.col("drop_reasons"), F.array(F.lit("near_duplicate"))),
             ).otherwise(F.col("drop_reasons")),
-        )
+        ).drop("__neardup")
     keep = F.size("drop_reasons") == 0
-    helper_cols = [
-        "n_tokens", "n_distinct", "ttr", "top_bigram_count",
-        "top_bigram_frac", "pii_email", "pii_ssn", "pii_phone", "pii_ipv4",
-        "pii_types", "text_redacted", "__contam",  # drop() ignores absents
-        "__c4_page_dropped", "gopher_keep", "rep_keep", "__neardup",
-    ]
     kept = (
         d.filter(keep)
         .withColumn(txt, F.col("text_redacted"))  # redacted text ships
-        .drop("drop_reasons", *helper_cols)
+        .drop("drop_reasons", "text_redacted")
     )
-    dropped = d.filter(~keep).drop(*helper_cols)
-    kept.write.mode("overwrite").parquet(f"{args.output}/kept")
-    dropped.write.mode("overwrite").parquet(f"{args.output}/dropped")
-    n_in = df.count()
-    n_kept = spark.read.parquet(f"{args.output}/kept").count()
+    dropped = d.filter(~keep).drop("text_redacted")
+    n = F.count(F.lit(1))
+    n_kept = _write_observed(kept, f"{args.output}/kept", n=n)["n"]
+    n_dropped = _write_observed(dropped, f"{args.output}/dropped", n=n)["n"]
     print(
         json.dumps(
             {
-                "rows_in": n_in,
+                "rows_in": n_kept + n_dropped,
                 "rows_kept": n_kept,
-                "rows_dropped": n_in - n_kept,
+                "rows_dropped": n_dropped,
                 "kept_path": f"{args.output}/kept",
                 "dropped_path": f"{args.output}/dropped",
             }

@@ -9,8 +9,8 @@ table scope (SURVEY.md §2.9):
   (``src/lib.rs:919-935``) lifted to row↔row referential integrity.
 * :func:`column_stats` — per-field error counters
   (``src/satya/profiling.py:15-40``) lifted to column profiles.
-* :func:`conv_stats` / :func:`salted_agg` — per-conversation stats
-  with explicit salt against hot-key skew.
+* :func:`conv_stats` — per-conversation stats (n_turns, max turn,
+  text length).
 
 Scale notes (100 TB design point):
 
@@ -18,13 +18,11 @@ Scale notes (100 TB design point):
   high cardinality, so hash aggregation with map-side partial
   aggregation spreads evenly even when one conv_id is hot; no salt
   needed (the skew unit is conv_id, and turn_idx fans it out).
-* per-conversation aggregations group on ``conv_id`` alone — a
-  10^9-turn hot conversation would funnel into one reduce task, so
-  :func:`salted_agg` does an explicit two-phase (conv_id, salt) →
-  conv_id aggregation for the algebraic aggregates we need. For
-  plain sum/count Spark's partial aggregation already defuses the
-  skew; the salt additionally protects non-partial-friendly aggs and
-  keeps reduce-side groups bounded.
+* per-conversation aggregations group on ``conv_id`` alone, but
+  their aggregates are algebraic (count/max/sum): map-side partial
+  aggregation bounds a hot conversation's reduce load to one partial
+  row per map task, so no salt is needed. Window-shaped per-group
+  work has no partial form and uses :func:`salted_topn`.
 * ``referential_violations`` broadcasts the catalog (tool catalogs
   are small by construction) — a shuffle-free map-side anti join.
 """
@@ -123,68 +121,15 @@ def null_rate_violations(
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    group_col: str,
-    partials: dict[str, Column],
-    finals: dict[str, Column],
-    salt_buckets: int = 32,
-    salt_source: str = "turn_idx",
-) -> DataFrame:
-    """Two-phase skew-safe aggregation (north rule: 'salted
-    repartitioning on conv_id to defuse hot-conversation skew').
-
-    Phase 1 groups by (group_col, salt) where salt = pmod(hash of a
-    fine-grained column, salt_buckets) — a hot group fans out over
-    ``salt_buckets`` reduce tasks. Phase 2 combines the per-salt
-    partials per group (each group now contributes ≤ salt_buckets
-    rows, trivially cheap).
-
-    ``partials``: name -> aggregate over raw rows (phase 1).
-    ``finals``:  name -> aggregate over phase-1 partial columns.
-    """
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_buckets))
-    p1 = (
-        df.withColumn("__salt", salt)
-        .groupBy(group_col, "__salt")
-        .agg(*[c.alias(n) for n, c in partials.items()])
-    )
-    return p1.groupBy(group_col).agg(*[c.alias(n) for n, c in finals.items()])
-
-
-def auto_salt_buckets(
-    df: DataFrame, group_col: str = "conv_id", target_group_rows: int = 1_000_000
-) -> int:
-    """Salt-factor heuristic (SURVEY.md §7.6): one cheap sketch pass
-    — rows / approx distinct groups estimates the MEAN group size;
-    the salt is sized so even a group 100× the mean stays under
-    ``target_group_rows`` per (group, salt) reduce task. Clamped to
-    [1, 256]; 1 means salting is skipped entirely."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(group_col).alias("d"),
-    ).collect()[0]
-    n, d = row["n"], max(row["d"], 1)
-    mean = n / d
-    hot_estimate = mean * 100
-    buckets = int(hot_estimate // target_group_rows) + 1
-    return max(1, min(256, buckets))
-
-
-def conv_stats(df: DataFrame, salt_buckets: int = 32) -> DataFrame:
+def conv_stats(df: DataFrame) -> DataFrame:
     """Per-conversation stats for drift checks: n_turns, max_turn_idx,
     sum/avg text length. avg is computed as exact-integer sum / count
     (deterministic across partition orders — no float summation).
 
-    ONE exchange (r6): count/max/sum are algebraic, so Spark's
-    map-side partial aggregation already bounds a hot conversation's
-    reduce-side load to ≤ one partial row per map task — the salted
-    two-phase (:func:`salted_agg`) added a second full exchange for
-    skew that partial aggregation defuses by itself. Salting remains
-    necessary for WINDOW-shaped per-group work (:func:`salted_topn`),
-    where no partial aggregation exists. ``salt_buckets`` is retained
-    for API stability and unused."""
-    del salt_buckets  # algebraic aggs need no salt; see docstring
+    ONE exchange: count/max/sum are algebraic, so Spark's map-side
+    partial aggregation already bounds a hot conversation's
+    reduce-side load to ≤ one partial row per map task (see the
+    module notes)."""
     out = df.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.max("turn_idx").alias("max_turn_idx"),
@@ -206,8 +151,9 @@ def salted_topn(
     rank_name: str = "rk",
 ) -> DataFrame:
     """Two-phase salted per-group top-n — the shared skew-defusing
-    shape behind :func:`violations_sample` and
-    :func:`satya_spark.functions.mix.cap_per_group`:
+    shape behind :func:`violations_sample`,
+    :func:`satya_spark.functions.mix.cap_per_group` and the ANN
+    top-k ranks in :mod:`satya_spark.functions.similarity`:
 
     * phase 1 ranks within (partition, salt): a hot group fans out
       over ``salt_buckets`` tasks, each emitting at most ``n``
@@ -254,8 +200,7 @@ def violations_sample(
     Scale shape (100 TB design point): a single window over
     (field, constraint_name) funnels every violation of a hot
     constraint through ONE reduce task — exactly the skew the north
-    rule calls out. So: two-phase top-n, same trick as
-    :func:`salted_agg`:
+    rule calls out. So: two-phase top-n via :func:`salted_topn`:
 
     * phase 1 ranks within (field, constraint_name, salt) — a hot
       constraint fans out over ``salt_buckets`` tasks; each emits at
@@ -327,19 +272,14 @@ def column_quantiles(
     )
 
 
-def top_violating_groups(
-    viol: DataFrame,
-    group_col: str,
-    n: int = 10,
-    salt_buckets: int = 32,
-    salt_source: str = "turn_idx",
-) -> DataFrame:
+def top_violating_groups(viol: DataFrame, group_col: str, n: int = 10) -> DataFrame:
     """The ``n`` groups (conversations) with the most violation rows:
     (group, n_violations), ordered worst-first — the "which
     conversations are broken" triage view.
 
-    Scale shape: count per group via :func:`salted_agg` (hot
-    conversations fan out over the salt), then a global top-n over
+    Scale shape: count per group in ONE exchange (a pure count is
+    algebraic, so map-side partial aggregation bounds any hot group's
+    reduce load by the map-task count), then a global top-n over
     the per-group counts. The final ordering window is over one row
     per group; for 10^9 groups the rank-by-count would itself need a
     two-phase top-n, so we take ``orderBy(...).limit(n)`` — Spark
@@ -347,12 +287,6 @@ def top_violating_groups(
     driver merge of ≤ partitions × n rows. No full sort, no single
     hot reduce task.
     """
-    # ONE exchange (r6): a pure count is algebraic — map-side partial
-    # aggregation bounds any hot group's reduce load by the map-task
-    # count, so the salted two-phase's second exchange bought nothing
-    # (same reasoning as conv_stats; salting stays for window-shaped
-    # top-n work only). salt args retained for API stability, unused.
-    del salt_buckets, salt_source
     counts = viol.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_violations")
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..crossrow import salted_topn
 from .dedup import portable_hash64
 
 
@@ -58,29 +59,22 @@ def _rank_topk(
     salt_buckets: int = 32,
 ) -> DataFrame:
     """Exact, deterministic per-query top-k over (query_id, id,
-    cos_sim) candidate rows — with a BOUNDED reduce task: phase 1
-    ranks within (query, salt-of-candidate-id), so a query whose
-    probe set is 10^10 candidates fans out over ``salt_buckets``
-    tasks each emitting ≤ k survivors; phase 2 re-ranks the
-    ≤ k × salt_buckets rows per query. Lossless (any global top-k row
-    is a per-salt top-k row) — identical output to the single-window
-    rank, same two-phase trick as crossrow.violations_sample. Ties
+    cos_sim) candidate rows — with a BOUNDED reduce task: the
+    two-phase :func:`~satya_spark.crossrow.salted_topn` salted on the
+    candidate id, so a query whose probe set is 10^10 candidates fans
+    out over ``salt_buckets`` tasks each emitting ≤ k survivors.
+    Lossless — identical output to the single-window rank. Ties
     break on ascending id so the result is total-order deterministic
     (and matches the SQL oracles' ORDER BY)."""
-    order = [F.desc("cos_sim"), F.asc(id_col)]
-    w1 = Window.partitionBy(query_id_col, "__salt").orderBy(*order)
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-        )
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__salt", "__r1")
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cos_sim")
-    )
+    return salted_topn(
+        scored,
+        [query_id_col],
+        [F.desc("cos_sim"), F.asc(id_col)],
+        k,
+        F.xxhash64(F.col(id_col)),
+        salt_buckets,
+        rank_name="rank",
+    ).select(query_id_col, "rank", id_col, "cos_sim")
 
 
 def brute_force_topk(

@@ -3,6 +3,8 @@ end-to-end runs (parquet + ndjson + JSON-schema spec + resume)."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import subprocess
@@ -21,6 +23,18 @@ def _cli(*argv, timeout=600):
         env=env,
         timeout=timeout,
     )
+
+
+def _clean(src, out, *flags):
+    """Run ``clean`` in this process (on the test session); return its
+    JSON summary line."""
+    from satya_spark.__main__ import main
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(["clean", "--input", src, "--output", out, *flags])
+    assert rc == 0
+    return json.loads(buf.getvalue().strip().splitlines()[-1])
 
 
 def test_cli_validate_parquet(spark, tmp_path):
@@ -78,6 +92,7 @@ def test_cli_resume_via_manifest(spark, tmp_path):
               "--manifest", man, "--shards", "8")
     s2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert s2["rows"] == 0 and r2.returncode == 0
+    assert s2["shards"] == 0 and s2["invalid_rows"] == 0
 
 
 def test_input_fingerprint_distinguishes_remote_uris():
@@ -132,6 +147,8 @@ def test_cli_triage(spark, tmp_path):
 
 
 def test_cli_validate_quarantine_split(spark, tmp_path):
+    from pyspark.sql import functions as F
+
     from satya_spark.io import read_split
     from satya_spark.transcripts import synthesize
 
@@ -149,15 +166,16 @@ def test_cli_validate_quarantine_split(spark, tmp_path):
     quar = read_split(spark, f"{out}/split", "quarantine")
     assert clean.count() + quar.count() == summary["rows"]
     assert quar.count() > 0
+    # summary counts are observed on the verdicts write itself
+    v = spark.read.parquet(f"{out}/verdicts").agg(
+        F.sum("n_rows"), F.sum("n_invalid_rows"), F.count(F.lit(1))
+    ).first()
+    assert (summary["rows"], summary["invalid_rows"], summary["shards"]) == tuple(v)
 
 
 def test_cli_clean_corpus(spark, tmp_path):
     """clean: PII redacted in kept rows, short/repetitive/duplicate
     rows dropped with per-rule reasons, one JSON summary line."""
-    import json as _json
-
-    from satya_spark.__main__ import main
-
     src = str(tmp_path / "docs")
     rows = [
         (1, "the quick brown fox jumps over the lazy dog tonight"),
@@ -168,19 +186,9 @@ def test_cli_clean_corpus(spark, tmp_path):
     ]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
     out = str(tmp_path / "out")
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = main(
-            [
-                "clean", "--input", src, "--output", out,
-                "--min-tokens", "5", "--max-top-bigram", "0.5", "--dedup",
-            ]
-        )
-    assert rc == 0
-    summary = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    summary = _clean(
+        src, out, "--min-tokens", "5", "--max-top-bigram", "0.5", "--dedup"
+    )
     assert summary["rows_in"] == 5
     kept = {r["doc_id"]: r["text"] for r in spark.read.parquet(f"{out}/kept").collect()}
     dropped = {
@@ -201,10 +209,6 @@ def test_cli_clean_decontam(spark, tmp_path):
     """clean --decontam-against: rows overlapping the eval suite by
     >= min-hits word n-grams are dropped with reason 'contaminated';
     non-overlapping rows survive."""
-    import json as _json
-
-    from satya_spark.__main__ import main
-
     src = str(tmp_path / "docs")
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -216,19 +220,9 @@ def test_cli_clean_decontam(spark, tmp_path):
         [("alpha beta gamma delta epsilon zeta eta theta",)], "text string"
     ).write.parquet(bench)
     out = str(tmp_path / "out")
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = main(
-            [
-                "clean", "--input", src, "--output", out,
-                "--min-tokens", "2", "--decontam-against", bench,
-            ]
-        )
-    assert rc == 0
-    summary = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    summary = _clean(
+        src, out, "--min-tokens", "2", "--decontam-against", bench
+    )
     assert summary["rows_kept"] == 1
     dropped = {
         r["doc_id"]: list(r["drop_reasons"])
@@ -243,10 +237,6 @@ def test_cli_clean_c4_and_gopher(spark, tmp_path):
     get the line-filtered text, and the Gopher composites add
     'gopher_quality' / 'gopher_repetition' reasons computed on the
     CLEANED text."""
-    import json as _json
-
-    from satya_spark.__main__ import main
-
     body = "\n".join([
         "the quick brown fox jumps over the lazy dog near the barn.",
         "a farmer went out early to check on those wide green fields.",
@@ -266,20 +256,10 @@ def test_cli_clean_c4_and_gopher(spark, tmp_path):
     ]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
     out = str(tmp_path / "out")
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = main(
-            [
-                "clean", "--input", src, "--output", out,
-                "--min-tokens", "2", "--min-ttr", "0.0",
-                "--max-top-bigram", "1.0", "--c4-lines", "--gopher",
-            ]
-        )
-    assert rc == 0
-    summary = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    summary = _clean(
+        src, out, "--min-tokens", "2", "--min-ttr", "0.0",
+        "--max-top-bigram", "1.0", "--c4-lines", "--gopher",
+    )
     assert summary["rows_kept"] == 1
     kept = {r["doc_id"]: r["text"] for r in
             spark.read.parquet(f"{out}/kept").collect()}
@@ -321,10 +301,6 @@ def test_cli_clean_near_dedup(spark, tmp_path):
     passes the OTHER rules: doc 1 is the min id of the cluster but
     fails --max-tokens, so doc 2 survives (a blind min-id canonical
     would delete every copy of the content)."""
-    import json as _json
-
-    from satya_spark.__main__ import main
-
     base = " ".join(f"tok{i}" for i in range(30))
     rows = [
         (1, base + " alpha beta gamma delta"),  # 34 tokens: too_long
@@ -335,19 +311,9 @@ def test_cli_clean_near_dedup(spark, tmp_path):
     src = str(tmp_path / "docs")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
     out = str(tmp_path / "out")
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = main(
-            [
-                "clean", "--input", src, "--output", out,
-                "--min-tokens", "2", "--max-tokens", "33", "--near-dedup",
-            ]
-        )
-    assert rc == 0
-    summary = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    summary = _clean(
+        src, out, "--min-tokens", "2", "--max-tokens", "33", "--near-dedup"
+    )
     kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/kept").collect()}
     dropped = {
         r["doc_id"]: sorted(r["drop_reasons"])
@@ -357,3 +323,6 @@ def test_cli_clean_near_dedup(spark, tmp_path):
     assert dropped[1] == ["too_long"]       # NOT also near_duplicate
     assert dropped[3] == ["near_duplicate"]
     assert summary["rows_kept"] == 2 and summary["rows_dropped"] == 2
+    assert summary["rows_in"] == 4
+    assert summary["rows_kept"] == spark.read.parquet(f"{out}/kept").count()
+    assert summary["rows_dropped"] == spark.read.parquet(f"{out}/dropped").count()

@@ -1,5 +1,5 @@
 """Cross-row operators: distributed uniqueness, referential
-integrity, column stats, salted per-conversation aggregation
+integrity, column stats, per-conversation aggregation
 (SURVEY.md §2.9, FIXTURES.md F2 v_unique / v_ref).
 """
 
@@ -63,12 +63,11 @@ def test_null_rate_violation_fires(spark):
 
 
 def test_salted_conv_stats_matches_plain(spark):
-    """Two-phase salted aggregation must be result-identical to the
-    direct groupBy — including on the synthesized hot conversation."""
+    """conv_stats must be result-identical to the direct groupBy — including on the synthesized hot conversation."""
     df = synthesize(spark, n_conv=200, hot_factor=500)
     salted = {
         r["conv_id"]: (r["n_turns"], r["max_turn_idx"], r["sum_text_len"])
-        for r in crossrow.conv_stats(df, salt_buckets=8).collect()
+        for r in crossrow.conv_stats(df).collect()
     }
     plain = {
         r["conv_id"]: (r["n_turns"], r["max_turn_idx"], r["sum_text_len"])

@@ -1,15 +1,12 @@
 """Serialization (model_dump analog), alias handling, decimal
-enforcement, auto-salt heuristic."""
+enforcement."""
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
-
 from satya_spark.coerce import coerce
 from satya_spark.compiler import compile_spec
-from satya_spark.crossrow import auto_salt_buckets
 from satya_spark.serialize import dump, dump_json
 from satya_spark.spec import FieldSpec, TableSpec
 
@@ -56,11 +53,3 @@ def test_decimal_enforcement(spark):
     assert rows[1]["amt"] is None and not rows[1]["valid"]  # 5 digits > p=4
     assert rows[2]["amt"] is None and not rows[2]["valid"]
 
-
-def test_auto_salt_buckets(spark):
-    uniform = spark.range(10000).select(
-        (F.col("id") % 1000).cast("string").alias("conv_id")
-    )
-    assert auto_salt_buckets(uniform, target_group_rows=100) >= 10
-    tiny = spark.range(100).select(F.col("id").cast("string").alias("conv_id"))
-    assert auto_salt_buckets(tiny, target_group_rows=1000) == 1
