@@ -136,11 +136,11 @@ def q_row_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total/valid/invalid row counts — the batch-validate Vec<bool>
     analog (src/lib.rs:359-392) reduced to counts."""
     df = from_tpch(spark, sf_dir)
-    valid = _COMPILED.valid_col()
-    return df.agg(
+    valid = F.size(_COMPILED.violations_array_col()) == 0
+    return df.select(valid.alias("v")).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(valid.cast("long")).alias("n_valid"),
-        F.sum((~valid).cast("long")).alias("n_invalid"),
+        F.sum(F.col("v").cast("long")).alias("n_valid"),
+        F.sum((~F.col("v")).cast("long")).alias("n_invalid"),
     )
 
 
@@ -149,7 +149,7 @@ def q_bucket_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts, on a deterministic conv bucket so the oracle agrees)."""
     df = from_tpch(spark, sf_dir)
     bucket = (F.expr("CAST(substring(conv_id, 2) AS BIGINT)") % 32).alias("bucket")
-    valid = _COMPILED.valid_col()
+    valid = F.size(_COMPILED.violations_array_col()) == 0
     return (
         df.select(bucket, valid.alias("v"))
         .groupBy("bucket")

@@ -124,7 +124,7 @@ def run_kernels(spark, df) -> int:
     from satya_spark.spec import transcript_spec
 
     eng = ValidationEngine(transcript_spec(), n_shards=256)
-    verd = eng.shard_verdicts(df).collect()
+    verd = eng.shard_verdicts(eng.annotate(df)).collect()
     return sum(r["n_rows"] for r in verd)
 
 

@@ -138,12 +138,23 @@ def cmd_validate(args) -> int:
 
         df = coerce(df, spec)
 
+    if args.quarantine:
+        # the kernels run once, in the split write: verdicts read the
+        # split root, violation rows its valid=false side (an explicit
+        # schema, so a zero-row split with no partition directory
+        # reads as empty instead of failing schema inference)
+        split = eng.write_split(df, f"{args.output}/split")
+        schema = eng.annotate(df).drop("shard").schema
+        ann = spark.read.schema(schema).parquet(f"{args.output}/split")
+        bad = ann.filter(~F.col("valid"))
+    else:
+        ann = bad = eng.annotate(df)
     if args.manifest:
         verdicts = eng.run_resumable(
             df, args.manifest, fingerprint=_input_fingerprint(args.input)
         )
     else:
-        verdicts = eng.shard_verdicts(eng.annotate(df))
+        verdicts = eng.shard_verdicts(ann)
     counts = _write_observed(
         verdicts,
         f"{args.output}/verdicts",
@@ -153,9 +164,9 @@ def cmd_validate(args) -> int:
     )
 
     if args.sample_per_shard:
-        viol = eng.violations_sampled(df, per_shard_cap=args.sample_per_shard)
+        viol = eng.violations_sampled(bad, per_shard_cap=args.sample_per_shard)
     else:
-        viol = eng.violations(df)
+        viol = eng.violations(bad)
     viol.write.mode("overwrite").parquet(f"{args.output}/violations")
 
     n_invalid = int(counts["invalid"] or 0)
@@ -166,7 +177,7 @@ def cmd_validate(args) -> int:
         "output": args.output,
     }
     if args.quarantine:
-        summary["split"] = eng.write_split(df, f"{args.output}/split")
+        summary["split"] = split
     print(json.dumps(summary))
     return 0 if n_invalid == 0 else 3
 
@@ -192,7 +203,7 @@ def cmd_triage(args) -> int:
     eng = ValidationEngine(spec)
     df = read_ref(spark, args.input)
     keys = list(spec.unique_key or (spec.fields[0].name,))
-    viol = eng.violations(df)
+    viol = eng.violations(eng.annotate(df))
 
     sample = violations_sample(viol, keys, n=args.sample_n).collect()
     worst = top_violating_groups(viol, keys[0], n=args.top_n).collect()

@@ -756,6 +756,46 @@ def _struct_item_rules(f: FieldSpec) -> List[CompiledRule]:
     return out
 
 
+# cap on violations materialized per row: accumulate-not-fail-fast can
+# explode on pathological rows. The cap is recorded, never silent: the
+# shard verdicts' n_rule_violations counts the capped array (SURVEY.md
+# §7 'What's hard').
+MAX_VIOLATIONS_PER_ROW = 64
+
+
+def explode_violations(ann, key_cols: List[str]):
+    """Violation rows (key..., field, constraint_name, offending_value)
+    of a frame carrying a ``violations`` array (``annotate`` output, a
+    written quarantine split, or :meth:`CompiledSpec.violations_df`'s
+    projection). The array is filtered to non-empty BEFORE the
+    Generate so the (rare) violating rows are the only ones reaching
+    explode.
+
+    Plan-shape note (measured, sf0.1, 25 kernels): when the array is
+    computed in the same plan (not read back from a split), Catalyst
+    collapses this project+filter into a plan holding TWO copies of
+    the array expression, which blows the fused ``processNext()`` past
+    Janino's 64 KB method limit — Spark logs ``ERROR CodeGenerator``
+    and abandons WHOLE-STAGE FUSION for that stage. That is NOT
+    interpreted eval: each operator (Filter predicate, Project) still
+    compiles its own split-method codegen, and this shape measured
+    FASTER than both 64 KB-safe rewrites — filtering first on a scalar
+    validity conjunction (1.5× slower on expression-defined inputs:
+    predicate pushdown substitutes the input-defining expressions into
+    all 25 predicates where cross-predicate CSE fails) and dropping
+    the filter entirely to let ``explode`` discard empty arrays (1.35×
+    slower there; the early filter lets the scan stage drop ~99.7% of
+    rows before the Generate). The genuinely hot full-scan paths
+    (annotate / verdict counts) stay fully fused — pinned under
+    ``spark.sql.codegen.fallback=false`` in tests/test_plans.py."""
+    from pyspark.sql import functions as F
+
+    tmp = ann.select(*key_cols, "violations").filter(F.size("violations") > 0)
+    return tmp.select(*key_cols, F.explode("violations").alias("v")).select(
+        *key_cols, "v.field", "v.constraint_name", "v.offending_value"
+    )
+
+
 @dataclass
 class CompiledSpec:
     """All kernels of a TableSpec, with single-scan Spark evaluators
@@ -763,17 +803,9 @@ class CompiledSpec:
 
     spec: TableSpec
     rules: List[CompiledRule]
+    _violations: object = dc_field(default=None, init=False, repr=False, compare=False)
 
     # ---- Spark side ---------------------------------------------------
-    def valid_col(self):
-        """Row validity: conjunction of all kernels (NULL-safe)."""
-        from pyspark.sql import functions as F
-
-        out = F.lit(True)
-        for r in self.rules:
-            out = out & ~F.coalesce(r.fail, F.lit(False))
-        return out
-
     VIOLATION_TYPE = (
         "array<struct<field:string,constraint_name:string,offending_value:string>>"
     )
@@ -781,7 +813,12 @@ class CompiledSpec:
     def violations_array_col(self):
         """array<struct<field,constraint_name,offending_value>> per
         row — the accumulate-all-errors shape
-        (``src/satya/validator.py:219-275``).
+        (``src/satya/validator.py:219-275``), capped at
+        :data:`MAX_VIOLATIONS_PER_ROW`. The one kernel expression:
+        validity, verdict counts and violation rows all derive from
+        it. Built on first call and reused (building it costs thousands
+        of py4j calls); never built by the SQL side, which needs no
+        session.
 
         Perf note: a higher-order ``filter`` over a rule array is NOT
         whole-stage-codegen'd (array lambdas are CodegenFallback and
@@ -792,13 +829,11 @@ class CompiledSpec:
         a struct — the columnar analog of satya's is-simple fast path
         (``src/lib.rs:229-237``).
         """
+        if self._violations is not None:
+            return self._violations
         from pyspark.sql import functions as F
 
         empty = F.array().cast(self.VIOLATION_TYPE)
-        if not self.rules:
-            # constraint-free spec: concat() of zero arrays would type
-            # as STRING — return the typed empty array directly
-            return empty
         parts = [
             F.when(
                 F.coalesce(r.fail, F.lit(False)),
@@ -812,23 +847,13 @@ class CompiledSpec:
             ).otherwise(empty)
             for r in self.rules
         ]
-        return F.concat(*parts)
-
-    def violation_count_col(self):
-        """Per-row violation COUNT as a pure integer sum of the fail
-        predicates — no struct/array allocation, no offending-value
-        rendering. For verdict/count-only consumers this is ~11%
-        faster than ``size(violations_array_col())`` (measured, 3.4 M
-        rows, 25 kernels); the array form exists for violation-ROW
-        consumers that need (field, constraint, value)."""
-        from pyspark.sql import functions as F
-
-        out = F.lit(0)
-        for r in self.rules:
-            out = out + F.when(
-                F.coalesce(r.fail, F.lit(False)), F.lit(1)
-            ).otherwise(F.lit(0))
-        return out
+        # constraint-free spec: concat() of zero arrays would type as
+        # STRING, so the typed empty array stands in directly
+        arr = F.concat(*parts) if parts else empty
+        if len(parts) > MAX_VIOLATIONS_PER_ROW:
+            arr = F.slice(arr, 1, MAX_VIOLATIONS_PER_ROW)
+        self._violations = arr
+        return arr
 
     def with_validation(self, df):
         """One-scan: input columns + ``valid`` + ``violations``.
@@ -844,36 +869,10 @@ class CompiledSpec:
 
     def violations_df(self, df, key_cols: List[str]):
         """Exploded violation rows (key..., field, constraint_name,
-        offending_value). The array is projected and filtered to
-        non-empty BEFORE the Generate so the (rare) violating rows are
-        the only ones reaching explode.
-
-        Plan-shape note (measured, sf0.1, 25 kernels): Catalyst
-        collapses this project+filter into a plan holding TWO copies
-        of the array expression, which blows the fused
-        ``processNext()`` past Janino's 64 KB method limit — Spark
-        logs ``ERROR CodeGenerator`` and abandons WHOLE-STAGE FUSION
-        for that stage. That is NOT interpreted eval: each operator
-        (Filter predicate, Project) still compiles its own split-
-        method codegen, and this shape measured FASTER than both
-        64 KB-safe rewrites — filtering first on the scalar
-        ``~valid_col()`` (1.5× slower on expression-defined inputs:
-        predicate pushdown substitutes the input-defining expressions
-        into all 25 predicates where cross-predicate CSE fails) and
-        dropping the filter entirely to let ``explode`` discard empty
-        arrays (1.35× slower there; the early filter lets the scan
-        stage drop ~99.7% of rows before the Generate). The genuinely
-        hot full-scan paths (annotate / verdict counts) stay fully
-        fused — pinned under ``spark.sql.codegen.fallback=false`` in
-        tests/test_plans.py."""
-        from pyspark.sql import functions as F
-
-        tmp = df.select(
-            *key_cols, self.violations_array_col().alias("__viol")
-        ).filter(F.size("__viol") > 0)
-        return tmp.select(*key_cols, F.explode("__viol").alias("v")).select(
-            *key_cols, "v.field", "v.constraint_name", "v.offending_value"
-        )
+        offending_value): project the keys and the array, then
+        :func:`explode_violations`."""
+        arr = self.violations_array_col().alias("violations")
+        return explode_violations(df.select(*key_cols, arr), key_cols)
 
     def spec_hash(self) -> str:
         """Deterministic digest of the compiled constraint set (field,

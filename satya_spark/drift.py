@@ -143,48 +143,6 @@ def ks_binned(
 # --- grouped drift -------------------------------------------------------
 
 
-def grouped_pair(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    width: float,
-    n_buckets: int,
-) -> DataFrame:
-    """Grid-complete (group, bucket, n_ref, n_cur) where n_cur is the
-    GROUP's histogram and n_ref is the whole-population histogram —
-    the "which segment drifted away from the table" shape (per-role,
-    per-day, per-source drift in one pass).
-
-    Scale shape: ONE groupBy(group, bucket).count() over the data —
-    map-side partial aggregation reduces each task to ≤
-    |groups|×n_buckets rows before the shuffle. The reference
-    histogram is then derived from that tiny frame (a second
-    aggregation over |groups|×n_buckets rows, NOT a second scan), and
-    grid completion is a cross join of two tiny driver-size frames.
-    """
-    h = (
-        df.select(
-            F.col(group_col).alias("grp"),
-            bucketize(F.col(value_col), width, n_buckets).alias("bucket"),
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    h = h.persist()
-    glob = h.groupBy("bucket").agg(F.sum("n").alias("n_ref"))
-    grid = (
-        h.select("grp")
-        .distinct()
-        .crossJoin(_full_grid(df.sparkSession, n_buckets))
-    )
-    out = (
-        grid.join(h.withColumnRenamed("n", "n_cur"), ["grp", "bucket"], "left")
-        .join(glob, "bucket", "left")
-        .fillna(0, subset=["n_ref", "n_cur"])
-    )
-    return out
-
-
 def psi_by_group(
     df: DataFrame,
     value_col: str,
@@ -200,26 +158,33 @@ def psi_by_group(
     (day, turn_count) to localize drift that a whole-table PSI
     averages away.
 
-    The statistic is computed entirely on the grid-complete paired
-    frame (|groups| × n_buckets rows): window-free, one tiny
-    aggregation per group.
+    Scale shape: ONE ``groupBy(group)`` over the data with
+    ``n_buckets`` conditional bucket counts — map-side partial
+    aggregation reduces each task to ≤ |groups| rows before the
+    shuffle, and every group row is grid-complete by construction
+    (an empty bucket counts 0). The reference histogram is the
+    column sums over those ≤ |groups| rows (an unpartitioned window —
+    intentionally tiny), and PSI is a fixed-order sum of the
+    ``n_buckets`` ε-smoothed terms.
     """
-    pair = grouped_pair(df, value_col, group_col, width, n_buckets)
-    tot = pair.groupBy("grp").agg(
-        F.sum("n_cur").alias("t_cur"),
-    )
-    t_ref = pair.select("bucket", "n_ref").distinct().agg(
-        F.sum("n_ref").alias("t_ref")
-    )
-    r = pair.join(tot, "grp").crossJoin(F.broadcast(t_ref))
-    p = F.col("n_ref").cast("double") / F.col("t_ref") + F.lit(eps)
-    q = F.col("n_cur").cast("double") / F.col("t_cur") + F.lit(eps)
-    contrib = (p - q) * F.log(p / q)
-    return (
-        r.groupBy("grp")
+    bucket = bucketize(F.col(value_col), width, n_buckets)
+    counts = [f"__n{i}" for i in range(n_buckets)]
+    h = (
+        df.select(F.col(group_col).alias("grp"), bucket.alias("bucket"))
+        .groupBy("grp")
         .agg(
-            F.round(F.sum(contrib), 6).alias("psi"),
-            F.sum("n_cur").alias("n_rows"),
+            F.count(F.lit(1)).alias("n_rows"),
+            *[
+                F.count(F.when(F.col("bucket") == i, 1)).alias(c)
+                for i, c in enumerate(counts)
+            ],
         )
-        .orderBy("grp")
     )
+    everyone = Window.partitionBy()
+    t_ref = F.sum("n_rows").over(everyone)
+    psi = F.lit(0.0)
+    for c in counts:
+        p = F.sum(c).over(everyone).cast("double") / t_ref + F.lit(eps)
+        q = F.col(c).cast("double") / F.col("n_rows") + F.lit(eps)
+        psi = psi + (p - q) * F.log(p / q)
+    return h.select("grp", F.round(psi, 6).alias("psi"), "n_rows").orderBy("grp")

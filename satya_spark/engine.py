@@ -35,14 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import crossrow, drift
-from .compiler import CompiledSpec, compile_spec
+from .compiler import CompiledSpec, compile_spec, explode_violations
 from .manifest import Manifest, new_run_id, pending_shards, shard_col
 from .spec import TableSpec
-
-# cap violations materialized per row — accumulate-not-fail-fast can
-# explode on pathological rows; the cap is recorded, never silent
-# (SURVEY.md §7 'What's hard').
-MAX_VIOLATIONS_PER_ROW = 64
 
 
 class TableValidationError(Exception):
@@ -139,54 +134,46 @@ class ValidationEngine:
 
     # --- stage 1: row kernels -----------------------------------------
     def annotate(self, df: DataFrame) -> DataFrame:
-        """input + shard + valid + violations (single scan, codegen).
+        """input + shard + violations + valid (single scan, codegen).
+        Every engine output reads these columns.
 
         ``valid`` derives from the violations array (codegen CSE
-        computes the rule array once); the per-row violation cap is
-        applied here (never silent: n_rule_violations in the shard
+        computes the rule array once); the array carries the per-row
+        violation cap (never silent: n_rule_violations in the shard
         verdicts counts the capped array)."""
         out = df.withColumn("shard", shard_col(self.n_shards, self.shard_key))
-        out = out.withColumn(
-            "violations",
-            F.slice(
-                self.compiled.violations_array_col(), 1, MAX_VIOLATIONS_PER_ROW
-            ),
-        )
+        out = out.withColumn("violations", self.compiled.violations_array_col())
         return out.withColumn("valid", F.size("violations") == 0)
 
-    def violations(self, df: DataFrame, keys: Optional[Sequence[str]] = None) -> DataFrame:
-        if keys is None:
-            keys = self.spec.unique_key or (self.spec.fields[0].name,)
-        return self.compiled.violations_df(df, list(keys))
+    def _keys(self) -> list:
+        return list(self.spec.unique_key or (self.spec.fields[0].name,))
+
+    def violations(
+        self, ann: DataFrame, keys: Optional[Sequence[str]] = None
+    ) -> DataFrame:
+        """Violation rows of :meth:`annotate` output (or of a written
+        split, which carries the same ``violations`` column)."""
+        return explode_violations(ann, list(self._keys() if keys is None else keys))
 
     # --- stage 2: per-shard verdicts ------------------------------------
-    def shard_verdicts(self, df: DataFrame) -> DataFrame:
-        """Per-shard pass/fail + counts. Verdict = no invalid rows in
-        the shard. Counts-only aggregation → fully map-side
-        combinable, one tiny shuffle.
+    def shard_verdicts(self, ann: DataFrame) -> DataFrame:
+        """Per-shard pass/fail + counts of :meth:`annotate` output or
+        of a written split (the shard is recomputed from
+        ``shard_key``, so a split's missing ``shard`` column is no
+        obstacle). Verdict = no invalid rows in the shard. Counts-only
+        aggregation → fully map-side combinable, one tiny shuffle.
 
-        Plan-shape note: the violation-count expression is evaluated
-        in its OWN projection and the aggregate consumes only
-        attribute references. Inlining the (large) rule expression
-        into aggregate update expressions knocks the stage out of
-        whole-stage codegen (~40× slower, measured at 3.4M rows);
-        this structure keeps the scan→project→partial-agg pipeline
-        fused. Accepts either a raw or an annotate()d frame.
+        Plan-shape note: the violation count is evaluated in its OWN
+        projection and the aggregate consumes only attribute
+        references. Inlining the (large) rule expression into
+        aggregate update expressions knocks the stage out of
+        whole-stage codegen (~40× slower, measured at 3.4M rows); this
+        structure keeps the scan→project→partial-agg pipeline fused.
         """
-        if "violations" in df.columns:
-            pre = df.select("shard", F.size("violations").alias("nv"))
-        else:
-            # count-only consumers skip the violations ARRAY entirely:
-            # a pure integer sum of the fail predicates avoids the
-            # per-row struct/array allocation (~11% on the kernel
-            # stage, measured); least() mirrors the slice() cap
-            pre = df.select(
-                shard_col(self.n_shards, self.shard_key).alias("shard"),
-                F.least(
-                    self.compiled.violation_count_col(),
-                    F.lit(MAX_VIOLATIONS_PER_ROW),
-                ).alias("nv"),
-            )
+        pre = ann.select(
+            shard_col(self.n_shards, self.shard_key).alias("shard"),
+            F.size("violations").alias("nv"),
+        )
         return (
             pre.groupBy("shard")
             .agg(
@@ -203,21 +190,18 @@ class ValidationEngine:
         passes the compiled kernels, else raise
         :class:`TableValidationError`.
 
-        The pass/fail decision is ONE counts-only aggregate over the
-        integer violation-count projection — the same fused
+        The pass/fail decision is ONE counts-only aggregate over
+        :meth:`annotate`'s ``valid`` column — the same fused
         scan→project→partial-agg shape as :meth:`shard_verdicts`, no
-        per-row array materialization, no shuffle beyond the 1-row
-        final agg. Only on failure does a second bounded job collect
-        ``sample_n`` violation rows (deterministic key order) for the
-        exception. Valid tables pay exactly one count pass, so
-        ``enforce`` composes as a cheap pipeline guard between stages.
+        shuffle beyond the 1-row final agg. Only on failure does a
+        second bounded job collect ``sample_n`` violation rows
+        (deterministic key order) for the exception. Valid tables pay
+        exactly one count pass, so ``enforce`` composes as a cheap
+        pipeline guard between stages.
         """
+        ann = self.annotate(df)
         totals = (
-            df.select(
-                (self.compiled.violation_count_col() > 0)
-                .cast("long")
-                .alias("bad")
-            )
+            ann.select((~F.col("valid")).cast("long").alias("bad"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum("bad").alias("n_invalid"),
@@ -226,11 +210,10 @@ class ValidationEngine:
         )
         if not totals["n_invalid"]:
             return df
-        keys = list(self.spec.unique_key or (self.spec.fields[0].name,))
         sample = [
             r.asDict()
-            for r in self.violations(df)
-            .orderBy(*keys, "field", "constraint_name")
+            for r in self.violations(ann)
+            .orderBy(*self._keys(), "field", "constraint_name")
             .limit(sample_n)
             .collect()
         ]
@@ -278,7 +261,7 @@ class ValidationEngine:
             if self.spec.unique_key
             else None
         )
-        key_cols = list(self.spec.unique_key or (self.spec.fields[0].name,))
+        key_cols = self._keys()
         refs: Dict[str, DataFrame] = {}
         for col, cat_name in self.spec.references:
             if catalogs and cat_name in catalogs:
@@ -293,7 +276,7 @@ class ValidationEngine:
                 )
         return ValidationRun(
             annotated=annotated,
-            violations=self.violations(df),
+            violations=self.violations(annotated),
             shard_verdicts=self.shard_verdicts(annotated),
             duplicates=dups,
             referential=refs,
@@ -476,13 +459,8 @@ class ValidationEngine:
         the logical shard lineage (north rule: 'per-partition
         lineage'); on Iceberg the _file metadata column plays this
         role. Same fused plan shape as shard_verdicts."""
-        pre = df.select(
-            F.input_file_name().alias("file"),
-            F.size(
-                F.slice(
-                    self.compiled.violations_array_col(), 1, MAX_VIOLATIONS_PER_ROW
-                )
-            ).alias("nv"),
+        pre = self.annotate(df).select(
+            F.input_file_name().alias("file"), F.size("violations").alias("nv")
         )
         return (
             pre.groupBy("file")
@@ -495,19 +473,20 @@ class ValidationEngine:
         )
 
     def violations_sampled(
-        self, df: DataFrame, per_shard_cap: int = 10_000
+        self, ann: DataFrame, per_shard_cap: int = 10_000
     ) -> DataFrame:
-        """Violation rows with a per-shard cap — bounds write
-        amplification when a data incident makes violations the
-        MAJORITY of a 10^12-row table (full violation output would be
-        a second copy of the input). Deterministic sample: first N
-        per shard by key order. The cap is visible, not silent: rows
-        carry shard_violation_count so consumers see how much was
+        """Violation rows of :meth:`annotate` output (or of a written
+        split) with a per-shard cap — bounds write amplification when
+        a data incident makes violations the MAJORITY of a 10^12-row
+        table (full violation output would be a second copy of the
+        input). Deterministic sample: first N per shard by key order.
+        The cap is visible, not silent: rows carry
+        shard_violation_count so consumers see how much was
         truncated."""
         from pyspark.sql import Window
 
-        keys = list(self.spec.unique_key or (self.spec.fields[0].name,))
-        v = self.violations(df).withColumn(
+        keys = self._keys()
+        v = self.violations(ann).withColumn(
             "shard", shard_col(self.n_shards, keys[0])
         )
         w = Window.partitionBy("shard").orderBy(*keys, "field", "constraint_name")
@@ -566,7 +545,7 @@ class ValidationEngine:
         """(field, constraint_name, n) — the per-field error-counter
         profile, one scan."""
         return (
-            self.violations(df)
+            self.violations(self.annotate(df))
             .groupBy("field", "constraint_name")
             .agg(F.count(F.lit(1)).alias("n"))
         )

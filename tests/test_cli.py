@@ -147,30 +147,52 @@ def test_cli_triage(spark, tmp_path):
 
 
 def test_cli_validate_quarantine_split(spark, tmp_path):
+    """--quarantine on planted, all-valid and zero-row input: the split
+    holds every row, summary counts equal the sums over verdicts/, and
+    only invalid input yields violation rows. A zero-row split has no
+    data files, so it is read, as validate reads it, with an explicit
+    schema."""
     from pyspark.sql import functions as F
 
-    from satya_spark.io import read_split
+    from satya_spark.engine import ValidationEngine
+    from satya_spark.spec import transcript_spec
     from satya_spark.transcripts import synthesize
 
-    inp = str(tmp_path / "in.parquet")
-    synthesize(spark, 200).write.parquet(inp)
-    out = str(tmp_path / "out")
-    r = _cli(
-        "validate", "--input", inp, "--output", out,
-        "--shards", "8", "--quarantine",
-    )
-    assert r.returncode == 3, r.stderr[-1500:]
-    summary = json.loads(r.stdout.strip().splitlines()[-1])
-    assert summary["split"]["clean"].endswith("valid=true")
-    clean = read_split(spark, f"{out}/split", "clean")
-    quar = read_split(spark, f"{out}/split", "quarantine")
-    assert clean.count() + quar.count() == summary["rows"]
-    assert quar.count() > 0
-    # summary counts are observed on the verdicts write itself
-    v = spark.read.parquet(f"{out}/verdicts").agg(
-        F.sum("n_rows"), F.sum("n_invalid_rows"), F.count(F.lit(1))
-    ).first()
-    assert (summary["rows"], summary["invalid_rows"], summary["shards"]) == tuple(v)
+    planted = synthesize(spark, 200)
+    ann = ValidationEngine(transcript_spec()).annotate(planted)
+    schema = ann.drop("shard").schema
+    inputs = {
+        "planted": planted,
+        "all_valid": ann.filter("valid").drop("shard", "valid", "violations"),
+        "zero_rows": planted.limit(0),
+    }
+    for case, frame in inputs.items():
+        inp = str(tmp_path / f"{case}.parquet")
+        frame.write.parquet(inp)
+        n_in = spark.read.parquet(inp).count()
+        out = str(tmp_path / f"{case}_out")
+        r = _cli(
+            "validate", "--input", inp, "--output", out,
+            "--shards", "8", "--quarantine",
+        )
+        assert r.returncode == (3 if case == "planted" else 0), r.stderr[-1500:]
+        summary = json.loads(r.stdout.strip().splitlines()[-1])
+        assert summary["split"]["clean"].endswith("valid=true")
+        split = spark.read.schema(schema).parquet(f"{out}/split")
+        clean, quar = split.filter("valid"), split.filter("NOT valid")
+        assert clean.count() + quar.count() == summary["rows"] == n_in
+        # summary counts are observed on the verdicts write itself
+        v = spark.read.parquet(f"{out}/verdicts").agg(
+            F.sum("n_rows"), F.sum("n_invalid_rows"), F.count(F.lit(1))
+        ).first()
+        assert (summary["rows"], summary["invalid_rows"], summary["shards"]) == (
+            tuple(x or 0 for x in v)
+        )
+        n_viol = spark.read.parquet(f"{out}/violations").count()
+        if case == "planted":
+            assert quar.count() > 0 and n_viol > 0
+        else:
+            assert summary["invalid_rows"] == quar.count() == n_viol == 0
 
 
 def test_cli_clean_corpus(spark, tmp_path):

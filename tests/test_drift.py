@@ -84,17 +84,3 @@ def test_psi_by_group_flags_shifted_group(spark):
     # (base groups also pay a little: the population reference itself
     # contains the drifted mass they lack — inherent to one-vs-all)
     assert all(out["drifted"][0] > v[0] for g, v in out.items() if g != "drifted")
-
-
-def test_grouped_pair_grid_complete(spark):
-    from satya_spark.drift import grouped_pair
-
-    df = spark.createDataFrame(
-        [("a", 5.0), ("a", 15.0), ("b", 5.0)], ["grp", "x"]
-    )
-    pair = grouped_pair(df, "x", "grp", 10.0, 4).collect()
-    assert len(pair) == 8  # 2 groups × 4 buckets
-    by = {(r["grp"], r["bucket"]): (r["n_ref"], r["n_cur"]) for r in pair}
-    assert by[("a", 0)] == (2, 1)  # population has 2 in bucket 0
-    assert by[("b", 1)] == (1, 0)
-    assert by[("b", 3)] == (0, 0)

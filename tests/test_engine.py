@@ -71,24 +71,50 @@ def test_drift_check_shapes(spark):
     assert out["ks"].collect()[0]["ks_stat"] < 1e-9
 
 
-def test_shard_verdicts_count_path_equals_array_path(spark):
-    """The count-only fast path (pure integer sum of fail predicates,
-    round 3) must agree exactly with the violations-array path used
-    for annotate()d frames — including the per-row cap semantics."""
-    from pyspark.sql import functions as F
-
-    from satya_spark.spec import transcript_spec
-    from satya_spark.transcripts import synthesize
+def test_shard_verdicts_split_equals_annotated(spark, tmp_path):
+    """Verdicts of a written quarantine split (no ``shard`` column;
+    the shard is recomputed from the shard key) agree exactly with
+    verdicts of the annotate()d input, and the split's valid=false
+    side yields the same violation rows."""
+    from satya_spark.io import read_split
 
     df = synthesize(spark, n_conv=400)
     eng = ValidationEngine(transcript_spec(), n_shards=16)
-    fast = sorted(
-        tuple(r) for r in eng.shard_verdicts(df).collect()
-    )  # raw frame → count path
-    slow = sorted(
-        tuple(r) for r in eng.shard_verdicts(eng.annotate(df)).collect()
-    )  # annotated frame → array path
-    assert fast == slow
+    ann = eng.annotate(df)
+    path = str(tmp_path / "split")
+    eng.write_split(df, path)
+    split = spark.read.schema(ann.drop("shard").schema).parquet(path)
+    assert sorted(map(tuple, eng.shard_verdicts(split).collect())) == sorted(
+        map(tuple, eng.shard_verdicts(ann).collect())
+    )
+    quar = read_split(spark, path, "quarantine")
+    assert sorted(map(tuple, eng.violations(quar).collect())) == sorted(
+        map(tuple, eng.violations(ann).collect())
+    )
+
+
+def test_violations_capped_per_row(spark):
+    """A row failing more rules than MAX_VIOLATIONS_PER_ROW yields
+    exactly the cap everywhere: violations_df, the engine's violation
+    rows, and the shard verdicts' n_rule_violations."""
+    from satya_spark.compiler import MAX_VIOLATIONS_PER_ROW, compile_spec
+    from satya_spark.spec import FieldSpec, RowRule, TableSpec
+
+    spec = TableSpec(
+        name="many_rules",
+        fields=(FieldSpec("id", "long"),),
+        row_rules=tuple(
+            RowRule(f"r{i}", lambda: F.col("id") > 0, "id > 0")
+            for i in range(MAX_VIOLATIONS_PER_ROW + 6)
+        ),
+    )
+    df = spark.createDataFrame([(0,), (7,)], "id long")
+    assert compile_spec(spec).violations_df(df, ["id"]).count() == 64
+    eng = ValidationEngine(spec, n_shards=1)
+    ann = eng.annotate(df)
+    assert eng.violations(ann).count() == 64
+    (verdict,) = eng.shard_verdicts(ann).collect()
+    assert (verdict["n_rule_violations"], verdict["n_invalid_rows"]) == (64, 1)
 
 
 def test_enforce_raises_on_planted_violations(spark):
@@ -110,7 +136,10 @@ def test_enforce_raises_on_planted_violations(spark):
     # message stays bounded and informative
     assert f"{err.n_invalid}/{err.n_rows}" in str(err)
 
-    clean = df.filter(F.size(eng.compiled.violations_array_col()) == 0)
+    # the one kernel expression is built once per compiled spec
+    arr = eng.compiled.violations_array_col()
+    assert eng.compiled.violations_array_col() is arr
+    clean = df.filter(F.size(arr) == 0)
     out = eng.enforce(clean)
     assert out is clean  # valid input returned as-is (one count pass)
 

@@ -1044,20 +1044,25 @@ def test_dup_clusters_r6_knobs(spark):
         assert out == want, kw
 
 
-def test_dup_clusters_long_chain_pointer_jump(spark):
-    """A 33-node chain (diameter 32) must converge well inside
-    max_iter=25 — pointer jumping gives O(log diameter) rounds where
-    plain propagation would need 32."""
+@pytest.mark.parametrize("n", [33, 257])
+def test_dup_clusters_long_chain_pointer_jump(spark, n):
+    """An n-node chain (diameter n-1) must converge within
+    ceil(log2(n-1)) + 1 rounds — pointer jumping gives O(log diameter)
+    rounds where plain propagation would need n-1 (Kiveris et al.,
+    SoCC'14)."""
+    import math
+
     from satya_spark.functions.dedup import dup_clusters
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 132)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(100, 100 + n - 1)], "id_a long, id_b long"
     )
     # finish_collect_max=0: the rounds under test are the distributed
     # ones, not the driver-side union-find finish
-    out = dup_clusters(pairs, max_iter=10, finish_collect_max=0)
+    max_iter = math.ceil(math.log2(n - 1)) + 1
+    out = dup_clusters(pairs, max_iter=max_iter, finish_collect_max=0)
     assert {r["cluster_id"] for r in out.collect()} == {100}
-    assert out.count() == 33
+    assert out.count() == n
 
 
 def test_dup_clusters_string_ids_and_non_convergence(spark):

@@ -75,7 +75,8 @@ def test_file_verdicts_lineage(spark, tmp_path):
 
 def test_violations_sampled_cap_visible(spark):
     eng = ValidationEngine(transcript_spec(), n_shards=4)
-    out = eng.violations_sampled(synthesize(spark, 2000), per_shard_cap=3).collect()
+    ann = eng.annotate(synthesize(spark, 2000))
+    out = eng.violations_sampled(ann, per_shard_cap=3).collect()
     per_shard = {}
     for r in out:
         per_shard.setdefault(r["shard"], []).append(r)
