@@ -84,8 +84,7 @@ DEDUP_HEADLINE = [
     "dedup_simhash_pairs",
     "dedup_embedding",  # arrow sketch + numpy pair-verify (r4)
     "decontam",  # benchmark n-gram decontamination, broadcast bench side (r4)
-    "ann_lsh_topk",  # expr twin, kept for the r4 before/after
-    "ann_lsh_arrow",  # single-pass numpy scorer (7.6× the expr twin)
+    "ann_lsh_topk",  # single-pass numpy LSH scorer
     # line/page hygiene tier (r4): C4 cleaning (zero-shuffle narrow),
     # corpus-global line dedup (8-byte-key shuffle), Gopher quality
     # (zero-shuffle) + nine-size n-gram repetition (single explode)
@@ -93,7 +92,7 @@ DEDUP_HEADLINE = [
     "lines_dedup",
     "gopher_quality",
     "gopher_ngrams",
-    "dedup_semantic_arrow",  # SemDeDup, numpy assign+verify (r4)
+    "dedup_semantic",  # SemDeDup, numpy assign+verify (r4)
     "dup_spans",  # corpus-wide duplicated-span report (r4)
     "dup_span_removal",  # ExactSubstr cut + text rebuild (r4)
     "conv_dedup",  # transcript-payload exact conversation dedup (r4)
@@ -269,32 +268,28 @@ def phase1(cpus: int, sf_dir: str, fixture_path: str, staged: str) -> None:
         .parquet(raw)
     )
     emb = spark.read.parquet(raw)
-    cents = train_centroids(emb.sample(0.02, seed=7), k=16, iters=1, impl="arrow")
+    cents = train_centroids(emb.sample(0.02, seed=7), k=16, iters=1)
     idx = staged + "_ivf_index"
     t0 = time.monotonic()
-    build_ivf_index(emb, cents, idx, impl="arrow")
+    build_ivf_index(emb, cents, idx)
     times["ann_ivf_index_build"] = round(time.monotonic() - t0, 3)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ivf_topk_indexed(
-        spark, idx, queries, cents, k=5, nprobe=2, impl="arrow"
-    ).count()  # warm
+    ivf_topk_indexed(spark, idx, queries, cents, k=5, nprobe=2).count()  # warm
     times["ann_ivf_probe_indexed"] = round(
         _best(
             lambda: ivf_topk_indexed(
-                spark, idx, queries, cents, k=5, nprobe=2, impl="arrow"
+                spark, idx, queries, cents, k=5, nprobe=2
             ).count(),
             n=3,
         ),
         3,
     )
-    ivf_topk(emb, queries, cents, k=5, nprobe=2, impl="arrow").count()  # warm
+    ivf_topk(emb, queries, cents, k=5, nprobe=2).count()  # warm
     times["ann_ivf_probe_fullscan"] = round(
         _best(
-            lambda: ivf_topk(
-                emb, queries, cents, k=5, nprobe=2, impl="arrow"
-            ).count(),
+            lambda: ivf_topk(emb, queries, cents, k=5, nprobe=2).count(),
             n=3,
         ),
         3,

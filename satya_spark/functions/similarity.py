@@ -1,23 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-
-* **Brute-force cosine top-k** — exact baseline. The query set is
+* **Brute-force cosine top-k** — the exact baseline. The query set is
   broadcast (it's small by definition); similarity is a codegen'd
   fold over the zipped arrays; top-k via window row_number with a
-  deterministic tie-break. At 100 TB the corpus side streams through
-  executors with NO shuffle — only the broadcast and the final
-  per-query top-k (tiny) move.
-* **LSH-bucketed ANN** — sign-of-hyperplane sketches with
-  deterministic pseudo-random planes (md5-derived, seedable). Each
-  vector maps to a bucket; queries probe their own bucket only,
-  turning the scan into a bucket-pruned join. Recall/cost trades via
-  n_planes. This is the scale path; brute force is its oracle.
-
-A vectorized pandas-UDF dot product is deliberately NOT the default:
-the arithmetic fold stays in the JVM and avoids Arrow transfer; for
-very wide vectors (≥1k dims) switch to mapInPandas + numpy
-(multimodal.py shows the pattern).
+  deterministic tie-break. The corpus side streams through executors
+  with NO shuffle — only the broadcast and the final per-query top-k
+  (tiny) move.
+* **Approximate search and embedding dedup** — LSH sign sketches
+  (deterministic md5-derived planes), IVF (k-means lists, optionally
+  persisted partitioned by list id) and SemDeDup. Every one of them
+  runs its vector arithmetic as numpy float64 matmuls inside
+  ``mapInArrow``: one Arrow pass assigns, probe-filters, scores and
+  keeps a per-batch local top-k, so no corpus×query pair set forms
+  and no expression tree grows with dims (inlined plane/centroid
+  constants pass Janino's 64 KB method limit at ~500 terms). Cosines
+  are rounded to 6 decimals with fixed tie-breaks, so every result is
+  SQL-expressible and the DuckDB oracles in ``__spark_entry__`` gate
+  it; brute force is the quality reference.
 """
 
 from __future__ import annotations
@@ -26,7 +25,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..crossrow import salted_topn
-from .dedup import portable_hash64
+
+# Upper bound on a query batch collected to the driver: every ANN
+# search ships its queries to each task inside the scoring closure.
+MAX_QUERY_ROWS = 10_000
 
 
 def _to_double(arr: Column) -> Column:
@@ -115,40 +117,6 @@ def _plane_component(seed: str, plane: int, dim: int) -> float:
     return (v / 2**63) - 1.0
 
 
-def lsh_bucket(
-    vec: Column, n_planes: int, dims: int, seed: str = "ann"
-) -> Column:
-    """Sign sketch: bit_p = [vec · plane_p > 0]; bucket = Σ bit·2^p.
-
-    The dot product is a ``zip_with`` + ``aggregate`` left fold over a
-    plane ARRAY literal, not ``dims`` inlined ``element_at``-multiply
-    terms: the inlined form built an n_planes×dims-term expression
-    tree whose Catalyst analysis/optimization alone cost ~3.7 s per
-    query build at dims=64×4 planes (measured r6 — more than 3× the
-    execution), re-paid on every plan because literals defeat plan
-    caching. The fold keeps the tree ~5× smaller at identical values:
-    the HOF evaluates left-to-right exactly like the old ``+`` chain
-    (0.0 + t₁ ≡ t₁ for every float, and a −0.0 sum still fails
-    ``> 0``), so bucket bits — and the SQL-oracle parity the expr
-    path exists for — are unchanged. Per-row cost is CodegenFallback
-    HOF eval; this path is the ORACLE TWIN for small corpora — the
-    scale path is the numpy sketch (``sketch_buckets_np`` /
-    ``lsh_topk(impl='arrow')``)."""
-    bucket = F.lit(0)
-    vd = _to_double(vec)
-    for p in range(n_planes):
-        plane = F.array(
-            *[F.lit(_plane_component(seed, p, d)) for d in range(dims)]
-        )
-        s = F.aggregate(
-            F.zip_with(vd, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(s > 0, F.lit(2**p)).otherwise(F.lit(0))
-    return bucket
-
-
 def sketch_buckets_np(
     df: DataFrame,
     n_planes: int,
@@ -159,20 +127,11 @@ def sketch_buckets_np(
 ) -> DataFrame:
     """Arrow-batched sign-sketch: one numpy float64 matmul per batch
     against the stacked (len(seeds)·n_planes, dims) plane matrix,
-    emitting one (id, band, bucket) row per band. This is the
-    wide-vector / many-plane SCALE path: the pure-expression
-    ``lsh_bucket`` inlines n_planes×dims multiply-adds into the plan
-    and past ~500 terms the fused stage blows Janino's 64 KB method
-    limit and silently drops to interpreted eval — a matmul over Arrow
-    batches is both smaller and far faster there. Sign parity with the
-    expression path holds except when a dot product sits within
-    float-summation noise of 0 (tested equal on the synthetic corpus);
-    use the expression path when bit-exact SQL-oracle parity matters.
-    (Measured footnote: if you must run the big-expr path, disabling
-    ``spark.sql.codegen.wholeStage`` lets the projection compile as
-    split per-operator methods instead of falling back to fully
-    interpreted eval — 1.75x faster at dims=64 x 24 planes, sf0.01.
-    Still far behind the matmul; kept as a negative result.)"""
+    emitting one (id, band, bucket) row per band, where bit_p =
+    [vec · plane_p > 0] and bucket = Σ bit_p·2^p. The matmul stays one
+    small operator at any dims × planes; inlining the n_planes×dims
+    plane constants as Catalyst expressions passes Janino's 64 KB
+    method limit at ~500 terms and drops to interpreted eval."""
     import numpy as np
     import pyarrow as pa
     from typing import Iterator
@@ -216,6 +175,28 @@ def sketch_buckets_np(
     )
 
 
+def _collect_queries(
+    queries: DataFrame, query_id_col: str, vec_col: str, caller: str
+) -> list[tuple]:
+    """Bounded driver collect of a query batch → [(query_id, float64
+    vector)]. Reads at most ``MAX_QUERY_ROWS + 1`` rows, so a batch
+    over the bound fails with a ValueError naming ``caller`` instead of
+    pulling a corpus-sized frame onto the driver."""
+    import numpy as np
+
+    rows = (
+        queries.select(F.col(query_id_col), F.col(vec_col))
+        .limit(MAX_QUERY_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"{caller}: query batch has more than MAX_QUERY_ROWS="
+            f"{MAX_QUERY_ROWS} rows; split it into smaller batches"
+        )
+    return [(r[0], np.asarray(r[1], dtype=np.float64)) for r in rows]
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -226,7 +207,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     multiprobe: int = 0,
-    impl: str = "expr",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
     bucket, then exact cosine rank within the bucket. With 2^p
@@ -239,74 +219,33 @@ def lsh_topk(
     still a tiny fraction of the corpus. Only the QUERY side fans out;
     the corpus keeps one bucket per vector.
 
-    ``impl='expr'`` builds the bucket as constant-folded Catalyst
-    expressions and ranks via join + cosine fold (bit-exact SQL-oracle
-    parity). ``impl='arrow'`` is the 100 TB configuration: the same
-    single numpy Arrow pass as IVF (``_ivf_score_np`` with the
-    sign-sketch bucketing as the assigner) — bucket, probe-filter,
-    score, and per-batch local top-k in one scan, no pair set, no
-    interpreted fold. Sign parity caveat as sketch_buckets_np (differs
-    only within float noise of a zero plane dot product)."""
-    if impl == "arrow":
-        if multiprobe not in (0, 1):
-            raise ValueError("multiprobe supports 0 or 1 bit flips")
-        import numpy as np
-
-        planes = np.array(
-            [
-                [_plane_component("ann", p, d) for d in range(dims)]
-                for p in range(n_planes)
-            ]
-        )
-        pow2 = 2 ** np.arange(n_planes)
-
-        def assign(x, xn):
-            return ((x @ planes.T > 0) * pow2).sum(axis=1)
-
-        qinfo = []
-        for row in queries.select(F.col(query_id_col), F.col(vec_col)).collect():
-            v = np.asarray(row[vec_col], dtype=np.float64)
-            b0 = int(((v @ planes.T > 0) * pow2).sum())
-            probes = {b0} | (
-                {b0 ^ (1 << p) for p in range(n_planes)} if multiprobe else set()
-            )
-            qinfo.append((row[0], v, np.array(sorted(probes), dtype=np.int64)))
-        return _ivf_score_np(
-            corpus, qinfo, k, id_col, vec_col, query_id_col, assign=assign
-        )
-    c = corpus.withColumn("__bucket", lsh_bucket(F.col(vec_col), n_planes, dims))
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        lsh_bucket(F.col(vec_col), n_planes, dims).alias("__b0"),
-    )
-    if multiprobe == 0:
-        q = q.select(query_id_col, "__qvec", F.col("__b0").alias("__bucket"))
-    elif multiprobe == 1:
-        # bucket column is projected BEFORE the explode (Generate can't
-        # split big expressions across codegen methods)
-        flips = F.array(F.lit(0), *[F.lit(2**p) for p in range(n_planes)])
-        q = q.select(
-            query_id_col,
-            "__qvec",
-            "__b0",
-            F.explode(flips).alias("__flip"),
-        ).select(
-            query_id_col,
-            "__qvec",
-            F.col("__b0").bitwiseXOR(F.col("__flip")).alias("__bucket"),
-        )
-    else:
+    Runs as the same single numpy Arrow pass as IVF (``_ivf_score_np``
+    with the sign sketch as the assigner): bucket, probe-filter, score,
+    and per-batch local top-k in one scan, no pair set."""
+    if multiprobe not in (0, 1):
         raise ValueError("multiprobe supports 0 or 1 bit flips")
-    j = c.join(F.broadcast(q), "__bucket").filter(
-        F.col(query_id_col) != F.col(id_col)
+    import numpy as np
+
+    planes = np.array(
+        [
+            [_plane_component("ann", p, d) for d in range(dims)]
+            for p in range(n_planes)
+        ]
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 6)
-    return _rank_topk(
-        j.select(F.col(query_id_col), F.col(id_col), sim.alias("cos_sim")),
-        query_id_col,
-        id_col,
-        k,
+    pow2 = 2 ** np.arange(n_planes)
+
+    def assign(x, xn):
+        return ((x @ planes.T > 0) * pow2).sum(axis=1)
+
+    qinfo = []
+    for qid, v in _collect_queries(queries, query_id_col, vec_col, "lsh_topk"):
+        b0 = int(((v @ planes.T > 0) * pow2).sum())
+        probes = {b0} | (
+            {b0 ^ (1 << p) for p in range(n_planes)} if multiprobe else set()
+        )
+        qinfo.append((qid, v, np.array(sorted(probes), dtype=np.int64)))
+    return _ivf_score_np(
+        corpus, qinfo, k, id_col, vec_col, query_id_col, assign=assign
     )
 
 
@@ -344,25 +283,17 @@ def _assign_lists_np(
     out_col: str = "__list",
 ) -> DataFrame:
     """Arrow-batched IVF centroid assignment: ONE numpy float64 matmul
-    per Arrow batch against the (k, dims) centroid matrix. This is the
-    production-dims scale path — the pure-expression
-    ``_nearest_centroid`` inlines k×dims multiply-adds into the plan,
-    and past ~500 terms (e.g. dims=512 × k=256) the fused stage blows
-    Janino's 64 KB method limit and silently drops to interpreted eval
-    (measured, BENCH.md), while a matmul is both smaller and faster.
-
-    Parity with the expression path: cosines are rounded to 6 decimals
-    before the argmax and ties break to the SMALLEST centroid index
-    (numpy argmax returns the first occurrence of the max — the same
-    order ``_nearest_centroid``'s when-chain scans).
+    per Arrow batch against the (k, dims) centroid matrix. Cosines are
+    rounded to 6 decimals before the argmax and ties break to the
+    SMALLEST centroid index (numpy argmax returns the first occurrence
+    of the max) — the rule the SQL oracles replicate.
 
     ``mapInArrow``, not ``mapInPandas`` (r6, guide §4.1/4.2): the
     embedding column stays a flat Arrow values buffer end to end —
     matrix via one reshape (``_vec_matrix_np``), pass-through without
     per-row list boxing, and the worker imports numpy+pyarrow only
     (no pandas), which also shrinks the cold-start this build pays as
-    the session's first Python stage. Assignments are bit-identical:
-    same float64 matmul over the same values."""
+    the session's first Python stage."""
     import numpy as np
     import pyarrow as pa
     from typing import Iterator
@@ -392,14 +323,11 @@ def _assign_lists_np(
 
 
 def _probes_driver_np(
-    qpdf, centroids: list[list[float]], nprobe: int, vec_key: str
+    qrows: list[tuple], centroids: list[list[float]], nprobe: int
 ) -> list[tuple]:
-    """Driver-side probe selection for a collected query batch
-    (queries are driver-small by definition — the broadcast side; if
-    a query batch ever outgrew the driver, probe selection would move
-    into the same Arrow pass that scores). Parity with the expression
-    path's ``reverse(array_sort(struct))``: 6-decimal cosine, ties to
-    the LARGEST centroid index."""
+    """Driver-side probe selection for a ``_collect_queries`` batch:
+    each query's ``nprobe`` closest lists by 6-decimal cosine, ties to
+    the LARGEST centroid index. Returns ``_ivf_score_np``'s ``qinfo``."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -407,12 +335,11 @@ def _probes_driver_np(
     cn[cn == 0] = 1.0
     idx = np.arange(C.shape[0])
     out = []
-    for row in qpdf:
-        v = np.asarray(row[vec_key], dtype=np.float64)
+    for qid, v in qrows:
         vn = np.sqrt((v * v).sum()) or 1.0
         sims = np.round(C @ v / (cn * vn), 6)
         order = np.lexsort((-idx, -sims))[:nprobe]
-        out.append((row[0], v, np.sort(order).astype(np.int64)))
+        out.append((qid, v, np.sort(order).astype(np.int64)))
     return out
 
 
@@ -433,14 +360,11 @@ def _ivf_score_np(
     per-batch LOCAL top-k per query. The global exact top-k is the
     window over that union (≤ batches × queries × k candidate rows —
     tiny), so no (corpus × query) pair set ever materializes and no
-    interpreted per-pair cosine fold runs. This replaced a
-    join + F.aggregate-fold ranking measured at ~9 µs/pair
-    (CodegenFallback HOF) — the fold was the bottleneck of every
-    arrow ANN query (BENCH.md r4).
+    interpreted per-pair cosine fold (~9 µs/pair, BENCH.md r4) runs.
 
     ``qinfo``: [(query_id, np.ndarray vec, np.ndarray probe_lists)]
-    collected driver-side — bounded by the query batch (the broadcast
-    side), same driver-small class as the centroid matrix.
+    collected driver-side by ``_collect_queries`` — at most
+    ``MAX_QUERY_ROWS`` queries.
 
     List membership per corpus row comes from (in precedence order):
     ``assign(x, xn) -> int array`` (an arbitrary numpy bucketing —
@@ -522,18 +446,13 @@ def train_centroids(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> list[list[float]]:
     """Deterministic mini k-means, DataFrame-native: initial
     centroids are the k id-stride vectors; each iteration assigns by
-    max cosine and recomputes means via posexplode +
-    groupBy(centroid, dim) — the per-dimension mean is one
+    max cosine (``_assign_lists_np``) and recomputes means via
+    posexplode + groupBy(centroid, dim) — the per-dimension mean is one
     map-side-combinable aggregation, so training scales to any corpus
-    size while centroids (k×dims floats) stay driver-side.
-
-    ``impl='expr'`` assigns with K broadcast Catalyst expressions
-    (bit-exact SQL-oracle parity); ``impl='arrow'`` with the numpy
-    matmul (``_assign_lists_np``) — the production-dims config."""
+    size while centroids (k×dims floats) stay driver-side."""
     n = corpus.count()
     stride = max(1, n // k)
     cents = [
@@ -545,14 +464,9 @@ def train_centroids(
         .collect()
     ]
     for _ in range(iters):
-        if impl == "arrow":
-            assigned = _assign_lists_np(
-                corpus, cents, id_col=id_col, vec_col=vec_col, out_col="__c"
-            )
-        else:
-            assigned = corpus.withColumn(
-                "__c", _nearest_centroid(F.col(vec_col), cents)
-            )
+        assigned = _assign_lists_np(
+            corpus, cents, id_col=id_col, vec_col=vec_col, out_col="__c"
+        )
         means = (
             assigned.select(
                 "__c", F.posexplode(F.col(vec_col)).alias("dim", "val")
@@ -571,39 +485,6 @@ def train_centroids(
     return cents
 
 
-def _cos_to_const(vec: Column, cent: list[float]) -> Column:
-    """cosine(vec, constant centroid). Same zip_with+aggregate fold
-    shape as :func:`lsh_bucket` (see its planning note): the fold
-    adds terms left-to-right exactly like the previous inlined
-    ``+``-chain (0.0 + t₁ ≡ t₁), so values — and SQL-oracle parity —
-    are unchanged while the k×dims expression tree shrinks ~5×."""
-    import math
-
-    c = F.array(*[F.lit(float(w)) for w in cent])
-    num = F.aggregate(
-        F.zip_with(_to_double(vec), c, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cn = math.sqrt(sum(w * w for w in cent)) or 1.0
-    return num / (norm(vec) * F.lit(cn))
-
-
-def _nearest_centroid(vec: Column, cents: list[list[float]]) -> Column:
-    """argmax_i cosine(vec, cent_i); ties → smallest i. Cosines are
-    rounded to 6 decimals so the comparison is engine-portable (raw
-    doubles can differ in the last ulp between Spark's fold and
-    DuckDB's list_dot_product, flipping near-ties)."""
-    sims = [F.round(_cos_to_const(vec, c), 6) for c in cents]
-    best = F.greatest(*sims) if len(sims) > 1 else sims[0]
-    out = F.lit(None).cast("int")
-    expr = None
-    for i, s in enumerate(sims):
-        cond = s == best
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-    return expr.cast("int")
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -613,60 +494,24 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "expr",
 ) -> DataFrame:
     """IVF search: corpus rows carry their nearest-centroid list id;
     each query probes its ``nprobe`` closest lists. The probed
     fraction is ~nprobe/k of the corpus; within-list ranking is exact
     cosine. At scale the list id is a partition column and probing is
-    partition pruning.
+    partition pruning (``build_ivf_index`` / ``ivf_topk_indexed``).
 
-    ``impl='expr'`` inlines assignment/probe as constant-folded
-    Catalyst expressions (bit-exact SQL-oracle parity; k×dims terms —
-    past ~500 the fused stage drops to interpreted eval).
-    ``impl='arrow'`` runs assignment, probe-filtered scoring, and
-    per-batch local top-k in ONE numpy mapInPandas pass over the
-    corpus (``_ivf_score_np``) — the 100 TB configuration: no
-    corpus×query pair set, no interpreted cosine fold, one scan; same
-    6-decimal rounding and tie-breaks, parity-tested in
-    tests/test_functions.py."""
-    if impl == "arrow":
-        qpdf = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
-        qinfo = _probes_driver_np(qpdf, centroids, nprobe, vec_col)
-        return _ivf_score_np(
-            corpus, qinfo, k, id_col, vec_col, query_id_col,
-            centroids=centroids,
-        )
-    else:
-        c = corpus.withColumn(
-            "__list", _nearest_centroid(F.col(vec_col), centroids)
-        )
-        # rounded for engine portability; struct sort ties break on the
-        # centroid index DESCENDING (reverse of ascending array_sort)
-        sims = [
-            F.round(_cos_to_const(F.col(vec_col), cent), 6) for cent in centroids
-        ]
-        probe_struct = F.array(
-            *[
-                F.struct(sims[i].alias("s"), F.lit(i).alias("c"))
-                for i in range(len(centroids))
-            ]
-        )
-        probes = F.slice(F.reverse(F.array_sort(probe_struct)), 1, nprobe)
-        q = queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            F.explode(F.transform(probes, lambda x: x["c"])).alias("__list"),
-        )
-    j = c.join(F.broadcast(q), "__list").filter(
-        F.col(query_id_col) != F.col(id_col)
+    Assignment, probe-filtered scoring, and per-batch local top-k run
+    in ONE numpy mapInArrow pass over the corpus (``_ivf_score_np``):
+    no corpus×query pair set, one scan."""
+    qinfo = _probes_driver_np(
+        _collect_queries(queries, query_id_col, vec_col, "ivf_topk"),
+        centroids,
+        nprobe,
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 6)
-    return _rank_topk(
-        j.select(F.col(query_id_col), F.col(id_col), sim.alias("cos_sim")),
-        query_id_col,
-        id_col,
-        k,
+    return _ivf_score_np(
+        corpus, qinfo, k, id_col, vec_col, query_id_col,
+        centroids=centroids,
     )
 
 
@@ -676,7 +521,6 @@ def build_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     mode: str = "overwrite",
 ) -> None:
     """Persist the corpus PHYSICALLY PARTITIONED by its IVF list id —
@@ -687,14 +531,7 @@ def build_ivf_index(
     the bytes and the assignment matmul runs ONCE at build time, not
     per query batch (``ivf_topk`` recomputes it per job). Pruning is
     pinned at plan level in tests/test_plans.py."""
-    if impl == "arrow":
-        assigned = _assign_lists_np(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    else:
-        assigned = corpus.select(
-            id_col,
-            vec_col,
-            _nearest_centroid(F.col(vec_col), centroids).alias("__list"),
-        )
+    assigned = _assign_lists_np(corpus, centroids, id_col=id_col, vec_col=vec_col)
     # cluster rows by list BEFORE the partitioned write: without it
     # every input task writes a sliver into every list directory
     # (tasks × k small files — a probe then pays k× the file-open
@@ -723,58 +560,22 @@ def ivf_topk_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF search over a :func:`build_ivf_index` layout. The probed
     list ids are applied as a LITERAL partition filter on the scan —
     static partition pruning, visible as ``PartitionFilters`` in the
-    physical plan. The driver-side collect behind that literal is
-    bounded by the number of CENTROIDS (distinct probed lists ≤ k_ivf
-    regardless of query-batch size — same driver-small class as the
-    centroid matrix itself), never by data volume. Within the pruned
-    scan, the arrow impl scores queries in one numpy Arrow pass with
-    per-batch local top-k (``_ivf_score_np`` — no pair set, no
-    interpreted cosine fold); the expr impl keeps the broadcast
-    equi-join on ``__list`` (SQL-oracle twin shape)."""
-    if impl == "arrow":
-        qpdf = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
-        qinfo = _probes_driver_np(qpdf, centroids, nprobe, vec_col)
-        probed = sorted({int(li) for _, _, pr in qinfo for li in pr})
-        c = spark.read.parquet(index_path).filter(F.col("__list").isin(probed))
-        return _ivf_score_np(c, qinfo, k, id_col, vec_col, query_id_col)
-    else:
-        sims = [
-            F.round(_cos_to_const(F.col("__qvec"), cent), 6) for cent in centroids
-        ]
-        probe_struct = F.array(
-            *[
-                F.struct(sims[i].alias("s"), F.lit(i).alias("c"))
-                for i in range(len(centroids))
-            ]
-        )
-        probes = F.slice(F.reverse(F.array_sort(probe_struct)), 1, nprobe)
-        q = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("__qvec")
-        ).select(
-            query_id_col,
-            "__qvec",
-            F.explode(F.transform(probes, lambda x: x["c"])).alias("__list"),
-        )
-    # ≤ len(centroids) ints by construction — the pruning literal
-    probed = sorted(
-        r["__list"] for r in q.select("__list").distinct().collect()
+    physical plan. The probed set has at most len(centroids) ids
+    regardless of query-batch size. Within the pruned scan, queries
+    are scored in one numpy Arrow pass with per-batch local top-k
+    (``_ivf_score_np``)."""
+    qinfo = _probes_driver_np(
+        _collect_queries(queries, query_id_col, vec_col, "ivf_topk_indexed"),
+        centroids,
+        nprobe,
     )
+    probed = sorted({int(li) for _, _, pr in qinfo for li in pr})
     c = spark.read.parquet(index_path).filter(F.col("__list").isin(probed))
-    j = c.join(F.broadcast(q), "__list").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 6)
-    return _rank_topk(
-        j.select(F.col(query_id_col), F.col(id_col), sim.alias("cos_sim")),
-        query_id_col,
-        id_col,
-        k,
-    )
+    return _ivf_score_np(c, qinfo, k, id_col, vec_col, query_id_col)
 
 
 def embedding_near_dup_pairs(
@@ -786,53 +587,21 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: str = "nd",
-    impl: str = "expr",
 ) -> DataFrame:
     """Embedding-cosine near-duplicates via MULTI-BAND sign-sketch
     LSH: each vector is emitted into ``bands`` independent sketches
-    (distinct plane seeds); candidates collide in ≥1 band (union of
-    per-band equi-joins), fixing the single-band recall hole where a
-    near-identical pair straddles one hyperplane. More planes per band
-    shrink buckets (cost); more bands recover recall — the standard
-    banding trade also used by the MinHash path. Candidate dedup
-    shuffles only (id_a, id_b); vectors are joined back by id for the
-    exact-cosine verify. Returns (id_a, id_b, cos_sim), id_a < id_b.
-
-    ``impl='expr'`` builds the sketch as Catalyst expressions
-    (bit-exact SQL-oracle parity; interpreted past ~500 terms);
-    ``impl='arrow'`` uses the numpy matmul path (sketch_buckets_np) —
-    the 100 TB configuration for wide vectors / many planes."""
-    if impl == "arrow":
-        b = sketch_buckets_np(
-            df, n_planes, dims, [f"{seed}{bi}" for bi in range(bands)],
-            id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        # compute the bucket COLUMNS in a Project (whole-stage codegen
-        # splits big expression trees across methods there) and explode
-        # only attribute references: inlining the plane dot products
-        # into the Generate operator itself blows Janino's 64 KB method
-        # limit (Generate.doConsume is not split-aware).
-        with_buckets = df.select(
-            F.col(id_col),
-            *[
-                lsh_bucket(F.col(vec_col), n_planes, dims, seed=f"{seed}{bi}").alias(
-                    f"__b{bi}"
-                )
-                for bi in range(bands)
-            ],
-        )
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(bi).alias("band"), F.col(f"__b{bi}").alias("bucket")
-                )
-                for bi in range(bands)
-            ]
-        )
-        b = with_buckets.select(F.col(id_col), F.explode(buckets).alias("bb")).select(
-            id_col, "bb.band", "bb.bucket"
-        )
+    (distinct plane seeds, ``sketch_buckets_np``); candidates collide
+    in ≥1 band (union of per-band equi-joins), fixing the single-band
+    recall hole where a near-identical pair straddles one hyperplane.
+    More planes per band shrink buckets (cost); more bands recover
+    recall — the standard banding trade also used by the MinHash path.
+    Candidate dedup shuffles only (id_a, id_b); vectors are joined back
+    by id for the exact-cosine verify. Returns (id_a, id_b, cos_sim),
+    id_a < id_b."""
+    b = sketch_buckets_np(
+        df, n_planes, dims, [f"{seed}{bi}" for bi in range(bands)],
+        id_col=id_col, vec_col=vec_col,
+    )
     r = b.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cand = (
         b.join(r, ["band", "bucket"])
@@ -851,55 +620,48 @@ def embedding_near_dup_pairs(
             "id_b",
         )
     )
-    return _pair_cosine_verify(j, threshold, impl)
+    return _pair_cosine_verify(j, threshold)
 
 
-def _pair_cosine_verify(j: DataFrame, threshold: float, impl: str) -> DataFrame:
+def _pair_cosine_verify(j: DataFrame, threshold: float) -> DataFrame:
     """Exact-cosine verify of candidate pairs carrying (id_a, id_b,
     vec_a, vec_b): returns (id_a, id_b, cos_sim) for pairs with
-    rounded cosine ≥ threshold. ``impl='arrow'`` runs ONE numpy batch
-    op per Arrow batch; the expression twin evaluates the interpreted
-    F.aggregate HOF per pair (~9 µs/pair, BENCH.md r4) — same
-    6-decimal rounding on both paths."""
-    if impl == "arrow":
-        import numpy as np
-        import pyarrow as pa
-        from typing import Iterator
+    6-decimal-rounded cosine ≥ threshold, as ONE numpy batch op per
+    Arrow batch."""
+    import numpy as np
+    import pyarrow as pa
+    from typing import Iterator
 
-        # mapInArrow (r6): both vector columns land as flat buffers →
-        # two reshapes, no per-row pandas boxing; same values out.
-        def verify(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            for rb in batches:
-                n = rb.num_rows
-                if not n:
-                    continue
-                a = _vec_matrix_np(rb.column(2), n)
-                b = _vec_matrix_np(rb.column(3), n)
-                an = np.sqrt((a * a).sum(axis=1))
-                bn = np.sqrt((b * b).sum(axis=1))
-                an[an == 0] = 1.0
-                bn[bn == 0] = 1.0
-                sims = np.round(
-                    np.einsum("ij,ij->i", a, b) / (an * bn), 6
+    # mapInArrow (r6): both vector columns land as flat buffers →
+    # two reshapes, no per-row pandas boxing; same values out.
+    def verify(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            a = _vec_matrix_np(rb.column(2), n)
+            b = _vec_matrix_np(rb.column(3), n)
+            an = np.sqrt((a * a).sum(axis=1))
+            bn = np.sqrt((b * b).sum(axis=1))
+            an[an == 0] = 1.0
+            bn[bn == 0] = 1.0
+            sims = np.round(
+                np.einsum("ij,ij->i", a, b) / (an * bn), 6
+            )
+            m = sims >= threshold
+            if m.any():
+                idx = np.nonzero(m)[0]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0).take(pa.array(idx)),
+                        rb.column(1).take(pa.array(idx)),
+                        pa.array(sims[m], type=pa.float64()),
+                    ],
+                    names=["id_a", "id_b", "cos_sim"],
                 )
-                m = sims >= threshold
-                if m.any():
-                    idx = np.nonzero(m)[0]
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            rb.column(0).take(pa.array(idx)),
-                            rb.column(1).take(pa.array(idx)),
-                            pa.array(sims[m], type=pa.float64()),
-                        ],
-                        names=["id_a", "id_b", "cos_sim"],
-                    )
 
-        return j.select("id_a", "id_b", "vec_a", "vec_b").mapInArrow(
-            verify, schema="id_a long, id_b long, cos_sim double"
-        )
-    sim = F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6)
-    return j.select("id_a", "id_b", sim.alias("cos_sim")).filter(
-        F.col("cos_sim") >= threshold
+    return j.select("id_a", "id_b", "vec_a", "vec_b").mapInArrow(
+        verify, schema="id_a long, id_b long, cos_sim double"
     )
 
 
@@ -909,41 +671,34 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     deduplication by k-means clustering + within-cluster exact cosine:
     an item is DROPPED when its cosine to some LOWER-ID item in the
-    SAME cluster is ≥ threshold (the published implementations' upper-
+    SAME cluster is ≥ threshold (the published reference code's upper-
     triangular max rule, with id order as the index order, so the
     survivor set is deterministic and engine-portable). Returns one
     row per dropped item: (``id_col``, kept_id, max_cos) where
     kept_id is the smallest colliding lower id and max_cos the
     largest qualifying cosine.
 
-    100 TB plan shape: centroid assignment is NARROW (broadcast k×dims
-    constants in the expression impl; one numpy matmul per Arrow batch
-    in ``impl='arrow'`` — the production-dims config, see
-    ``_assign_lists_np``). The within-cluster self-join is equi on the
-    cluster id — the quadratic blowup is bounded by the cluster size,
-    which is the method's own contract: k MUST scale with the corpus
-    (SemDeDup uses ~100k clusters at web scale) so N/k stays ~10³–10⁴;
-    AQE skew-join splits residual hot clusters. The only corpus-wide
-    shuffles are that equi-join and the final 8-byte groupBy(id).
+    100 TB plan shape: centroid assignment is NARROW (one numpy matmul
+    per Arrow batch, ``_assign_lists_np``). The within-cluster
+    self-join is equi on the cluster id — the quadratic blowup is
+    bounded by the cluster size, which is the method's own contract:
+    k MUST scale with the corpus (SemDeDup uses ~100k clusters at web
+    scale) so N/k stays ~10³–10⁴; AQE skew-join splits residual hot
+    clusters. The only corpus-wide shuffles are that equi-join and the
+    final 8-byte groupBy(id).
     """
-    if impl == "arrow":
-        assigned = _assign_lists_np(
-            df, centroids, id_col=id_col, vec_col=vec_col, out_col="__c"
-        )
-    else:
-        assigned = df.select(id_col, vec_col).withColumn(
-            "__c", _nearest_centroid(F.col(vec_col), centroids)
-        )
+    assigned = _assign_lists_np(
+        df, centroids, id_col=id_col, vec_col=vec_col, out_col="__c"
+    )
     # materialize the assignment ONCE before the in-cluster self-join:
     # its two sides plan as independent subtrees, so the centroid-
-    # assignment pass (a Python mapInArrow stage on the arrow path)
-    # would otherwise run twice — same self-join recompute defect
-    # fixed across the dedup tier this round (r6).
+    # assignment pass (a Python mapInArrow stage) would otherwise run
+    # twice — same self-join recompute defect fixed across the dedup
+    # tier this round (r6).
     assigned = assigned.localCheckpoint()
     a = assigned.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "__c"
@@ -952,7 +707,7 @@ def semantic_dedup(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), "__c"
     )
     j = a.join(b, "__c").filter(F.col("id_a") < F.col("id_b"))
-    pairs = _pair_cosine_verify(j, threshold, impl)
+    pairs = _pair_cosine_verify(j, threshold)
     return pairs.groupBy("id_b").agg(
         F.min("id_a").alias("kept_id"), F.max("cos_sim").alias("max_cos")
     ).select(F.col("id_b").alias(id_col), "kept_id", "max_cos")

@@ -48,11 +48,8 @@ def get_spark(
         # lowers the measured 2→8-core scaling ratio — accepted: the
         # absolute wall-clock win at the contended level is the real
         # cluster behavior, not the ratio. No effect on single-query
-        # runs. Env-overridable for A/B measurement.
-        .config(
-            "spark.scheduler.mode",
-            os.environ.get("SATYA_SPARK_SCHEDULER", "FAIR"),
-        )
+        # runs.
+        .config("spark.scheduler.mode", "FAIR")
         # JIT refuses to compile methods past ~8 KB of bytecode
         # (DontCompileHugeMethods), so a fused whole-stage method above
         # that limit runs as interpreted bytecode forever. Aligning

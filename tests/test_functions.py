@@ -370,38 +370,85 @@ def test_simhash_pairs_chunk_blocking_is_exact(spark):
 
 # --- similarity ---------------------------------------------------------------
 
+def _py_bucket(vec, n_planes, dims, seed):
+    """Reference sign sketch in plain Python: bit p is set when the
+    left-to-right dot with plane p (``_plane_component``) is > 0."""
+    bucket = 0
+    for p in range(n_planes):
+        s = 0.0
+        for d in range(dims):
+            s += float(vec[d]) * sim._plane_component(seed, p, d)
+        if s > 0:
+            bucket += 2**p
+    return bucket
+
+
+def _py_cos(a, b):
+    """Reference 6-decimal-rounded cosine (zero norms count as 1)."""
+    import math
+
+    num = sum(float(x) * float(y) for x, y in zip(a, b))
+    na = math.sqrt(sum(float(x) * float(x) for x in a)) or 1.0
+    nb = math.sqrt(sum(float(y) * float(y) for y in b)) or 1.0
+    return round(num / (na * nb), 6)
+
+
 def test_sketch_buckets_np_matches_expression_path(spark):
+    """The numpy sketch equals a plain-Python sign sketch over the
+    same md5 planes, bucket by bucket and band by band."""
     import math
 
     vecs = [[math.sin(i * 0.71 + d * 0.13) for d in range(16)] for i in range(80)]
     df = _emb(spark, vecs)
     seeds = ["nd0", "nd1", "nd2"]
-    expr_rows = set()
-    for bi, seed in enumerate(seeds):
-        got = df.select(
-            "vec_id", sim.lsh_bucket(F.col("embedding"), 5, 16, seed=seed).alias("b")
-        ).collect()
-        expr_rows |= {(r["vec_id"], bi, r["b"]) for r in got}
+    stored = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    ref = {
+        (i, bi, _py_bucket(v, 5, 16, seed))
+        for i, v in stored.items()
+        for bi, seed in enumerate(seeds)
+    }
     np_rows = {
         (r["vec_id"], r["band"], r["bucket"])
         for r in sim.sketch_buckets_np(df, 5, 16, seeds).collect()
     }
-    assert np_rows == expr_rows
+    assert np_rows == ref
+
+
+def _py_near_dup_pairs(stored, threshold, n_planes, dims, bands, seed="nd"):
+    """Reference embedding near-dup: pairs colliding in >= 1 band's
+    sign-sketch bucket, kept when the rounded cosine >= threshold."""
+    keys = {
+        i: [(bi, _py_bucket(v, n_planes, dims, f"{seed}{bi}")) for bi in range(bands)]
+        for i, v in stored.items()
+    }
+    out = {}
+    for a in stored:
+        for b in stored:
+            if a < b and set(keys[a]) & set(keys[b]):
+                c = _py_cos(stored[a], stored[b])
+                if c >= threshold:
+                    out[(a, b)] = c
+    return out
 
 
 def test_embedding_near_dup_impls_agree(spark):
+    """embedding_near_dup_pairs equals a plain-Python band-collision
+    reference plus cosine verify. threshold=-1 keeps every candidate,
+    which pins the band buckets themselves, not just the near dups."""
     import math
 
     vecs = [[math.sin(i * 0.47 + d) for d in range(8)] for i in range(50)]
     vecs.append(list(vecs[7]))  # exact dup
     df = _emb(spark, vecs)
-    kw = dict(threshold=0.95, n_planes=4, dims=8, bands=3)
-    a = {(r["id_a"], r["id_b"]) for r in sim.embedding_near_dup_pairs(df, **kw).collect()}
-    b = {
-        (r["id_a"], r["id_b"])
-        for r in sim.embedding_near_dup_pairs(df, impl="arrow", **kw).collect()
-    }
-    assert a == b and (7, 50) in a
+    stored = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    kw = dict(n_planes=4, dims=8, bands=3)
+    for threshold in (0.95, -1.0):
+        got = {
+            (r["id_a"], r["id_b"]): r["cos_sim"]
+            for r in sim.embedding_near_dup_pairs(df, threshold=threshold, **kw).collect()
+        }
+        assert got == _py_near_dup_pairs(stored, threshold, **kw)
+        assert got[(7, 50)] == 1.0
 
 
 def _emb(spark, vecs):
@@ -570,10 +617,6 @@ def test_semantic_dedup_drop_rule(spark):
     assert out[1]["kept_id"] == 0 and out[4]["kept_id"] == 0
     assert out[3]["kept_id"] == 2 and out[5]["kept_id"] == 2
     assert out[5]["max_cos"] == 1.0
-    # arrow path: identical drop set and winners
-    arrow = {r["vec_id"]: r["kept_id"] for r in
-             sim.semantic_dedup(df, cents, threshold=0.99, impl="arrow").collect()}
-    assert arrow == {k: v["kept_id"] for k, v in out.items()}
 
 
 def test_brute_force_topk(spark):
@@ -756,55 +799,122 @@ def _emb_df(spark, n=120, dims=16, seed=0.37):
     )
 
 
+def _py_assign(v, cents):
+    """Reference IVF assignment: argmax of 6-decimal-rounded cosine,
+    ties to the SMALLEST centroid index."""
+    sims = [_py_cos(v, c) for c in cents]
+    return max(range(len(cents)), key=lambda i: (sims[i], -i))
+
+
 def test_ivf_arrow_assignment_parity_with_expr(spark):
-    """The numpy matmul assignment must agree with the inlined
-    Catalyst-expression assignment vector-by-vector (same 6-decimal
-    rounding, same smallest-index tie-break)."""
-    from satya_spark.functions.similarity import (
-        _assign_lists_np,
-        _nearest_centroid,
-        train_centroids,
-    )
-    from pyspark.sql import functions as F
+    """The numpy matmul assignment equals a plain-Python argmax over
+    6-decimal-rounded cosines (ties to the smallest index), vector by
+    vector."""
+    from satya_spark.functions.similarity import _assign_lists_np, train_centroids
 
     emb = _emb_df(spark, n=150, dims=16)
     cents = train_centroids(emb, k=6, iters=1)
-    expr = {
-        r["vec_id"]: r["__list"]
-        for r in emb.withColumn(
-            "__list", _nearest_centroid(F.col("embedding"), cents)
-        ).collect()
-    }
+    # centroid 6 copies centroid 1 (an exact tie); centroid 7 is
+    # centroid 3 nudged by 1e-7 (a tie only after 6-decimal rounding)
+    cents += [list(cents[1]), [cents[3][0] + 1e-7] + cents[3][1:]]
+    stored = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    ref = {i: _py_assign(v, cents) for i, v in stored.items()}
+    # the tie centroids are live: their originals own rows
+    assert {1, 3} <= set(ref.values())
     arrow = {
         r["vec_id"]: r["__list"] for r in _assign_lists_np(emb, cents).collect()
     }
-    assert arrow == expr
+    assert arrow == ref
+
+
+def _py_ivf_topk(stored, qids, cents, k, nprobe):
+    """Reference pruned IVF: rows live in their ``_py_assign`` list;
+    each query probes its ``nprobe`` best lists by rounded cosine (ties
+    to the LARGEST index) and ranks the probed rows, itself excluded,
+    by (-cos, id)."""
+    lists = {i: _py_assign(v, cents) for i, v in stored.items()}
+    out = []
+    for q in qids:
+        sims = [_py_cos(stored[q], c) for c in cents]
+        probes = sorted(range(len(cents)), key=lambda c: (-sims[c], -c))[:nprobe]
+        cand = sorted(
+            (-_py_cos(stored[q], v), i)
+            for i, v in stored.items()
+            if i != q and lists[i] in probes
+        )[:k]
+        out += [(q, r + 1, i, -neg) for r, (neg, i) in enumerate(cand)]
+    return sorted(out)
 
 
 def test_ivf_topk_arrow_parity_with_expr(spark):
-    """ivf_topk(impl='arrow') ≡ ivf_topk(impl='expr') — full result
-    parity on the pruned configuration (nprobe < k exercises the
-    probe-selection tie-break too)."""
+    """ivf_topk equals a plain-Python pruned-IVF reference, row for
+    row, on trained centroids and on two tie fixtures."""
     from satya_spark.functions.similarity import ivf_topk, train_centroids
 
     emb = _emb_df(spark, n=150, dims=16)
-    cents = train_centroids(emb, k=6, iters=1)
+    base = train_centroids(emb, k=6, iters=1)
     queries = emb.filter("vec_id < 8").selectExpr(
         "vec_id AS query_id", "embedding"
     )
-    key = lambda rows: sorted(
-        (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"]) for r in rows
+    stored = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+
+    def check(corpus, rows, cents, k, nprobe):
+        got = sorted(
+            (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"])
+            for r in ivf_topk(corpus, queries, cents, k=k, nprobe=nprobe).collect()
+        )
+        assert got == _py_ivf_topk(rows, range(8), cents, k=k, nprobe=nprobe)
+        return got
+
+    assert len(check(emb, stored, base, k=5, nprobe=2)) == 8 * 5
+    # Probe ties: every centroid gets a copy nudged by 1e-7, equal to
+    # it only after 6-decimal rounding. Rows go to the original (ties
+    # to the smallest index) and probes prefer the empty copy (ties to
+    # the largest), so nprobe=3 scans a second real list only if a
+    # rounding or tie rule is broken; k=30 returns every probed row.
+    nudged = [[c[0] + 1e-7] + list(c[1:]) for c in base]
+    check(emb, stored, base + nudged, k=30, nprobe=3)
+    # Rank ties: every vector tripled (ids + 1000, + 2000) in ONE
+    # partition. Each query's ranks 1-2 are its own copies (a tie the
+    # final window breaks) and its rank-4 slot ties with rank 5 inside
+    # one Arrow batch (a tie the per-batch top-k breaks); both keep
+    # the smaller id.
+    tripled = emb.union(
+        emb.selectExpr("vec_id + 1000 AS vec_id", "embedding")
+    ).union(
+        emb.selectExpr("vec_id + 2000 AS vec_id", "embedding")
+    ).coalesce(1)
+    rows = {i + off: v for i, v in stored.items() for off in (0, 1000, 2000)}
+    check(tripled, rows, base, k=4, nprobe=2)
+
+
+def test_ann_query_batch_is_bounded(spark, monkeypatch):
+    """Every ANN search collects its queries through one bounded
+    helper: past MAX_QUERY_ROWS it raises, naming the caller."""
+    emb = _emb_df(spark, n=20, dims=8)
+    cents = sim.train_centroids(emb, k=2, iters=0)
+    queries = emb.filter("vec_id < 4").selectExpr(
+        "vec_id AS query_id", "embedding"
     )
-    expr = key(ivf_topk(emb, queries, cents, k=5, nprobe=2, impl="expr").collect())
-    arrow = key(ivf_topk(emb, queries, cents, k=5, nprobe=2, impl="arrow").collect())
-    assert arrow == expr and len(arrow) == 8 * 5
+    monkeypatch.setattr(sim, "MAX_QUERY_ROWS", 3)
+    calls = {
+        "lsh_topk": lambda: sim.lsh_topk(emb, queries, dims=8),
+        "ivf_topk": lambda: sim.ivf_topk(emb, queries, cents),
+        "ivf_topk_indexed": lambda: sim.ivf_topk_indexed(
+            spark, "/nonexistent/ivf_index", queries, cents
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=rf"^{name}: .*MAX_QUERY_ROWS=3"):
+            call()
+    # at the bound the search runs
+    assert sim.lsh_topk(emb, queries.limit(3), n_planes=1, dims=8).count() > 0
 
 
 def test_ivf_arrow_wide_dims_matches_brute_force(spark):
-    """dims=256 × k=16 would inline ~4k multiply-add terms in the expr
-    path (past the measured ~500-term Janino cliff → interpreted). The
-    arrow path stays one matmul; with nprobe=k (full probe) the result
-    provably equals brute force — asserted here at production dims."""
+    """dims=256 × k=16: assignment and scoring stay one matmul at
+    production dims; with nprobe=k (full probe) the result provably
+    equals brute force."""
     from satya_spark.functions.similarity import (
         brute_force_topk,
         ivf_topk,
@@ -812,7 +922,7 @@ def test_ivf_arrow_wide_dims_matches_brute_force(spark):
     )
 
     emb = _emb_df(spark, n=200, dims=256)
-    cents = train_centroids(emb, k=16, iters=1, impl="arrow")
+    cents = train_centroids(emb, k=16, iters=1)
     queries = emb.filter("vec_id < 5").selectExpr(
         "vec_id AS query_id", "embedding"
     )
@@ -820,9 +930,7 @@ def test_ivf_arrow_wide_dims_matches_brute_force(spark):
         (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"]) for r in rows
     )
     bf = key(brute_force_topk(emb, queries, k=5).collect())
-    ivf = key(
-        ivf_topk(emb, queries, cents, k=5, nprobe=16, impl="arrow").collect()
-    )
+    ivf = key(ivf_topk(emb, queries, cents, k=5, nprobe=16).collect())
     assert ivf == bf and len(ivf) == 25
 
 

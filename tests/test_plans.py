@@ -148,11 +148,11 @@ def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     )
     cents = train_centroids(df, k=4, iters=0)
     idx = str(tmp_path / "ivf_index")
-    build_ivf_index(df, cents, idx, impl="arrow")
+    build_ivf_index(df, cents, idx)
     queries = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ivf_topk_indexed(spark, idx, queries, cents, k=3, nprobe=1, impl="arrow")
+    out = ivf_topk_indexed(spark, idx, queries, cents, k=3, nprobe=1)
     plan = _executed_plan(out)
     scan_lines = [l for l in plan.splitlines() if "FileScan" in l and "ivf_index" in l]
     assert scan_lines, plan
@@ -168,7 +168,7 @@ def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     assert "dynamicpruning" not in plan  # static, not runtime, pruning
 
     # results match the per-job recompute path exactly
-    base = ivf_topk(df, queries, cents, k=3, nprobe=1, impl="arrow")
+    base = ivf_topk(df, queries, cents, k=3, nprobe=1)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, base.collect()))
 
 
