@@ -13,13 +13,14 @@ from pyspark.sql import functions as F
 
 from satya_spark.functions.classify import classifier_score, hash_weights
 from satya_spark.functions.dedup import exact_dup_groups, remove_duplicated_spans
-from satya_spark.functions.gopher import gopher_quality
-from satya_spark.functions.lines import clean_lines
+from satya_spark.functions.gopher import with_gopher_quality
+from satya_spark.functions.lines import with_clean_lines
 from satya_spark.functions.mix import (
     corpus_mix,
     pack_sequences,
     stratified_sample,
 )
+from satya_spark.functions.text import tokens_ws
 from satya_spark.session import get_spark
 
 BASE = ["the", "of", "with", "that", "alpha", "bravo", "charlie",
@@ -56,19 +57,22 @@ def main() -> int:
         rows, "doc_id long, text string, lang string, source string"
     )
 
-    # 1. page-level cleaning (zero-shuffle)
-    cleaned = clean_lines(docs).join(
-        docs.select("doc_id", "lang", "source"), "doc_id"
-    ).select(
-        "doc_id", F.col("text_clean").alias("text"), "lang", "source"
+    # 1. page-level cleaning (zero-shuffle, row-local: no join back)
+    cleaned = (
+        with_clean_lines(docs)
+        .filter("c4_page_keep")
+        .withColumn("text", F.array_join("c4_lines", "\n"))
+        .select(*docs.columns)
     )
     n0, n1 = docs.count(), cleaned.count()
     print(f"clean_lines: {n0} -> {n1} pages")
     assert n1 < n0  # the lorem-ipsum pages dropped
 
-    # 2. quality gate (Gopher Table A1, zero-shuffle)
-    q = gopher_quality(cleaned).filter("gopher_keep").select("doc_id")
-    quality = cleaned.join(q, "doc_id")
+    # 2. quality gate (Gopher Table A1, zero-shuffle, row-local)
+    toks = cleaned.withColumn("toks", tokens_ws(F.col("text")))  # text non-NULL
+    quality = (
+        with_gopher_quality(toks, "toks").filter("gopher_keep").select(*cleaned.columns)
+    )
     print(f"gopher_quality kept {quality.count()} of {n1}")
 
     # 3. exact dedup (keep-first) + span removal of residual overlap

@@ -249,12 +249,18 @@ def cmd_clean(args) -> int:
     documents-shaped table. Kept rows (text REDACTED) go to
     <output>/kept, dropped rows with per-rule reasons to
     <output>/dropped, and one JSON summary line prints. Everything is
-    JVM-side: regex kernels for PII, the distributed explode→
-    partial-agg shape for repetition, a fingerprint window for dedup
-    — no Python in the data plane."""
+    JVM-side: regex kernels for PII, one shared n-gram aggregation
+    for repetition and Gopher, a fingerprint window for dedup — no
+    Python in the data plane.
+
+    The per-document frame is one input scan plus that aggregation,
+    left-joined back once: the text is tokenized once (NULL text as
+    empty), and the C4 page verdict, the Gopher quality signals and
+    every drop reason are row-local columns of it."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .functions import gopher as gp
     from .functions import text as tx
     from .functions.pii import with_pii
     from .io import read_ref
@@ -263,26 +269,32 @@ def cmd_clean(args) -> int:
     spark = get_spark(app_name="satya-spark-clean")
     idc, txt = args.id_col, args.text_col
     df = read_ref(spark, args.input)
+    out_cols = [c for c in df.columns if c != idc]
     if args.c4_lines:
         # C4 line/page cleaning runs FIRST so every downstream signal
         # (repetition, PII, gopher) sees the cleaned text; pages the
         # C4 page rules drop keep their ORIGINAL text and surface in
         # <output>/dropped with a 'c4_page' reason (auditable drop,
         # same policy as --dedup)
-        from .functions.lines import clean_lines
+        from .functions.lines import with_clean_lines
 
-        cl = clean_lines(df, id_col=idc, text_col=txt).select(
-            F.col(idc), F.col("text_clean").alias("__text_clean")
+        df = with_clean_lines(df, text_col=txt)
+        cleaned = F.array_join("c4_lines", "\n")
+        df = df.withColumn(
+            txt, F.when(F.col("c4_page_keep"), cleaned).otherwise(F.col(txt))
         )
-        df = (
-            df.join(cl, idc, "left")
-            .withColumn("__c4_page_dropped", F.col("__text_clean").isNull())
-            .withColumn(txt, F.coalesce("__text_clean", F.col(txt)))
-            .drop("__text_clean")
-        )
-    sig = tx.with_repetition(df, text_col=txt, id_col=idc)
-    d = df.join(sig, idc)
+    toks = tx.fresh_col(df, "__toks")
+    d = df.withColumn(toks, tx.tokens_ws(F.coalesce(F.col(txt), F.lit(""))))
+    # one n-gram aggregation: bigrams for repetition, plus the Gopher
+    # sizes 3..10 with --gopher
+    ns = gp.NGRAM_NS if args.gopher else (2,)
+    # sort-merge, as the planner picks at scale: a broadcast of small
+    # stats would keep the scan's partitioning and write one (often
+    # empty) file per input split
+    stats = tx.ngram_stats(d, toks, idc, ns).hint("merge")
+    d = d.join(stats, idc, "left")
     d = with_pii(d, text_col=txt)
+    rep = tx.repetition_cols(F.col(toks))
 
     empty = F.array().cast("array<string>")
 
@@ -290,33 +302,23 @@ def cmd_clean(args) -> int:
         return F.when(cond, F.array(F.lit(name))).otherwise(empty)
 
     reasons = [
-        _flag(F.col("n_tokens") < args.min_tokens, "too_short"),
-        _flag(F.col("n_tokens") > args.max_tokens, "too_long"),
+        _flag(rep["n_tokens"] < args.min_tokens, "too_short"),
+        _flag(rep["n_tokens"] > args.max_tokens, "too_long"),
+        _flag(F.coalesce(rep["ttr"], F.lit(1.0)) < args.min_ttr, "low_ttr"),
         _flag(
-            F.coalesce(F.col("ttr"), F.lit(1.0)) < args.min_ttr, "low_ttr"
-        ),
-        _flag(
-            F.coalesce(F.col("top_bigram_frac"), F.lit(0.0))
-            > args.max_top_bigram,
+            F.coalesce(rep["top_bigram_frac"], F.lit(0.0)) > args.max_top_bigram,
             "repetitive",
         ),
     ]
     if args.c4_lines:
-        reasons.append(_flag(F.col("__c4_page_dropped"), "c4_page"))
+        reasons.append(_flag(~F.col("c4_page_keep"), "c4_page"))
     if args.gopher:
         # Gopher Table-A1 batteries (functions/gopher.py): doc-local
         # quality composite + within-doc n-gram repetition composite
-        from .functions.gopher import gopher_ngram_repetition, gopher_quality
-
-        gq = gopher_quality(d, text_col=txt, id_col=idc).select(
-            idc, "gopher_keep"
-        )
-        gr = gopher_ngram_repetition(d, text_col=txt, id_col=idc).select(
-            idc, "rep_keep"
-        )
-        d = d.join(gq, idc).join(gr, idc)
+        d = gp.with_gopher_quality(d, toks, text_col=txt)
         reasons.append(_flag(~F.col("gopher_keep"), "gopher_quality"))
-        reasons.append(_flag(~F.col("rep_keep"), "gopher_repetition"))
+        rep_keep = gp.ngram_repetition_cols(F.col(toks))["rep_keep"]
+        reasons.append(_flag(~rep_keep, "gopher_repetition"))
     if args.drop_pii:
         reasons.append(_flag(F.col("pii_types") > 0, "pii"))
     if args.decontam_against:
@@ -351,11 +353,10 @@ def cmd_clean(args) -> int:
             ).otherwise(F.col("drop_reasons")),
         )
     # the per-document frame, materialized ONCE: the output columns
-    # plus text_redacted and drop_reasons (join order: id column
-    # first). The near-dedup canon choice and both writes read this
-    # checkpoint, so the hygiene subtree (repetition explode, PII
-    # regexes, gopher) executes once per pass, not once per action.
-    out_cols = [c for c in df.columns if c not in (idc, "__c4_page_dropped")]
+    # plus text_redacted and drop_reasons (id column first). The
+    # near-dedup canon choice and both writes read this checkpoint, so
+    # the hygiene subtree (PII regexes, n-gram aggregation) executes
+    # once per pass, not once per action.
     d = d.select(idc, *out_cols, "text_redacted", "drop_reasons").localCheckpoint()
     if args.near_dedup:
         # MinHash-LSH pairs -> connected components. Pairs scan the

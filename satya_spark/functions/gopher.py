@@ -9,22 +9,25 @@ Two operators, two very different 100 TB plan shapes:
 * :func:`gopher_quality` — the doc-LOCAL quality signals (word count
   bounds, mean word length, symbol-to-word ratios, bullet/ellipsis
   line fractions, alpha-word fraction, required-stopword count).
-  ONE narrow projection, ZERO shuffle: every signal is computable
-  from the row alone, so the whole battery is a select over the
-  corpus scan (the token and line arrays are projected to real
-  columns first — the n+1-tokenizations rule, decontam.py). The
-  array-HOF lambdas only touch their ELEMENT (a word / a line), so
-  there is no quadratic re-scan trap.
+  ZERO shuffle: every signal is computable from the row alone, so
+  :func:`with_gopher_quality` adds the whole battery as columns of
+  the caller's frame (``clean`` filters on them with no join), and
+  ``gopher_quality`` is a select over it. The token and line arrays
+  are projected to real columns first (the n+1-tokenizations rule,
+  decontam.py); the array-HOF lambdas only touch their ELEMENT (a
+  line / a word), so there is no quadratic re-scan trap.
 
 * :func:`gopher_ngram_repetition` — the within-doc n-gram repetition
   signals (top n-gram character fraction for n=2..4, duplicated
   n-gram character fraction for n=5..10). A pure expression would be
-  O(tokens²) per row; this is the DISTRIBUTED linear shape: ONE
-  explode of all nine gram sizes (tagged structs, flatten of nine
-  zip-of-shifted-slices arrays) → map-side-combining
-  ``groupBy(id, n, gram)`` → tiny ``groupBy(id, n)`` →
-  ``groupBy(id)`` widen → equi join back on the doc id. Hot
-  boilerplate grams combine map-side; AQE handles residual skew.
+  O(tokens²) per row; this is the DISTRIBUTED linear shape of
+  ``text.ngram_stats`` (shared with ``with_repetition`` and
+  ``clean``): ONE lambda-free explode of all nine gram sizes →
+  map-side-combining ``groupBy(id, n, gram)`` → tiny
+  ``groupBy(id, n)`` → ``groupBy(id)`` widen → left join back on the
+  doc id, and :func:`ngram_repetition_cols` turns the widened masses
+  into fractions. Hot boilerplate grams combine map-side; AQE handles
+  residual skew.
 
 Exact fraction definitions (pinned so the DuckDB twin is
 byte-identical; published implementations vary in the denominator
@@ -54,11 +57,20 @@ fractions ≤ 0.15 / 0.14 / 0.13 / 0.12 / 0.11 / 0.10 (n = 5..10).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .decontam import word_ngrams_from_tokens
-from .text import norm_text, norm_text_sql, tokens_ws, tokens_ws_sql
+from .text import (
+    fresh_col,
+    ngram_stats,
+    norm_text_sql,
+    token_chars,
+    tokens_ws,
+    tokens_ws_sql,
+)
 
 # Gopher's 8 required stop words (Table A1: "must contain at least 2")
 REQUIRED_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -76,69 +88,67 @@ MIN_REQUIRED_STOPWORDS = 2
 
 TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
+NGRAM_NS = tuple(TOP_NGRAM_MAX) + tuple(DUP_NGRAM_MAX)
 
 
 def _r6(c: Column) -> Column:
     return F.round(c, 6)
 
 
-def gopher_quality(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+def with_gopher_quality(
+    df: DataFrame, tokens_col: str, text_col: str = "text"
 ) -> DataFrame:
-    """Doc-local Gopher quality signals + composite keep flag.
+    """``df`` plus the doc-local Gopher signal columns (``n_words`` …
+    ``n_required_stopwords``) and the composite ``gopher_keep``.
+    ``tokens_col`` holds ``tokens_ws(coalesce(text, ''))``, so the
+    caller's one tokenization is reused.
 
-    One narrow projection over the scan; zero shuffle. NULL text is
-    treated as empty (all count signals 0, fractions NULL, keep
-    false — it fails the word-count bound).
+    Narrow projections over the caller's frame; zero shuffle. NULL
+    text is treated as empty (all count signals 0, fractions NULL, keep
+    false — it fails the word-count bound). Helper columns get names
+    no column of ``df`` has and are dropped again.
     """
+    txt_c, lines_c = fresh_col(df, "__txt"), fresh_col(df, "__lines")
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    d = df.select(
-        F.col(id_col),
-        norm_text(txt).alias("__norm"),
-        tokens_ws(txt).alias("__t"),
-        F.split(txt, "\n").alias("__lines"),
-        txt.alias("__txt"),
-    )
-    n_words = F.size("__t").cast("long")
-    n_lines = F.size("__lines").cast("long")
-    # normalized text is single-space-joined, so non-space chars =
-    # length - (n_words - 1); mean word length stays pure codegen
-    tok_chars = F.length("__norm") - F.greatest(n_words - 1, F.lit(0))
-    mean_wl = F.when(n_words > 0, _r6(tok_chars.cast("double") / n_words))
-    n_hash = F.length("__txt") - F.length(F.replace("__txt", F.lit("#"), F.lit("")))
+    d = df.withColumns({txt_c: txt, lines_c: F.split(txt, "\n")})
+    t, x, lines = F.col(tokens_col), F.col(txt_c), F.col(lines_c)
+    n_words = F.size(t).cast("long")
+    n_lines = F.size(lines).cast("long")
+    # mean word length stays pure codegen: non-space chars / words
+    mean_wl = F.when(n_words > 0, _r6(token_chars(t).cast("double") / n_words))
+    n_hash = F.length(x) - F.length(F.replace(x, F.lit("#"), F.lit("")))
     n_ellipsis = (
-        F.length("__txt") - F.length(F.replace("__txt", F.lit("…"), F.lit("")))
+        F.length(x) - F.length(F.replace(x, F.lit("…"), F.lit("")))
     ) + (
-        F.length("__txt") - F.length(F.replace("__txt", F.lit("..."), F.lit("")))
+        F.length(x) - F.length(F.replace(x, F.lit("..."), F.lit("")))
     ) / F.lit(3)
     hash_ratio = F.when(n_words > 0, _r6(n_hash.cast("double") / n_words))
     ellipsis_ratio = F.when(n_words > 0, _r6(n_ellipsis.cast("double") / n_words))
     n_bullet = F.size(
-        F.filter("__lines", lambda l: F.ltrim(l).rlike(BULLET_RE))
+        F.filter(lines, lambda l: F.ltrim(l).rlike(BULLET_RE))
     ).cast("long")
     n_ell_end = F.size(
-        F.filter("__lines", lambda l: F.rtrim(l).rlike(ELLIPSIS_RE))
+        F.filter(lines, lambda l: F.rtrim(l).rlike(ELLIPSIS_RE))
     ).cast("long")
     bullet_frac = _r6(n_bullet.cast("double") / n_lines)  # split() ⇒ ≥1 line
     ell_frac = _r6(n_ell_end.cast("double") / n_lines)
-    n_alpha = F.size(F.filter("__t", lambda w: w.rlike("[a-z]"))).cast("long")
+    n_alpha = F.size(F.filter(t, lambda w: w.rlike("[a-z]"))).cast("long")
     alpha_frac = F.when(n_words > 0, _r6(n_alpha.cast("double") / n_words))
-    padded = F.concat(F.lit(" "), F.col("__norm"), F.lit(" "))
+    # a stop word occurs in the single-space-joined text iff it is a token
     n_req = sum(
-        F.when(padded.contains(f" {w} "), 1).otherwise(0)
-        for w in REQUIRED_STOPWORDS
+        F.when(F.array_contains(t, w), 1).otherwise(0) for w in REQUIRED_STOPWORDS
     ).cast("int")
-
-    sig = d.select(
-        id_col,
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        hash_ratio.alias("hash_ratio"),
-        ellipsis_ratio.alias("ellipsis_ratio"),
-        bullet_frac.alias("bullet_line_frac"),
-        ell_frac.alias("ellipsis_line_frac"),
-        alpha_frac.alias("alpha_word_frac"),
-        n_req.alias("n_required_stopwords"),
+    sig = d.withColumns(
+        {
+            "n_words": n_words,
+            "mean_word_len": mean_wl,
+            "hash_ratio": hash_ratio,
+            "ellipsis_ratio": ellipsis_ratio,
+            "bullet_line_frac": bullet_frac,
+            "ellipsis_line_frac": ell_frac,
+            "alpha_word_frac": alpha_frac,
+            "n_required_stopwords": n_req,
+        }
     )
     keep = (
         (F.col("n_words") >= MIN_WORDS)
@@ -152,7 +162,19 @@ def gopher_quality(
         & (F.col("alpha_word_frac") >= MIN_ALPHA_FRAC)
         & (F.col("n_required_stopwords") >= MIN_REQUIRED_STOPWORDS)
     )
-    return sig.withColumn("gopher_keep", F.coalesce(keep, F.lit(False)))
+    return sig.withColumn("gopher_keep", F.coalesce(keep, F.lit(False))).drop(
+        txt_c, lines_c
+    )
+
+
+def gopher_quality(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, signal columns, gopher_keep): :func:`with_gopher_quality`
+    over the (id, text, tokens) projection."""
+    toks = tokens_ws(F.coalesce(F.col(text_col), F.lit("")))
+    d = df.select(id_col, text_col, toks.alias("__t"))
+    return with_gopher_quality(d, "__t", text_col).drop(text_col, "__t")
 
 
 def gopher_quality_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
@@ -209,20 +231,33 @@ def gopher_quality_sql(table: str, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def _tagged_grams(toks: Column, ns: tuple) -> Column:
-    """Flattened array of {n, g} structs over all gram sizes in
-    ``ns`` — nine zip-of-shifted-slices builds, one array, so the
-    corpus is exploded ONCE for the whole battery. The per-element
-    lambda only wraps the already-built gram string."""
-    def _tag(n: int):
-        # NB: must be a 1-arg lambda — F.transform treats a second
-        # parameter as the ELEMENT INDEX, not a closure slot
-        return lambda g: F.struct(F.lit(n).cast("int").alias("n"), g.alias("g"))
+def ngram_repetition_cols(toks: Column) -> dict:
+    """``top_{2,3,4}gram_char_frac``, ``dup_{5..10}gram_char_frac`` and
+    ``rep_keep`` as expressions over a token array and the
+    ``text.ngram_stats(ns=NGRAM_NS)`` columns (left-joined: a doc with
+    no gram reads NULL masses, i.e. 0.0 fractions)."""
+    tc = token_chars(toks)
 
-    parts = [
-        F.transform(word_ngrams_from_tokens(toks, n), _tag(n)) for n in ns
-    ]
-    return F.flatten(F.array(*parts))
+    def frac(mass: str) -> Column:
+        return F.when(
+            tc > 0,
+            _r6(
+                F.least(
+                    F.coalesce(F.col(mass), F.lit(0)).cast("double") / tc,
+                    F.lit(1.0),
+                )
+            ),
+        ).otherwise(F.lit(0.0))
+
+    top = {n: frac(f"ng{n}_top_mass") for n in TOP_NGRAM_MAX}
+    dup = {n: frac(f"ng{n}_dup_mass") for n in DUP_NGRAM_MAX}
+    keep = [top[n] <= t for n, t in TOP_NGRAM_MAX.items()]
+    keep += [dup[n] <= t for n, t in DUP_NGRAM_MAX.items()]
+    return {
+        **{f"top_{n}gram_char_frac": c for n, c in top.items()},
+        **{f"dup_{n}gram_char_frac": c for n, c in dup.items()},
+        "rep_keep": reduce(operator.and_, keep),
+    }
 
 
 def gopher_ngram_repetition(
@@ -232,78 +267,18 @@ def gopher_ngram_repetition(
     and ``dup_{5..10}gram_char_frac`` (definitions in the module
     docstring) + composite ``rep_keep``.
 
-    Distributed linear shape: one explode of all nine gram sizes →
-    groupBy(id, n, gram) (map-side combine carries the hot grams) →
-    groupBy(id, n) mass rollup → groupBy(id) widen → left equi join
-    back so gram-less (short/empty) docs report 0.0 fractions.
+    Distributed linear shape: ``text.ngram_stats`` over all nine gram
+    sizes (one lambda-free explode → groupBy(id, n, gram) → groupBy(id,
+    n) → groupBy(id) widen), left-joined back so gram-less (short or
+    empty) docs report 0.0 fractions.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    ns = tuple(TOP_NGRAM_MAX) + tuple(DUP_NGRAM_MAX)
-    base = df.select(
-        F.col(id_col),
-        tokens_ws(txt).alias("__t"),
-        norm_text(txt).alias("__norm"),
+    base = df.select(F.col(id_col), tokens_ws(txt).alias("__t"))
+    stats = ngram_stats(base, "__t", id_col, NGRAM_NS)
+    sig = ngram_repetition_cols(F.col("__t"))
+    return base.join(stats, id_col, "left").select(
+        id_col, *[c.alias(k) for k, c in sig.items()]
     )
-    docs = base.select(
-        id_col,
-        (
-            F.length("__norm")
-            - F.greatest(F.size("__t") - 1, F.lit(0))
-        ).cast("long").alias("total_chars"),
-        "__t",
-    )
-    grams = docs.select(
-        id_col, F.explode(_tagged_grams(F.col("__t"), ns)).alias("p")
-    ).select(id_col, F.col("p.n").alias("n"), F.col("p.g").alias("g"))
-    counted = grams.groupBy(id_col, "n", "g").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    # non-space chars of the gram = length minus its n-1 separators
-    mass = counted.select(
-        id_col,
-        "n",
-        "cnt",
-        (F.col("cnt") * (F.length("g") - (F.col("n") - 1))).alias("m"),
-    )
-    per_n = mass.groupBy(id_col, "n").agg(
-        F.max("m").alias("top_mass"),
-        F.sum(F.when(F.col("cnt") >= 2, F.col("m"))).alias("dup_mass"),
-    )
-    wide = per_n.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("n") == n, F.col("top_mass"))).alias(f"top{n}")
-            for n in TOP_NGRAM_MAX
-        ],
-        *[
-            F.max(F.when(F.col("n") == n, F.col("dup_mass"))).alias(f"dup{n}")
-            for n in DUP_NGRAM_MAX
-        ],
-    )
-    tc = F.col("total_chars")
-
-    def frac(name: str) -> Column:
-        return F.when(
-            tc > 0,
-            _r6(
-                F.least(
-                    F.coalesce(F.col(name), F.lit(0)).cast("double") / tc,
-                    F.lit(1.0),
-                )
-            ),
-        ).otherwise(F.lit(0.0))
-
-    out = docs.drop("__t").join(wide, id_col, "left").select(
-        id_col,
-        *[frac(f"top{n}").alias(f"top_{n}gram_char_frac") for n in TOP_NGRAM_MAX],
-        *[frac(f"dup{n}").alias(f"dup_{n}gram_char_frac") for n in DUP_NGRAM_MAX],
-    )
-    keep = None
-    for n, thr in TOP_NGRAM_MAX.items():
-        c = F.col(f"top_{n}gram_char_frac") <= thr
-        keep = c if keep is None else (keep & c)
-    for n, thr in DUP_NGRAM_MAX.items():
-        keep = keep & (F.col(f"dup_{n}gram_char_frac") <= thr)
-    return out.withColumn("rep_keep", keep)
 
 
 def _grams_from_toks_sql(t: str, n: int) -> str:
@@ -319,14 +294,13 @@ def gopher_ngram_repetition_sql(
     table: str, text_col: str = "text", id_col: str = "doc_id"
 ) -> str:
     """DuckDB twin of :func:`gopher_ngram_repetition` (UNION ALL over
-    the nine gram sizes replaces the tagged-flatten; the oracle does
-    not need the single-explode optimization)."""
+    the nine gram sizes replaces the padded single explode; the oracle
+    does not need that optimization)."""
     txt = f"coalesce({text_col}, '')"
-    ns = tuple(TOP_NGRAM_MAX) + tuple(DUP_NGRAM_MAX)
     gram_union = "\nUNION ALL\n".join(
         f"SELECT {id_col}, {n} AS n, unnest({_grams_from_toks_sql('__t', n)}) AS g"
         " FROM __toks"
-        for n in ns
+        for n in NGRAM_NS
     )
     tops = ",\n".join(
         f" CASE WHEN total_chars > 0 THEN"

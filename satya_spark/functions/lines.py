@@ -13,8 +13,9 @@ fraction and duplicate-line *character* fraction per document).
 
 Plan-shape rules (the 100 TB design decisions):
 
-* **Doc-local ops stay narrow.** ``clean_lines`` is ONE projection:
-  ``split`` → ``filter`` (array HOF) → ``array_join``. The HOF lambda
+* **Doc-local ops stay narrow.** ``with_clean_lines`` adds columns
+  to the caller's frame: ``split`` → ``filter`` (array HOF), and
+  ``clean_lines`` filters and ``array_join``s them. The HOF lambda
   is CodegenFallback (interpreted eval, ~10× on the expression —
   BENCH.md plan-shape rules), but the work is linear per row and the
   alternative — explode every line of a 100 TB corpus, shuffle it,
@@ -77,6 +78,29 @@ def line_keep_sql(name: str, min_words: int = MIN_WORDS_PER_LINE) -> str:
     )
 
 
+def with_clean_lines(
+    df: DataFrame,
+    text_col: str = "text",
+    min_words: int = MIN_WORDS_PER_LINE,
+    min_lines: int = MIN_KEPT_LINES,
+) -> DataFrame:
+    """``df`` plus the C4 page cleaning as two columns, zero shuffle:
+    ``c4_lines`` — the lines :func:`line_keep` keeps — and
+    ``c4_page_keep`` — false for a page containing 'lorem ipsum' (ci)
+    or '{', with < ``min_lines`` surviving lines, or with NULL text.
+    ``clean`` rewrites its text from these columns with no join."""
+    t = F.col(text_col)
+    kept = df.withColumn(
+        "c4_lines", F.filter(F.split(t, "\n"), lambda l: line_keep(l, min_words))
+    )
+    page = (
+        ~F.lower(t).contains("lorem ipsum")
+        & ~t.contains("{")
+        & (F.size("c4_lines") >= min_lines)
+    )
+    return kept.withColumn("c4_page_keep", F.coalesce(page, F.lit(False)))
+
+
 def clean_lines(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -84,31 +108,16 @@ def clean_lines(
     min_words: int = MIN_WORDS_PER_LINE,
     min_lines: int = MIN_KEPT_LINES,
 ) -> DataFrame:
-    """C4 page cleaning, one narrow projection (zero shuffle):
-    per-line filter (:func:`line_keep`) + page-level drops — any page
-    containing 'lorem ipsum' (ci) or '{', or with < ``min_lines``
-    surviving lines, is removed entirely.
-
-    Returns (id, n_lines, n_kept, text_clean) for surviving pages.
-    """
-    t = F.col(text_col)
-    lines = F.split(t, "\n")
-    base = df.select(
-        F.col(id_col),
-        F.size(lines).alias("n_lines"),
-        F.filter(lines, lambda l: line_keep(l, min_words)).alias("__kept"),
-        F.lower(t).contains("lorem ipsum").alias("__lorem"),
-        t.contains("{").alias("__brace"),
-    )
+    """C4 page cleaning: the pages :func:`with_clean_lines` keeps, as
+    (id, n_lines, n_kept, text_clean)."""
     return (
-        base.filter(
-            ~F.col("__lorem") & ~F.col("__brace") & (F.size("__kept") >= min_lines)
-        )
+        with_clean_lines(df.select(id_col, text_col), text_col, min_words, min_lines)
+        .filter("c4_page_keep")
         .select(
             id_col,
-            F.col("n_lines").cast("long").alias("n_lines"),
-            F.size("__kept").cast("long").alias("n_kept"),
-            F.array_join("__kept", "\n").alias("text_clean"),
+            F.size(F.split(text_col, "\n")).cast("long").alias("n_lines"),
+            F.size("c4_lines").cast("long").alias("n_kept"),
+            F.array_join("c4_lines", "\n").alias("text_clean"),
         )
     )
 

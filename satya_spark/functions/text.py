@@ -228,6 +228,90 @@ def fingerprint_sql(name: str) -> str:
 
 # --- repetition signals (Gopher-style quality rules) ------------------------
 
+def fresh_col(df, base: str) -> str:
+    """``base`` prefixed with underscores until no column of ``df``
+    matches it (case-insensitively, as the analyzer resolves names),
+    so a helper column never shadows a caller's column."""
+    taken = {c.lower() for c in df.columns}
+    while base.lower() in taken:
+        base = "_" + base
+    return base
+
+
+def token_chars(toks: Column) -> Column:
+    """Non-space characters of a ``tokens_ws`` array (the sum of its
+    token lengths; 0 for [])."""
+    return F.length(F.array_join(toks, ""))
+
+
+def ngram_stats(df, toks_col: str, id_col: str = "doc_id", ns=(2,)):
+    """Per-document word n-gram statistics for every size in ``ns``,
+    from ONE explode and one aggregation chain. For each ``n``:
+    ``ng{n}_top`` (count of the most frequent gram), ``ng{n}_count``
+    (grams in the doc), ``ng{n}_top_mass`` (max over grams of count ×
+    non-space chars) and ``ng{n}_dup_mass`` (that mass summed over
+    grams with count ≥ 2; NULL when none repeats).
+
+    Lambda-free: size ``n`` is an ``arrays_zip`` of ``n`` shifted
+    slices of the token array, padded to ``max(ns)`` fields with
+    ``array_repeat(NULL)`` and tagged with an ``array_repeat(n)``
+    field, so every size has one struct type, ``concat`` joins them
+    and ``concat_ws`` (which skips NULLs) builds the gram. Then
+    ``groupBy(id, n, gram)`` (map-side combine carries hot grams) →
+    ``groupBy(id, n)`` → ``groupBy(id)`` widen. Docs with no gram of
+    any size are absent; callers left-join by id."""
+    t, w = F.col(toks_col), max(ns)
+    null = F.lit(None).cast("string")
+
+    def zipped(n: int) -> Column:
+        # greatest(...,0): slice length must be non-negative under ANSI
+        c = F.greatest(F.size(t) - (n - 1), F.lit(0))
+        return F.arrays_zip(
+            F.array_repeat(F.lit(n), c).alias("n"),
+            *[F.slice(t, k, c).alias(f"t{k}") for k in range(1, n + 1)],
+            *[F.array_repeat(null, c).alias(f"t{k}") for k in range(n + 1, w + 1)],
+        )
+
+    z = F.concat(*[zipped(n) for n in ns]) if len(ns) > 1 else zipped(ns[0])
+    grams = df.select(F.col(id_col), F.explode(z).alias("__z")).select(
+        id_col,
+        F.col("__z.n").alias("__n"),
+        F.concat_ws(" ", *[F.col(f"__z.t{k}") for k in range(1, w + 1)]).alias("__g"),
+    )
+    counted = grams.groupBy(id_col, "__n", "__g").agg(F.count(F.lit(1)).alias("__c"))
+    # non-space chars of the gram = length minus its n-1 separators
+    m = F.col("__c") * (F.length("__g") - (F.col("__n") - 1))
+    per_n = counted.groupBy(id_col, "__n").agg(
+        F.max("__c").alias("top"),
+        F.sum("__c").alias("count"),
+        F.max(m).alias("top_mass"),
+        F.sum(F.when(F.col("__c") >= 2, m)).alias("dup_mass"),
+    )
+    return per_n.groupBy(id_col).agg(
+        *[
+            F.max(F.when(F.col("__n") == n, F.col(s))).alias(f"ng{n}_{s}")
+            for n in ns
+            for s in ("top", "count", "top_mass", "dup_mass")
+        ]
+    )
+
+
+def repetition_cols(toks: Column) -> dict:
+    """The :func:`with_repetition` signals as expressions over a token
+    array and the ``ng2_*`` columns of :func:`ngram_stats` (left-joined,
+    so a doc without bigrams reads NULL there)."""
+    n = F.size(toks).cast("long")
+    n_distinct = F.size(F.array_distinct(toks)).cast("long")
+    top, cnt = F.col("ng2_top"), F.col("ng2_count")
+    return {
+        "n_tokens": n,
+        "n_distinct": n_distinct,
+        "ttr": F.when(n > 0, F.round(n_distinct.cast("double") / n, 6)),
+        "top_bigram_count": F.coalesce(top, F.lit(0)).cast("long"),
+        "top_bigram_frac": F.when(cnt > 0, F.round(top.cast("double") / cnt, 6)),
+    }
+
+
 def with_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     """Per-document repetition signals for training-data filtering
     (the Gopher/MassiveText repetition rules re-expressed Spark-first):
@@ -237,58 +321,21 @@ def with_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
       codegen projection (``array_distinct`` is a regular expression,
       not a lambda HOF);
     * ``top_bigram_count`` / ``top_bigram_frac`` — the most frequent
-      bigram's share of all bigrams, computed DISTRIBUTED: bigrams via
-      ``arrays_zip`` of two shifted slices (no lambda HOF, stays in
-      codegen) → explode → map-side-combining groupBy(doc, bigram) →
-      per-doc max/sum → broadcast-friendly join back. Linear in corpus
-      size; never the per-row O(tokens²) array-scan shape that a
-      pure-expression version would force.
+      bigram's share of all bigrams, from :func:`ngram_stats` with
+      ``ns=(2,)`` (one explode, map-side-combining aggregation, left
+      join back by id) — linear in corpus size, never the per-row
+      O(tokens²) array-scan shape a pure-expression version would
+      force. ``clean`` reads the same columns off its shared n-gram
+      aggregation through :func:`repetition_cols`.
 
-    Ties on the top bigram resolve identically everywhere because only
-    the COUNT is reported, never an arbitrary winning bigram.
+    NULL text yields NULL token counts (the DuckDB twin agrees). Ties
+    on the top bigram resolve identically everywhere because only the
+    COUNT is reported, never an arbitrary winning bigram.
     """
-    t = tokens_ws(F.col(text_col))
-    per = df.select(F.col(id_col), t.alias("__t")).select(
-        id_col,
-        F.size("__t").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("__t")).cast("long").alias("n_distinct"),
-        "__t",
-    )
-    # greatest(...,0): slice length must be non-negative under ANSI
-    # even for empty/1-token docs
-    pairs = F.arrays_zip(
-        F.expr("slice(__t, 1, greatest(size(__t) - 1, 0))"),
-        F.expr("slice(__t, 2, greatest(size(__t) - 1, 0))"),
-    )
-    bg = per.select(F.col(id_col), F.explode(pairs).alias("p")).select(
-        id_col, F.concat_ws(" ", F.col("p")["0"], F.col("p")["1"]).alias("g")
-    )
-    top = (
-        bg.groupBy(id_col, "g")
-        .count()
-        .groupBy(id_col)
-        .agg(
-            F.max("count").alias("top_bigram_count"),
-            F.sum("count").alias("n_bigrams"),
-        )
-    )
-    n = F.col("n_tokens")
-    return per.join(top, id_col, "left").select(
-        id_col,
-        "n_tokens",
-        "n_distinct",
-        F.when(n > 0, F.round(F.col("n_distinct").cast("double") / n, 6)).alias(
-            "ttr"
-        ),
-        F.coalesce(F.col("top_bigram_count"), F.lit(0))
-        .cast("long")
-        .alias("top_bigram_count"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.round(
-                F.col("top_bigram_count").cast("double") / F.col("n_bigrams"), 6
-            ),
-        ).alias("top_bigram_frac"),
+    base = df.select(F.col(id_col), tokens_ws(F.col(text_col)).alias("__t"))
+    sig = repetition_cols(F.col("__t"))
+    return base.join(ngram_stats(base, "__t", id_col), id_col, "left").select(
+        id_col, *[c.alias(k) for k, c in sig.items()]
     )
 
 

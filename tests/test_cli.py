@@ -205,13 +205,14 @@ def test_cli_clean_corpus(spark, tmp_path):
         (3, "dup dup dup dup dup dup dup dup"),        # repetitive
         (4, "too short"),                               # < min tokens
         (5, "the quick brown fox jumps over the lazy dog tonight"),  # dup of 1
+        (6, None),                                      # NULL text: 0 tokens
     ]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
     out = str(tmp_path / "out")
     summary = _clean(
         src, out, "--min-tokens", "5", "--max-top-bigram", "0.5", "--dedup"
     )
-    assert summary["rows_in"] == 5
+    assert summary["rows_in"] == 6
     kept = {r["doc_id"]: r["text"] for r in spark.read.parquet(f"{out}/kept").collect()}
     dropped = {
         r["doc_id"]: sorted(r["drop_reasons"])
@@ -224,7 +225,8 @@ def test_cli_clean_corpus(spark, tmp_path):
     # is 100% of bigrams → repetitive too
     assert dropped[4] == ["repetitive", "too_short"]
     assert dropped[5] == ["duplicate"]
-    assert summary["rows_kept"] == 2 and summary["rows_dropped"] == 3
+    assert dropped[6] == ["too_short"]
+    assert summary["rows_kept"] == 2 and summary["rows_dropped"] == 4
 
 
 def test_cli_clean_decontam(spark, tmp_path):

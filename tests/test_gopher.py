@@ -112,7 +112,9 @@ def test_ngram_repetition_hand_computed(spark):
 
 def test_ngram_repetition_single_explode(spark):
     """All nine gram sizes must ride ONE Generate (explode) — nine
-    separate explodes would scan/shuffle the corpus nine times."""
+    separate explodes would scan/shuffle the corpus nine times — and
+    the gram building must be lambda-free (array lambdas are
+    CodegenFallback)."""
     df = spark.createDataFrame([(0, BODY)], ["doc_id", "text"])
     plan = (
         gopher_ngram_repetition(df)
@@ -121,3 +123,4 @@ def test_ngram_repetition_single_explode(spark):
         .toString()
     )
     assert plan.count("Generate explode") == 1, plan.count("Generate explode")
+    assert "lambdafunction" not in plan

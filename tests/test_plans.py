@@ -352,6 +352,37 @@ def test_ngram_lambdas_never_tokenize_per_element(spark):
             )
 
 
+def test_clean_frame_one_scan_one_join(spark, tmp_path, monkeypatch):
+    """``clean --gopher --c4-lines`` builds its per-document frame from
+    one input scan plus the shared n-gram aggregation joined back once:
+    the C4 verdict, the Gopher signals and every drop reason are
+    row-local columns, not frames joined back by id."""
+    import contextlib
+    import io
+
+    from satya_spark.__main__ import main
+
+    src, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog.\nclick here"), (2, None)],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    plans = []
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+
+    def record(self, *a, **k):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    with contextlib.redirect_stdout(io.StringIO()):
+        main(["clean", "--input", src, "--output", out, "--gopher", "--c4-lines"])
+    plan = plans[0]
+    assert plan.count("Relation [") <= 2, plan
+    assert plan.count("Join ") <= 1, plan
+
+
 def test_cap_per_group_windowgrouplimit_below_exchange(spark):
     """The per-domain cap's rank filters must compile to
     WindowGroupLimit nodes BELOW their exchanges — each map task
