@@ -5,14 +5,25 @@
         --schema schema.json            # JSON Schema (compiled to a spec)
         [--spec transcripts]            # or the built-in flagship spec
         --output /out                   # writes verdicts/ violations/
-        [--manifest /out/manifest]      # enables checkpoint-resume
+        [--quarantine]                  # + split/valid={true,false}/
+        [--manifest /out/manifest]      # resume by shard
+        [--file-manifest /out/files]    # or resume by input data file
         [--shards 64] [--sample-per-shard N]
 
 On a cluster:  spark-submit --py-files satya_spark.zip -m ... is the
 same entry point; locally it builds a session itself.
 
-Exit code: 0 if every shard passed, 3 if violations were found
-(pipeline-friendly), 2 on schema-policy errors.
+Both manifest flags validate only the units (shards, or parquet data
+files) the manifest does not record as done, write their outputs under
+``<output>/{verdicts,violations,split}/run_id=<id>/`` and then record
+them; the summary adds run_id, units_total, units_skipped and the
+manifest's recorded totals (see satya_spark.manifest: one writer per
+manifest).
+
+Exit code: 0 if every row validated by this run passed, 3 if
+violations were found (pipeline-friendly), 2 on schema-policy errors
+and for --file-manifest with --quarantine, --format ndjson or an input
+with no data file.
 
     python -m satya_spark triage --input /data/t.parquet \
         [--sample-n 3] [--top-n 10] \
@@ -44,58 +55,28 @@ def _build_spec(args):
 
 def _input_fingerprint(path: str) -> str:
     """Cheap content identity for resume scoping. Local paths digest
-    the sorted (name, size, mtime_ns, inode) listing ONLY — equivalent spellings
-    (./data vs /abs/data) resume each other. Non-local URIs (s3a://,
-    hdfs://, globs) have no cheap local stat, so the URI string itself
-    is the identity — different remote datasets never share a
-    fingerprint (same URI with mutated content is indistinguishable
-    here; on Iceberg the snapshot id plays this role)."""
+    the sorted stat entries of their data files ONLY
+    (``manifest.list_files``) — equivalent spellings (./data vs
+    /abs/data) resume each other. Non-local URIs (s3a://, hdfs://,
+    globs) have no cheap local stat, so the URI string itself is the
+    identity — different remote datasets never share a fingerprint
+    (same URI with mutated content is indistinguishable here; on
+    Iceberg the snapshot id plays this role)."""
     import hashlib
-    import os
 
-    # st_mtime_ns + st_ino (not whole-second mtime): a file rewritten
-    # in place with identical size within the same second must change
-    # the fingerprint, or resume silently skips shards over changed
-    # data (review r2)
-    entries = []
-    if os.path.isdir(path):
-        for root, _, files in os.walk(path):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                entries.append(
-                    f"{os.path.relpath(p, path)}:{st.st_size}"
-                    f":{st.st_mtime_ns}:{st.st_ino}"
-                )
-    elif os.path.exists(path):
-        st = os.stat(path)
-        entries.append(
-            f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}:{st.st_ino}"
-        )
-    else:
-        entries.append(f"uri:{path.rstrip('/')}")
-    return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()[:16]
+    from .manifest import list_files
 
-
-def _write_observed(frame, path: str, **aggs) -> dict:
-    """Write ``frame`` as parquet to ``path`` and return ``aggs``
-    (name -> aggregate Column) as observed on that write: summary
-    counts come from the pass that writes the rows, not a re-read."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    frame.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return obs.get
+    entries = sorted(list_files(path).values()) or [f"uri:{path.rstrip('/')}"]
+    return hashlib.md5("\n".join(entries).encode()).hexdigest()[:16]
 
 
 def cmd_validate(args) -> int:
-    from pyspark.sql import functions as F
+    import os
 
-    from .coerce import spark_type
+    from .coerce import coerce, spark_type
     from .engine import ValidationEngine
     from .io import read_ref
+    from .manifest import list_files
     from .session import get_spark
     from .sources.json_source import read_ndjson
 
@@ -105,12 +86,16 @@ def cmd_validate(args) -> int:
     eng = ValidationEngine(spec, n_shards=args.shards)
 
     if args.file_manifest:
-        # append-only incremental mode: validate only files absent
-        # from the file manifest (engine.run_incremental); exit code
-        # mirrors the full mode
-        summary = eng.run_incremental(spark, args.input, args.file_manifest)
-        print(json.dumps(summary))
-        return 0 if summary["passed"] else 3
+        files = list_files(args.input)
+        if args.quarantine or args.format != "parquet" or not files:
+            # file verdicts need input_file_name() of the input scan,
+            # which a split read back from disk has lost
+            print(
+                "validate --file-manifest needs a local parquet input with"
+                " data files, and no --quarantine",
+                file=sys.stderr,
+            )
+            return 2
 
     if args.format == "parquet":
         # read_ref: parquet path in the sandbox, Iceberg/catalog table
@@ -131,55 +116,36 @@ def cmd_validate(args) -> int:
         print(json.dumps({"schema_violations": schema_errors}))
         if any(e["constraint"] == "extra_field" for e in schema_errors):
             return 2
-    df = eng.conform(df)
 
-    if args.coerce:
-        from .coerce import coerce
+    def prepare(d):
+        d = eng.conform(d)
+        return coerce(d, spec) if args.coerce else d
 
-        df = coerce(df, spec)
-
-    if args.quarantine:
-        # the kernels run once, in the split write: verdicts read the
-        # split root, violation rows its valid=false side (an explicit
-        # schema, so a zero-row split with no partition directory
-        # reads as empty instead of failing schema inference)
-        split = eng.write_split(df, f"{args.output}/split")
-        schema = eng.annotate(df).drop("shard").schema
-        ann = spark.read.schema(schema).parquet(f"{args.output}/split")
-        bad = ann.filter(~F.col("valid"))
-    else:
-        ann = bad = eng.annotate(df)
-    if args.manifest:
-        verdicts = eng.run_resumable(
-            df, args.manifest, fingerprint=_input_fingerprint(args.input)
+    write = dict(quarantine=args.quarantine, sample_per_shard=args.sample_per_shard)
+    if args.file_manifest:
+        # basePath keeps the partition columns of a hive-partitioned
+        # input when only some of its files are read
+        base = args.input if os.path.isdir(args.input) else os.path.dirname(args.input)
+        reader = spark.read.option("basePath", base)
+        summary = eng.run_resumable(
+            lambda paths: prepare(reader.parquet(*paths)),
+            args.file_manifest,
+            args.output,
+            files=files,
+            **write,
+        )
+    elif args.manifest:
+        summary = eng.run_resumable(
+            prepare(df),
+            args.manifest,
+            args.output,
+            fingerprint=_input_fingerprint(args.input),
+            **write,
         )
     else:
-        verdicts = eng.shard_verdicts(ann)
-    counts = _write_observed(
-        verdicts,
-        f"{args.output}/verdicts",
-        shards=F.count(F.lit(1)),
-        rows=F.sum("n_rows"),
-        invalid=F.sum("n_invalid_rows"),
-    )
-
-    if args.sample_per_shard:
-        viol = eng.violations_sampled(bad, per_shard_cap=args.sample_per_shard)
-    else:
-        viol = eng.violations(bad)
-    viol.write.mode("overwrite").parquet(f"{args.output}/violations")
-
-    n_invalid = int(counts["invalid"] or 0)
-    summary = {
-        "rows": int(counts["rows"] or 0),
-        "invalid_rows": n_invalid,
-        "shards": counts["shards"],
-        "output": args.output,
-    }
-    if args.quarantine:
-        summary["split"] = split
+        summary = eng.write_outputs(prepare(df), args.output, **write)
     print(json.dumps(summary))
-    return 0 if n_invalid == 0 else 3
+    return 0 if summary["invalid_rows"] == 0 else 3
 
 
 def cmd_triage(args) -> int:
@@ -263,7 +229,7 @@ def cmd_clean(args) -> int:
     from .functions import gopher as gp
     from .functions import text as tx
     from .functions.pii import with_pii
-    from .io import read_ref
+    from .io import read_ref, write_observed
     from .session import get_spark
 
     spark = get_spark(app_name="satya-spark-clean")
@@ -413,8 +379,8 @@ def cmd_clean(args) -> int:
     )
     dropped = d.filter(~keep).drop("text_redacted")
     n = F.count(F.lit(1))
-    n_kept = _write_observed(kept, f"{args.output}/kept", n=n)["n"]
-    n_dropped = _write_observed(dropped, f"{args.output}/dropped", n=n)["n"]
+    n_kept = write_observed(kept, f"{args.output}/kept", n=n)["n"]
+    n_dropped = write_observed(dropped, f"{args.output}/dropped", n=n)["n"]
     print(
         json.dumps(
             {
@@ -438,11 +404,16 @@ def main(argv=None) -> int:
     v.add_argument("--schema", help="JSON Schema file (compiled to a spec)")
     v.add_argument("--spec", default="transcripts", help="built-in spec name")
     v.add_argument("--output", required=True)
-    v.add_argument("--manifest", help="manifest dir (enables resume)")
+    v.add_argument(
+        "--manifest",
+        help="manifest dir: resume by shard, writing outputs under "
+        "<output>/*/run_id=<id>/",
+    )
     v.add_argument(
         "--file-manifest",
         help="file-manifest dir: append-only incremental mode — "
-        "validate only new/changed parquet files (skips --output)",
+        "validate only new/changed parquet files, writing their outputs "
+        "under <output>/*/run_id=<id>/",
     )
     v.add_argument("--shards", type=int, default=64)
     v.add_argument("--sample-per-shard", type=int, default=0)

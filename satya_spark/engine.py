@@ -27,16 +27,23 @@ Outputs (all DataFrames, all lazy until written):
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Dict, Optional, Sequence
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import crossrow, drift
 from .compiler import CompiledSpec, compile_spec, explode_violations
-from .manifest import Manifest, new_run_id, pending_shards, shard_col
+from .io import write_observed
+from .manifest import Manifest, new_run_id, shard_col
 from .spec import TableSpec
 
 
@@ -155,12 +162,10 @@ class ValidationEngine:
         split, which carries the same ``violations`` column)."""
         return explode_violations(ann, list(self._keys() if keys is None else keys))
 
-    # --- stage 2: per-shard verdicts ------------------------------------
-    def shard_verdicts(self, ann: DataFrame) -> DataFrame:
-        """Per-shard pass/fail + counts of :meth:`annotate` output or
-        of a written split (the shard is recomputed from
-        ``shard_key``, so a split's missing ``shard`` column is no
-        obstacle). Verdict = no invalid rows in the shard. Counts-only
+    # --- stage 2: per-unit verdicts -------------------------------------
+    def _verdicts(self, ann: DataFrame, unit: Column, name: str) -> DataFrame:
+        """Pass/fail + counts per ``unit`` value of :meth:`annotate`
+        output. Verdict = no invalid rows in the unit. Counts-only
         aggregation → fully map-side combinable, one tiny shuffle.
 
         Plan-shape note: the violation count is evaluated in its OWN
@@ -170,12 +175,9 @@ class ValidationEngine:
         whole-stage codegen (~40× slower, measured at 3.4M rows); this
         structure keeps the scan→project→partial-agg pipeline fused.
         """
-        pre = ann.select(
-            shard_col(self.n_shards, self.shard_key).alias("shard"),
-            F.size("violations").alias("nv"),
-        )
+        pre = ann.select(unit.alias(name), F.size("violations").alias("nv"))
         return (
-            pre.groupBy("shard")
+            pre.groupBy(name)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum((F.col("nv") == 0).cast("long")).alias("n_valid"),
@@ -184,6 +186,21 @@ class ValidationEngine:
             )
             .withColumn("passed", F.col("n_invalid_rows") == 0)
         )
+
+    def shard_verdicts(self, ann: DataFrame) -> DataFrame:
+        """Per-shard verdicts of :meth:`annotate` output or of a
+        written split (the shard is recomputed from ``shard_key``, so a
+        split's missing ``shard`` column is no obstacle)."""
+        return self._verdicts(ann, shard_col(self.n_shards, self.shard_key), "shard")
+
+    def file_verdicts(self, ann: DataFrame) -> DataFrame:
+        """Per-input-file verdicts of :meth:`annotate` output —
+        physical lineage to complement the logical shard lineage
+        (north rule: 'per-partition lineage'); on Iceberg the _file
+        metadata column plays this role. ``ann`` must come straight
+        from a file scan: a split read back from disk names the split's
+        files, not the input's."""
+        return self._verdicts(ann, F.input_file_name(), "file")
 
     def enforce(self, df: DataFrame, sample_n: int = 20) -> DataFrame:
         """Validate-or-raise: return ``df`` untouched if every row
@@ -283,194 +300,197 @@ class ValidationEngine:
             null_rate=nulls,
         )
 
-    # --- resumable driver -------------------------------------------------
-    def run_resumable(
+    # --- one write path -------------------------------------------------
+    def write_outputs(
         self,
         df: DataFrame,
-        manifest_path: str,
-        catalogs: Optional[Dict[str, DataFrame]] = None,
+        output: str,
         run_id: Optional[str] = None,
-        fingerprint: str = "",
-        profile: bool = False,
-    ) -> DataFrame:
-        """Validate only shards absent from the manifest; append their
-        verdicts + metrics. Returns this run's shard verdicts.
+        unit: str = "shard",
+        quarantine: bool = False,
+        sample_per_shard: int = 0,
+    ) -> Dict[str, object]:
+        """Write per-``unit`` verdicts to ``<output>/verdicts`` and
+        violation rows to ``<output>/violations`` (capped per shard
+        with ``sample_per_shard``), plus, with ``quarantine``, the
+        :meth:`write_split` split to ``<output>/split``. With
+        ``run_id`` every output goes to its ``run_id=<id>/``
+        subdirectory. Returns the ``validate`` summary: rows,
+        invalid_rows, shards (verdict rows) and output, plus split.
 
-        A killed job restarts and reprocesses only unrecorded shards
-        (manifest writes are atomic per file). Idempotent: re-running
-        a fully recorded input validates nothing. Resume is scoped to
-        the EFFECTIVE fingerprint = caller's input fingerprint + a
-        hash of the compiled spec, so pointing the same manifest path
-        at different data or a changed spec re-validates instead of
-        silently skipping (round-1 advice).
-        """
-        spark = df.sparkSession
+        With ``quarantine`` the kernels run once, in the split write:
+        verdicts read the split root, violation rows its valid=false
+        side (an explicit schema, so a zero-row split with no
+        partition directory reads as empty instead of failing schema
+        inference). Without it, the verdicts write and the violations
+        write each evaluate them. The counts are observed on the
+        verdicts write, not re-read."""
+        if quarantine and unit == "file":
+            raise ValueError("file verdicts need the input scan; a split has lost it")
+        sub = f"/run_id={run_id}" if run_id else ""
+        if quarantine:
+            split = self.write_split(df, f"{output}/split{sub}")
+            schema = self.annotate(df).drop("shard").schema
+            ann = df.sparkSession.read.schema(schema).parquet(f"{output}/split{sub}")
+            bad = ann.filter(~F.col("valid"))
+        else:
+            ann = bad = self.annotate(df)
+        if unit == "file":
+            verdicts = self.file_verdicts(ann)
+        else:
+            verdicts = self.shard_verdicts(ann)
+        counts = write_observed(
+            verdicts,
+            f"{output}/verdicts{sub}",
+            shards=F.count(F.lit(1)),
+            rows=F.sum("n_rows"),
+            invalid=F.sum("n_invalid_rows"),
+        )
+        if sample_per_shard:
+            viol = self.violations_sampled(bad, per_shard_cap=sample_per_shard)
+        else:
+            viol = self.violations(bad)
+        viol.write.mode("overwrite").parquet(f"{output}/violations{sub}")
+        summary: Dict[str, object] = {
+            "rows": int(counts["rows"] or 0),
+            "invalid_rows": int(counts["invalid"] or 0),
+            "shards": counts["shards"],
+            "output": output,
+        }
+        if quarantine:
+            summary["split"] = split
+        return summary
+
+    # --- resumable runs ---------------------------------------------------
+    def unit_fingerprints(
+        self, fingerprint: str = "", files: Optional[Dict[str, str]] = None
+    ) -> Dict[str, str]:
+        """Unit -> scoped fingerprint, the identity a manifest row must
+        carry for its unit to count as done. Shard units share the
+        input's ``fingerprint`` plus the shard count and key that
+        define them; file units (``files``: path -> stat entry, see
+        :func:`satya_spark.manifest.list_files`) carry their own.
+
+        Every fingerprint ends with the compiled spec's hash and, with
+        a context, its digest: a non-SQL row rule's behavior can
+        depend solely on context, which spec_hash (built from the SQL
+        twins) cannot see. Pointing a manifest at different data, a
+        changed spec or another context re-validates instead of
+        silently skipping."""
+        scope = f"spec:{self.compiled.spec_hash()}"
+        if self.context:
+            ctx = json.dumps(self.context, sort_keys=True, default=repr)
+            scope += "|ctx:" + hashlib.md5(ctx.encode()).hexdigest()[:12]
+        if files is not None:
+            return {f: f"{fp}|{scope}" for f, fp in files.items()}
+        shards = f"{fingerprint}|shards:{self.n_shards}:{self.shard_key}|{scope}"
+        return {str(s): shards for s in range(self.n_shards)}
+
+    def run_resumable(
+        self,
+        df,
+        manifest_path: str,
+        output: str,
+        fingerprint: str = "",
+        files: Optional[Dict[str, str]] = None,
+        run_id: Optional[str] = None,
+        quarantine: bool = False,
+        sample_per_shard: int = 0,
+        profile: bool = False,
+    ) -> Dict[str, object]:
+        """Validate only the units the manifest does not record as done:
+        write their outputs with :meth:`write_outputs` under
+        ``run_id=<id>/``, then commit them to the manifest. Returns the
+        write_outputs summary plus run_id, units_total, units_skipped
+        and recorded (units, rows and invalid rows the manifest holds
+        for this scope, this run included).
+
+        Shard units (default): ``df`` is the input frame and
+        ``fingerprint`` identifies it. File units: ``files`` maps each
+        data file of the input to its stat entry and ``df`` is a
+        function from a list of those files to the frame of their
+        rows, so only pending files are read.
+
+        The manifest append is the commit (see :mod:`manifest`): a
+        killed run leaves outputs no manifest row records, and the
+        next run deletes them and recomputes exactly the unrecorded
+        units. Every pending unit is recorded, also one without rows,
+        so an empty file is not re-read by every later run. A fully
+        recorded input reads and writes nothing (``split`` is then
+        None). ``profile`` stores :meth:`profile_kernels` of the run
+        on its first manifest row (the stats are whole-run, not
+        per-unit)."""
+        spark = SparkSession.active()
         manifest = Manifest(spark, manifest_path)
         run_id = run_id or new_run_id()
-        # context participates too: a non-SQL row rule's behavior can
-        # depend solely on context, which spec_hash (built from the
-        # SQL twins) cannot see
-        ctx_part = ""
-        if self.context:
-            import hashlib
-            import json as _json
-
-            ctx_part = "|ctx:" + hashlib.md5(
-                _json.dumps(self.context, sort_keys=True, default=repr).encode()
-            ).hexdigest()[:12]
-        fingerprint = f"{fingerprint}|spec:{self.compiled.spec_hash()}{ctx_part}"
-
-        with_shard = df.withColumn("shard", shard_col(self.n_shards, self.shard_key))
-        todo = pending_shards(with_shard, manifest, fingerprint).drop("shard")
-        annotated = self.annotate(todo)
-        t0 = time.monotonic()
-        verdicts = self.shard_verdicts(annotated).collect()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        now_ms = int(time.time() * 1000)
-        # run-scope profile: computed once over ALL pending shards and
-        # stored on ONE manifest row (the stats are whole-run, not
-        # per-shard — duplicating the blob n_shards times would both
-        # bloat the manifest and misread as per-shard numbers)
-        profile_json = None
-        if profile and verdicts:
-            import json as _json
-
-            profile_json = _json.dumps(self.profile_kernels(todo))
-        manifest.append(
-            [
-                {
-                    "run_id": run_id,
-                    "shard": int(r["shard"]),
-                    "n_rows": int(r["n_rows"]),
-                    "n_valid": int(r["n_valid"]),
-                    "n_invalid_rows": int(r["n_invalid_rows"]),
-                    "n_rule_violations": int(r["n_rule_violations"]),
-                    "wall_ms": wall_ms,
-                    "input_fingerprint": fingerprint,
-                    "completed_at_ms": now_ms,
-                    "profile": profile_json if i == 0 else None,
-                }
-                for i, r in enumerate(verdicts)
-            ]
-        )
-        return manifest.read().filter(F.col("run_id") == run_id)
-
-    def run_incremental(
-        self,
-        spark: SparkSession,
-        input_path: str,
-        file_manifest_path: str,
-        run_id: Optional[str] = None,
-    ) -> Dict[str, object]:
-        """Append-only incremental validation: the unit of skip is a
-        physical data FILE. List the input's parquet files,
-        fingerprint each (name+size+mtime_ns+inode), read ONLY the
-        files absent from the file manifest, validate them, and
-        append their per-file verdicts. The spec hash scopes the skip
-        set like run_resumable's fingerprint: a changed spec
-        re-validates everything.
-
-        This is the daily-drop operating mode at 10^12 turns: new
-        partitions are validated as they land and the historical
-        corpus is never re-read. On Iceberg the listing+diff is an
-        incremental snapshot scan (``(file_path, snapshot_id)``
-        lineage); the local directory listing stands in here.
-
-        Returns a summary dict: run_id, files_total, files_skipped,
-        files_validated, n_rows, n_invalid_rows, passed.
-        """
-        import os as _os
-
-        from .manifest import FileManifest, file_fingerprint
-
-        manifest = FileManifest(spark, file_manifest_path)
-        run_id = run_id or new_run_id()
-        spec_h = self.compiled.spec_hash()
-        paths = sorted(
-            _os.path.join(input_path, f)
-            for f in _os.listdir(input_path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        fps = {p: f"{file_fingerprint(p)}|spec:{spec_h}" for p in paths}
-        done = manifest.validated_fingerprints()
-        todo = [p for p in paths if fps[p] not in done]
+        unit = "shard" if files is None else "file"
+        fps = self.unit_fingerprints(fingerprint, files)
+        done = manifest.recorded(fps)
+        todo = sorted(set(fps) - set(done))
         summary: Dict[str, object] = {
-            "run_id": run_id,
-            "files_total": len(paths),
-            "files_skipped": len(paths) - len(todo),
-            "files_validated": len(todo),
-            "n_rows": 0,
-            "n_invalid_rows": 0,
-            "passed": True,
+            "rows": 0, "invalid_rows": 0, "shards": 0, "output": output
         }
-        if not todo:
-            return summary
-        df = spark.read.parquet(*todo)
-        verdicts = self.file_verdicts(df).collect()
-        # input_file_name() yields a URI (file:///...); key by realpath
-        by_real = {_os.path.realpath(p): p for p in todo}
-
-        def _local(uri: str) -> str:
-            from urllib.parse import unquote, urlparse
-
-            return _os.path.realpath(unquote(urlparse(uri).path))
-
-        now_ms = int(time.time() * 1000)
+        if quarantine:
+            summary["split"] = None
         rows = []
-        for r in verdicts:
-            p = by_real[_local(r["file"])]
-            rows.append(
-                {
-                    "run_id": run_id,
-                    "file": p,
-                    "file_fingerprint": fps[p],
-                    "n_rows": int(r["n_rows"]),
-                    "n_valid": int(r["n_valid"]),
-                    "n_invalid_rows": int(r["n_invalid_rows"]),
-                    "passed": bool(r["passed"]),
-                    "completed_at_ms": now_ms,
-                }
+        if todo:
+            committed = manifest.run_ids()
+            for name in ("verdicts", "violations", "split"):
+                for d in glob.glob(f"{glob.escape(output)}/{name}/run_id=*"):
+                    if d.rsplit("run_id=", 1)[1] not in committed:
+                        shutil.rmtree(d)
+            if unit == "shard":
+                shard = shard_col(self.n_shards, self.shard_key)
+                part = df.filter(shard.isin([int(u) for u in todo]))
+            else:
+                part = df(todo)
+            t0 = time.monotonic()
+            summary = self.write_outputs(
+                part, output, run_id, unit, quarantine, sample_per_shard
             )
-        # zero-row files produce no verdict row; record them anyway or
-        # they'd be re-listed (and re-read) on every subsequent run
-        seen = {r["file"] for r in rows}
-        for p in todo:
-            if p not in seen:
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            # at most one verdict row per pending unit; a file verdict
+            # names an input_file_name() URI, list_files keys real paths
+            verdicts = spark.read.parquet(f"{output}/verdicts/run_id={run_id}")
+            written = {
+                str(r["shard"])
+                if unit == "shard"
+                else os.path.realpath(unquote(urlparse(r["file"]).path)): r
+                for r in verdicts.collect()
+            }
+            stray = set(written) - set(todo)
+            if stray:
+                # rows the manifest would not count: fail before the commit
+                raise RuntimeError(f"verdicts of units not pending: {stray}")
+            prof = json.dumps(self.profile_kernels(part)) if profile else None
+            counts = ("n_rows", "n_valid", "n_invalid_rows", "n_rule_violations")
+            now_ms = int(time.time() * 1000)
+            for u in todo:
+                r = written.get(u)
                 rows.append(
                     {
                         "run_id": run_id,
-                        "file": p,
-                        "file_fingerprint": fps[p],
-                        "n_rows": 0,
-                        "n_valid": 0,
-                        "n_invalid_rows": 0,
-                        "passed": True,
+                        "unit": u,
+                        "fingerprint": fps[u],
+                        **{c: int(r[c]) if r else 0 for c in counts},
+                        "wall_ms": wall_ms,
                         "completed_at_ms": now_ms,
+                        "profile": None if rows else prof,
                     }
                 )
-        manifest.append(rows)
-        summary["n_rows"] = sum(r["n_rows"] for r in rows)
-        summary["n_invalid_rows"] = sum(r["n_invalid_rows"] for r in rows)
-        summary["passed"] = all(r["passed"] for r in rows)
+            manifest.append(rows)
+        recorded = list(done.values()) + rows
+        summary.update(
+            run_id=run_id,
+            units_total=len(fps),
+            units_skipped=len(done),
+            recorded={
+                "units": len(recorded),
+                "rows": sum(r["n_rows"] for r in recorded),
+                "invalid_rows": sum(r["n_invalid_rows"] for r in recorded),
+            },
+        )
         return summary
-
-    def file_verdicts(self, df: DataFrame) -> DataFrame:
-        """Per-input-file verdicts — physical lineage to complement
-        the logical shard lineage (north rule: 'per-partition
-        lineage'); on Iceberg the _file metadata column plays this
-        role. Same fused plan shape as shard_verdicts."""
-        pre = self.annotate(df).select(
-            F.input_file_name().alias("file"), F.size("violations").alias("nv")
-        )
-        return (
-            pre.groupBy("file")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.col("nv") == 0).cast("long")).alias("n_valid"),
-                F.sum((F.col("nv") > 0).cast("long")).alias("n_invalid_rows"),
-            )
-            .withColumn("passed", F.col("n_invalid_rows") == 0)
-        )
 
     def violations_sampled(
         self, ann: DataFrame, per_shard_cap: int = 10_000

@@ -56,6 +56,19 @@ def read_split(
     return df.filter(df["valid"] == (side == "clean"))
 
 
+def write_observed(frame: DataFrame, path: str, **aggs) -> dict:
+    """Write ``frame`` as parquet to ``path`` and return ``aggs``
+    (name -> aggregate Column) as observed on that write: summary
+    counts come from the pass that writes the rows, not a re-read."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    frame.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get
+
+
 # --- Iceberg (the north rule's named deployment target) -------------------
 
 ICEBERG_EXTENSION = (

@@ -82,17 +82,27 @@ def test_cli_resume_via_manifest(spark, tmp_path):
 
     inp = str(tmp_path / "in.parquet")
     synthesize(spark, 200).write.parquet(inp)
-    out1, out2 = str(tmp_path / "o1"), str(tmp_path / "o2")
+    out = str(tmp_path / "o")
     man = str(tmp_path / "manifest")
-    r1 = _cli("validate", "--input", inp, "--output", out1,
+    r1 = _cli("validate", "--input", inp, "--output", out,
               "--manifest", man, "--shards", "8")
     assert r1.returncode == 3
-    # second run: everything already validated -> zero new rows
-    r2 = _cli("validate", "--input", inp, "--output", out2,
+    s1 = json.loads(r1.stdout.strip().splitlines()[-1])
+    viol1 = spark.read.parquet(f"{out}/violations").collect()
+    assert len(viol1) > 0 and {r["run_id"] for r in viol1} == {s1["run_id"]}
+    # second run into the same --output: everything already validated
+    # -> zero new rows, and run 1's violation rows are still there
+    r2 = _cli("validate", "--input", inp, "--output", out,
               "--manifest", man, "--shards", "8")
     s2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert s2["rows"] == 0 and r2.returncode == 0
     assert s2["shards"] == 0 and s2["invalid_rows"] == 0
+    assert s2["units_skipped"] == s2["units_total"] == 8
+    assert s2["recorded"] == {
+        "units": 8, "rows": s1["rows"], "invalid_rows": s1["invalid_rows"]
+    }
+    viol2 = spark.read.parquet(f"{out}/violations").collect()
+    assert sorted(map(tuple, viol2)) == sorted(map(tuple, viol1))
 
 
 def test_input_fingerprint_distinguishes_remote_uris():
@@ -297,8 +307,11 @@ def test_cli_clean_c4_and_gopher(spark, tmp_path):
 
 
 def test_cli_validate_incremental(spark, tmp_path):
-    """validate --file-manifest: second run over unchanged input
-    validates zero files."""
+    """validate --file-manifest: the first run writes verdicts and
+    violations per file, a second run over unchanged input validates
+    zero files. A hive-partitioned input is listed recursively and
+    keeps its partition column; --quarantine, --format ndjson and an
+    input without data files exit 2."""
     import json as _json
 
     from satya_spark.transcripts import synthesize
@@ -306,16 +319,42 @@ def test_cli_validate_incremental(spark, tmp_path):
     inp = str(tmp_path / "in")
     synthesize(spark, 100).coalesce(2).write.parquet(inp)
     fm = str(tmp_path / "fm")
-    out = str(tmp_path / "out")  # unused in incremental mode but required
+    out = str(tmp_path / "out")
     r1 = _cli("validate", "--input", inp, "--output", out, "--file-manifest", fm)
     s1 = _json.loads(r1.stdout.strip().splitlines()[-1])
     assert r1.returncode == 3, r1.stderr[-1500:]  # planted violations
-    assert s1["files_validated"] == s1["files_total"] >= 2
+    assert s1["units_skipped"] == 0 and s1["units_total"] >= 2
+    assert spark.read.parquet(f"{out}/violations").count() > 0
+    assert spark.read.parquet(f"{out}/verdicts").count() == s1["units_total"]
     r2 = _cli("validate", "--input", inp, "--output", out, "--file-manifest", fm)
     s2 = _json.loads(r2.stdout.strip().splitlines()[-1])
-    assert s2["files_validated"] == 0
-    assert s2["files_skipped"] == s1["files_total"]
+    assert s2["units_total"] - s2["units_skipped"] == 0
+    assert s2["units_skipped"] == s1["units_total"]
     assert r2.returncode == 0  # nothing validated -> nothing failed
+
+    # hive-partitioned input: the files sit one directory down
+    part = str(tmp_path / "part")
+    synthesize(spark, 100).write.partitionBy("role").parquet(part)
+    pout = str(tmp_path / "pout")
+    r3 = _cli("validate", "--input", part, "--output", pout,
+              "--file-manifest", str(tmp_path / "pfm"))
+    assert r3.returncode == 3, r3.stderr[-1500:]
+    s3 = _json.loads(r3.stdout.strip().splitlines()[-1])
+    plain = _cli("validate", "--input", part, "--output", str(tmp_path / "plain"))
+    s_plain = _json.loads(plain.stdout.strip().splitlines()[-1])
+    # a lost partition column would read as NULL and fail every row
+    assert s3["rows"] == s_plain["rows"]
+    assert s3["invalid_rows"] == s_plain["invalid_rows"]
+
+    for bad in (["--quarantine"], ["--format", "ndjson"]):
+        r = _cli("validate", "--input", inp, "--output", str(tmp_path / "x"),
+                 "--file-manifest", str(tmp_path / "xfm"), *bad)
+        assert r.returncode == 2, (bad, r.stderr[-1500:])
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    r = _cli("validate", "--input", str(empty), "--output", str(tmp_path / "x"),
+             "--file-manifest", str(tmp_path / "xfm"))
+    assert r.returncode == 2, r.stderr[-1500:]
 
 
 def test_cli_clean_near_dedup(spark, tmp_path):

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from satya_spark.engine import ValidationEngine
-from satya_spark.manifest import Manifest, shard_col
+from satya_spark.manifest import Manifest, list_files, shard_col
 from satya_spark.spec import transcript_spec
 from satya_spark.transcripts import synthesize
 
@@ -19,6 +19,7 @@ def test_resume_skips_validated_shards(spark, tmp_path):
     total_rows = df.count()
 
     mpath = str(tmp_path / "manifest")
+    out = str(tmp_path / "out")
     # simulate a killed job: pretend shards 0..3 are already validated
     pre = Manifest(spark, mpath)
     with_shard = df.withColumn("shard", shard_col(8))
@@ -26,40 +27,47 @@ def test_resume_skips_validated_shards(spark, tmp_path):
         r["shard"]: r["n"]
         for r in with_shard.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()
     }
+    # resume is scoped: records only count when their fingerprint
+    # matches this run's (input fp + shard layout + spec hash)
+    fps = eng.unit_fingerprints()
     pre.append(
         [
             {
                 "run_id": "run0",
-                "shard": s,
+                "unit": str(s),
+                "fingerprint": fps[str(s)],
                 "n_rows": done_counts.get(s, 0),
                 "n_valid": 0,
                 "n_invalid_rows": 0,
                 "n_rule_violations": 0,
                 "wall_ms": 0,
-                # resume is scoped: records only count when their
-                # fingerprint matches this run's (input fp + spec hash)
-                "input_fingerprint": f"|spec:{eng.compiled.spec_hash()}",
                 "completed_at_ms": 0,
             }
             for s in range(4)
         ]
     )
 
-    out = eng.run_resumable(df, mpath, run_id="run1")
-    shards_run1 = {r["shard"] for r in out.collect()}
+    s1 = eng.run_resumable(df, mpath, out, run_id="run1")
+    m = Manifest(spark, mpath).read()
+    run1 = m.filter(F.col("run_id") == "run1").collect()
+    shards_run1 = {int(r["unit"]) for r in run1}
     assert shards_run1.isdisjoint(set(range(4)))
+    assert s1["units_skipped"] == 4 and s1["rows"] == total_rows - sum(
+        done_counts.get(s, 0) for s in range(4)
+    )
 
     # exactly-once coverage: every shard recorded exactly once overall
-    m = Manifest(spark, mpath).read()
-    per_shard = m.groupBy("shard").count().collect()
-    assert {r["shard"] for r in per_shard} == set(range(8))
+    per_shard = m.groupBy("unit").count().collect()
+    assert {int(r["unit"]) for r in per_shard} == set(range(8))
     assert all(r["count"] == 1 for r in per_shard)
     # and row counts add up to the full input
     assert m.agg(F.sum("n_rows")).collect()[0][0] == total_rows
+    assert s1["recorded"]["rows"] == total_rows
 
     # idempotent: a third run validates nothing new
-    out2 = eng.run_resumable(df, mpath, run_id="run2")
-    assert out2.count() == 0
+    s2 = eng.run_resumable(df, mpath, out, run_id="run2")
+    assert s2["shards"] == 0 and s2["units_skipped"] == 8
+    assert Manifest(spark, mpath).run_ids() == {"run0", "run1"}
     df.unpersist()
 
 
@@ -67,7 +75,7 @@ def test_file_verdicts_lineage(spark, tmp_path):
     eng = ValidationEngine(transcript_spec())
     path = str(tmp_path / "t")
     synthesize(spark, 200).repartition(4).write.parquet(path)
-    out = eng.file_verdicts(spark.read.parquet(path)).collect()
+    out = eng.file_verdicts(eng.annotate(spark.read.parquet(path))).collect()
     assert len(out) == 4  # one verdict row per physical file
     assert all(r["file"].endswith(".parquet") for r in out)
     assert sum(r["n_rows"] for r in out) == spark.read.parquet(path).count()
@@ -88,25 +96,54 @@ def test_violations_sampled_cap_visible(spark):
 
 def test_manifest_atomic_append_visible(spark, tmp_path):
     m = Manifest(spark, str(tmp_path / "m2"))
-    assert m.completed_shards() == set()
+    assert m.recorded({"3": "x"}) == {}
     m.append(
         [
             {
                 "run_id": "r",
-                "shard": 3,
+                "unit": "3",
+                "fingerprint": "x",
                 "n_rows": 10,
                 "n_valid": 10,
                 "n_invalid_rows": 0,
                 "n_rule_violations": 0,
                 "wall_ms": 5,
-                "input_fingerprint": "x",
                 "completed_at_ms": 1,
             }
         ]
     )
-    assert m.completed_shards() == {3}
+    assert set(m.recorded({"3": "x"})) == {"3"}
+    assert m.recorded({"3": "y"}) == {}  # another scope: not done
     row = m.read().collect()[0]
     assert row["n_rows"] == 10 and row["run_id"] == "r"
+
+
+def test_old_format_manifest_revalidates(spark, tmp_path):
+    """A manifest written in the older per-unit formats (``shard`` +
+    ``input_fingerprint``, or ``file`` + ``file_fingerprint``) loads,
+    and its rows skip nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mpath = tmp_path / "m"
+    mpath.mkdir()
+    eng = ValidationEngine(transcript_spec(), n_shards=4)
+    fp = f"in|spec:{eng.compiled.spec_hash()}"
+    pq.write_table(
+        pa.table({"run_id": ["old"] * 4, "shard": pa.array(range(4), pa.int32()),
+                  "n_rows": [1] * 4, "input_fingerprint": [fp] * 4}),
+        mpath / "manifest-old.parquet",
+    )
+    pq.write_table(
+        pa.table({"run_id": ["old"], "file": ["f"], "file_fingerprint": [fp],
+                  "passed": [True]}),
+        mpath / "files-old.parquet",
+    )
+    assert Manifest(spark, str(mpath)).read().count() == 5
+    s = eng.run_resumable(
+        synthesize(spark, n_conv=40), str(mpath), str(tmp_path / "out"), "in"
+    )
+    assert s["units_skipped"] == 0 and s["shards"] == 4
 
 
 def test_resume_scoped_to_fingerprint(spark, tmp_path):
@@ -115,18 +152,18 @@ def test_resume_scoped_to_fingerprint(spark, tmp_path):
     prior run at the same manifest path."""
     eng = ValidationEngine(transcript_spec(), n_shards=4)
     df = synthesize(spark, n_conv=60).cache()
-    mpath = str(tmp_path / "m")
+    mpath, out = str(tmp_path / "m"), str(tmp_path / "out")
 
-    first = eng.run_resumable(df, mpath, run_id="r1", fingerprint="inputA")
-    assert first.count() == 4
+    first = eng.run_resumable(df, mpath, out, run_id="r1", fingerprint="inputA")
+    assert first["shards"] == 4
 
     # same input -> fully resumed, nothing re-validated
-    again = eng.run_resumable(df, mpath, run_id="r2", fingerprint="inputA")
-    assert again.count() == 0
+    again = eng.run_resumable(df, mpath, out, run_id="r2", fingerprint="inputA")
+    assert again["shards"] == 0
 
     # different input fingerprint -> all shards re-validated
-    other = eng.run_resumable(df, mpath, run_id="r3", fingerprint="inputB")
-    assert other.count() == 4
+    other = eng.run_resumable(df, mpath, out, run_id="r3", fingerprint="inputB")
+    assert other["shards"] == 4
 
     # changed spec (different compiled hash) -> re-validated too
     from satya_spark.spec import FieldSpec, TableSpec
@@ -139,8 +176,13 @@ def test_resume_scoped_to_fingerprint(spark, tmp_path):
         ),
         n_shards=4,
     )
-    changed = eng2.run_resumable(df, mpath, run_id="r4", fingerprint="inputA")
-    assert changed.count() == 4
+    changed = eng2.run_resumable(df, mpath, out, run_id="r4", fingerprint="inputA")
+    assert changed["shards"] == 4
+
+    # another shard count partitions the input differently -> re-validated
+    eng8 = ValidationEngine(transcript_spec(), n_shards=8)
+    resharded = eng8.run_resumable(df, mpath, out, run_id="r5", fingerprint="inputA")
+    assert resharded["units_skipped"] == 0 and resharded["shards"] == 8
     df.unpersist()
 
 
@@ -151,10 +193,11 @@ def test_manifest_carries_kernel_profile(spark, tmp_path):
 
     eng = ValidationEngine(transcript_spec(), n_shards=4)
     df = synthesize(spark, n_conv=50)
-    out = eng.run_resumable(
-        df, str(tmp_path / "m"), run_id="p1", fingerprint="in", profile=True
+    mpath = str(tmp_path / "m")
+    eng.run_resumable(
+        df, mpath, str(tmp_path / "out"), run_id="p1", fingerprint="in", profile=True
     )
-    rows = out.collect()
+    rows = Manifest(spark, mpath).read().collect()
     # run-scope stats live on exactly ONE row (not duplicated per shard)
     carrying = [r for r in rows if r["profile"]]
     assert len(carrying) == 1
@@ -170,7 +213,8 @@ def test_manifest_carries_kernel_profile(spark, tmp_path):
 
 def test_resume_scoped_to_row_rule_context(spark, tmp_path):
     """review r2: context-only rule changes (no SQL twin) must not
-    resume over verdicts computed under a different context."""
+    resume over verdicts computed under a different context — for
+    shard units and for file units alike."""
     from pyspark.sql import functions as F
 
     from satya_spark.spec import FieldSpec, RowRule, TableSpec
@@ -184,19 +228,38 @@ def test_resume_scoped_to_row_rule_context(spark, tmp_path):
         ),
     )
     df = synthesize(spark, n_conv=40).select("conv_id")
-    m = str(tmp_path / "m")
-    first = ValidationEngine(spec, n_shards=4, context={"max_len": 2}).run_resumable(
-        df, m, run_id="c1", fingerprint="in"
-    )
-    assert first.count() == 4
-    # same context -> resumes; different context -> re-validates
-    same = ValidationEngine(spec, n_shards=4, context={"max_len": 2}).run_resumable(
-        df, m, run_id="c2", fingerprint="in"
-    )
-    other = ValidationEngine(spec, n_shards=4, context={"max_len": 99}).run_resumable(
-        df, m, run_id="c3", fingerprint="in"
-    )
-    assert same.count() == 0 and other.count() == 4
+    inp = str(tmp_path / "in")
+    df.coalesce(2).write.parquet(inp)
+    units = {
+        "shard": (df, {"fingerprint": "in"}),
+        "file": (lambda ps: spark.read.parquet(*ps), {"files": list_files(inp)}),
+    }
+    for unit, (src, kw) in units.items():
+        m, out = str(tmp_path / f"m_{unit}"), str(tmp_path / f"out_{unit}")
+
+        def run(max_len, run_id):
+            eng = ValidationEngine(spec, n_shards=4, context={"max_len": max_len})
+            return eng.run_resumable(src, m, out, run_id=run_id, **kw)
+
+        first = run(2, "c1")
+        assert first["shards"] == first["units_total"] == {"shard": 4, "file": 2}[unit]
+        assert first["invalid_rows"] > 0
+        # same context -> resumes; different context -> re-validates
+        same, other = run(2, "c2"), run(99, "c3")
+        assert same["shards"] == 0 and other["shards"] == first["shards"], unit
+        assert other["rows"] == first["rows"]
+        assert other["invalid_rows"] < first["invalid_rows"]
+
+
+def _drop_file(spark, stage, n_conv, dest):
+    """Write ``n_conv`` synthesized conversations as ONE parquet file
+    at ``dest``."""
+    import os
+    import shutil
+
+    synthesize(spark, n_conv).coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+    shutil.copy(f"{stage}/{part}", dest)
 
 
 def test_run_incremental_append_only(spark, tmp_path):
@@ -205,75 +268,152 @@ def test_run_incremental_append_only(spark, tmp_path):
     in-place rewrite re-validates the rewritten file."""
     import shutil
 
-    from satya_spark.engine import ValidationEngine
-    from satya_spark.manifest import FileManifest
-    from satya_spark.spec import transcript_spec
-    from satya_spark.transcripts import synthesize
-
     inp = tmp_path / "inp"
     inp.mkdir()
-    mpath = str(tmp_path / "fm")
+    mpath, out = str(tmp_path / "fm"), str(tmp_path / "out")
     # two initial "daily drop" files
     stage = str(tmp_path / "stage")
-    synthesize(spark, 80).coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(p for p in __import__("os").listdir(stage) if p.endswith(".parquet"))
-    shutil.copy(f"{stage}/{part}", inp / "day1.parquet")
-    synthesize(spark, 40).coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(p for p in __import__("os").listdir(stage) if p.endswith(".parquet"))
-    shutil.copy(f"{stage}/{part}", inp / "day2.parquet")
+    _drop_file(spark, stage, 80, inp / "day1.parquet")
+    _drop_file(spark, stage, 40, inp / "day2.parquet")
 
     eng = ValidationEngine(transcript_spec())
-    s1 = eng.run_incremental(spark, str(inp), mpath)
-    assert (s1["files_total"], s1["files_validated"], s1["files_skipped"]) == (2, 2, 0)
-    assert s1["n_rows"] > 0
+
+    def run():
+        return eng.run_resumable(
+            lambda ps: spark.read.parquet(*ps), mpath, out, files=list_files(str(inp))
+        )
+
+    def validated(s):
+        return s["units_total"] - s["units_skipped"]
+
+    s1 = run()
+    assert (s1["units_total"], validated(s1), s1["units_skipped"]) == (2, 2, 0)
+    assert s1["rows"] > 0
 
     # idempotent re-run: nothing to do
-    s2 = eng.run_incremental(spark, str(inp), mpath)
-    assert (s2["files_validated"], s2["files_skipped"]) == (0, 2)
+    s2 = run()
+    assert (validated(s2), s2["units_skipped"]) == (0, 2)
 
     # third drop arrives: only it is validated
-    synthesize(spark, 20).coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(p for p in __import__("os").listdir(stage) if p.endswith(".parquet"))
-    shutil.copy(f"{stage}/{part}", inp / "day3.parquet")
-    s3 = eng.run_incremental(spark, str(inp), mpath)
-    assert (s3["files_validated"], s3["files_skipped"]) == (1, 2)
+    _drop_file(spark, stage, 20, inp / "day3.parquet")
+    s3 = run()
+    assert (validated(s3), s3["units_skipped"]) == (1, 2)
 
     # in-place rewrite changes the fingerprint -> re-validated
+    part = next(p for p in __import__("os").listdir(stage) if p.endswith(".parquet"))
     shutil.copy(f"{stage}/{part}", inp / "day1.parquet")
-    s4 = eng.run_incremental(spark, str(inp), mpath)
-    assert s4["files_validated"] == 1
+    s4 = run()
+    assert validated(s4) == 1
 
     # manifest accumulates one row per validated (file, fingerprint):
     # 2 (initial) + 1 (day3) + 1 (day1 rewrite)
-    fm = FileManifest(spark, mpath)
-    assert fm.read().count() == 4
+    assert Manifest(spark, mpath).read().count() == 4
 
 
 def test_run_incremental_spec_scoped(spark, tmp_path):
     """A changed spec must re-validate recorded files (the skip set
     is scoped to the spec hash, like shard resume)."""
-    from satya_spark.engine import ValidationEngine
     from satya_spark.spec import FieldSpec, TableSpec
-    from satya_spark.transcripts import synthesize
 
     inp = str(tmp_path / "inp")
     synthesize(spark, 30).coalesce(1).write.parquet(inp)
-    mpath = str(tmp_path / "fm")
+    mpath, out = str(tmp_path / "fm"), str(tmp_path / "out")
 
     s_a = TableSpec("t", [FieldSpec("conv_id", "string", required=True)])
     s_b = TableSpec(
         "t",
         [FieldSpec("conv_id", "string", required=True, min_length=100)],
     )
+
+    def run(eng):
+        s = eng.run_resumable(
+            lambda ps: spark.read.parquet(*ps), mpath, out, files=list_files(inp)
+        )
+        return s, s["units_total"] - s["units_skipped"]
+
     e1 = ValidationEngine(s_a)
-    r1 = e1.run_incremental(spark, inp, mpath)
-    assert r1["files_validated"] >= 1
-    r2 = e1.run_incremental(spark, inp, mpath)
-    assert r2["files_validated"] == 0
+    r1, n1 = run(e1)
+    assert n1 >= 1
+    _, n2 = run(e1)
+    assert n2 == 0
     e2 = ValidationEngine(s_b)
-    r3 = e2.run_incremental(spark, inp, mpath)
-    assert r3["files_validated"] == r1["files_validated"]  # re-validated
-    assert r3["passed"] is False  # min_length=100 fails everywhere
+    r3, n3 = run(e2)
+    assert n3 == n1  # re-validated
+    assert r3["invalid_rows"] > 0  # min_length=100 fails everywhere
+
+
+def _outputs(spark, out):
+    """(verdict rows, violation rows) committed under ``out``, without
+    the run_id partition column, as sorted tuples."""
+    def rows(name):
+        df = spark.read.parquet(f"{out}/{name}")
+        return sorted(tuple(r) for r in df.drop("run_id").collect())
+
+    return rows("verdicts"), rows("violations")
+
+
+def test_resume_after_failed_commit(spark, tmp_path, monkeypatch):
+    """A run that dies after its writes but before its manifest append
+    leaves no committed output: the next run deletes the uncommitted
+    ``run_id=`` directories and recomputes exactly the unrecorded
+    units, and the union of committed outputs equals a one-shot run —
+    for shard units and for file units (a new file arrives between
+    the runs)."""
+    import pytest
+
+    eng = ValidationEngine(transcript_spec(), n_shards=4)
+    real_append = Manifest.append
+
+    def crash(self, rows):
+        raise RuntimeError("killed before commit")
+
+    # shard units: the failed first run records nothing, so the resumed
+    # run recomputes every shard
+    df = synthesize(spark, n_conv=60).cache()
+    n_rows = df.count()
+    m, out = str(tmp_path / "m"), str(tmp_path / "out")
+    monkeypatch.setattr(Manifest, "append", crash)
+    with pytest.raises(RuntimeError):
+        eng.run_resumable(df, m, out, "in", run_id="dead")
+    monkeypatch.setattr(Manifest, "append", real_append)
+    resumed = eng.run_resumable(df, m, out, "in", run_id="r2")
+    assert resumed["rows"] == n_rows and resumed["units_skipped"] == 0
+    assert eng.run_resumable(df, m, out, "in", run_id="r3")["rows"] == 0
+    one_shot = str(tmp_path / "one_shot")
+    eng.write_outputs(df, one_shot)
+    assert _outputs(spark, out) == _outputs(spark, one_shot)
+    df.unpersist()
+
+    # file units: run 1 commits two files, a third arrives, run 2 dies
+    # before its commit, run 3 recomputes the third file only
+    inp = tmp_path / "inp"
+    inp.mkdir()
+    stage = str(tmp_path / "stage")
+    _drop_file(spark, stage, 50, inp / "day1.parquet")
+    _drop_file(spark, stage, 30, inp / "day2.parquet")
+    m, out = str(tmp_path / "fm"), str(tmp_path / "fout")
+
+    def run(run_id):
+        return eng.run_resumable(
+            lambda ps: spark.read.parquet(*ps), m, out,
+            files=list_files(str(inp)), run_id=run_id,
+        )
+
+    run("f1")
+    _drop_file(spark, stage, 20, inp / "day3.parquet")
+    monkeypatch.setattr(Manifest, "append", crash)
+    with pytest.raises(RuntimeError):
+        run("dead")
+    monkeypatch.setattr(Manifest, "append", real_append)
+    resumed = run("f3")
+    assert resumed["units_skipped"] == 2
+    assert resumed["rows"] == spark.read.parquet(str(inp / "day3.parquet")).count()
+    assert {p.name for p in (tmp_path / "fout" / "verdicts").iterdir()} == {
+        "run_id=f1", "run_id=f3"
+    }
+    one_shot = str(tmp_path / "fone_shot")
+    eng.write_outputs(spark.read.parquet(str(inp)), one_shot, unit="file")
+    assert _outputs(spark, out) == _outputs(spark, one_shot)
 
 
 def test_iceberg_seam(spark, tmp_path):

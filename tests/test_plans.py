@@ -383,6 +383,51 @@ def test_clean_frame_one_scan_one_join(spark, tmp_path, monkeypatch):
     assert plan.count("Join ") <= 1, plan
 
 
+def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
+    """``validate`` evaluates the constraint kernels as often under a
+    manifest flag as without one: once with ``--quarantine`` (the split
+    write; verdicts and violations read the split back), twice without
+    (the verdicts write and the violations write). Manifest reads and
+    the verdict read-back behind the commit carry no kernel."""
+    import contextlib
+    import io
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from satya_spark.__main__ import main
+
+    src = str(tmp_path / "in")
+    synthesize(spark, 100).coalesce(2).write.parquet(src)
+    plans = []
+
+    def recording(cls, name, df_of):
+        orig = getattr(cls, name)
+
+        def record(self, *a, **k):
+            plans.append(df_of(self)._jdf.queryExecution().optimizedPlan().toString())
+            return orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, record)
+
+    recording(type(spark.range(1)), "collect", lambda df: df)
+    for name in ("parquet", "save"):
+        recording(DataFrameWriter, name, lambda w: w._df)
+    for mode in ("plain", "manifest", "file-manifest"):
+        for extra in ([], ["--quarantine"]):
+            if mode == "file-manifest" and extra:
+                continue  # exits 2: file verdicts need the input scan
+            run = f"{mode}{len(extra)}"
+            flags = [] if mode == "plain" else [f"--{mode}", str(tmp_path / run)]
+            plans.clear()
+            out = str(tmp_path / f"out_{run}")
+            with contextlib.redirect_stdout(io.StringIO()):
+                rc = main(["validate", "--input", src, "--output", out, *flags, *extra])
+            assert rc == 3, run
+            # the kernel array builds one struct per failing rule
+            kernel = [p for p in plans if "struct(field, " in p]
+            assert len(kernel) == (1 if extra else 2), (mode, extra, plans)
+
+
 def test_cap_per_group_windowgrouplimit_below_exchange(spark):
     """The per-domain cap's rank filters must compile to
     WindowGroupLimit nodes BELOW their exchanges — each map task
