@@ -21,9 +21,10 @@ manifest's recorded totals (see satya_spark.manifest: one writer per
 manifest).
 
 Exit code: 0 if every row validated by this run passed, 3 if
-violations were found (pipeline-friendly), 2 on schema-policy errors
-and for --file-manifest with --quarantine, --format ndjson or an input
-with no data file.
+violations were found (pipeline-friendly), 2 on schema-policy errors,
+for --file-manifest with --quarantine, --format ndjson or an input
+with no data file, and for a manifest run into an --output that a run
+without a manifest wrote.
 
     python -m satya_spark triage --input /data/t.parquet \
         [--sample-n 3] [--top-n 10] \
@@ -74,7 +75,7 @@ def cmd_validate(args) -> int:
     import os
 
     from .coerce import coerce, spark_type
-    from .engine import ValidationEngine
+    from .engine import MixedOutputError, ValidationEngine
     from .io import read_ref
     from .manifest import list_files
     from .session import get_spark
@@ -122,28 +123,32 @@ def cmd_validate(args) -> int:
         return coerce(d, spec) if args.coerce else d
 
     write = dict(quarantine=args.quarantine, sample_per_shard=args.sample_per_shard)
-    if args.file_manifest:
-        # basePath keeps the partition columns of a hive-partitioned
-        # input when only some of its files are read
-        base = args.input if os.path.isdir(args.input) else os.path.dirname(args.input)
-        reader = spark.read.option("basePath", base)
-        summary = eng.run_resumable(
-            lambda paths: prepare(reader.parquet(*paths)),
-            args.file_manifest,
-            args.output,
-            files=files,
-            **write,
-        )
-    elif args.manifest:
-        summary = eng.run_resumable(
-            prepare(df),
-            args.manifest,
-            args.output,
-            fingerprint=_input_fingerprint(args.input),
-            **write,
-        )
-    else:
-        summary = eng.write_outputs(prepare(df), args.output, **write)
+    try:
+        if args.file_manifest:
+            # basePath keeps the partition columns of a hive-partitioned
+            # input when only some of its files are read
+            base = args.input if os.path.isdir(args.input) else os.path.dirname(args.input)
+            reader = spark.read.option("basePath", base)
+            summary = eng.run_resumable(
+                lambda paths: prepare(reader.parquet(*paths)),
+                args.file_manifest,
+                args.output,
+                files=files,
+                **write,
+            )
+        elif args.manifest:
+            summary = eng.run_resumable(
+                prepare(df),
+                args.manifest,
+                args.output,
+                fingerprint=_input_fingerprint(args.input),
+                **write,
+            )
+        else:
+            summary = eng.write_outputs(prepare(df), args.output, **write)
+    except MixedOutputError as e:
+        print(e, file=sys.stderr)
+        return 2
     print(json.dumps(summary))
     return 0 if summary["invalid_rows"] == 0 else 3
 
@@ -222,7 +227,12 @@ def cmd_clean(args) -> int:
     The per-document frame is one input scan plus that aggregation,
     left-joined back once: the text is tokenized once (NULL text as
     empty), and the C4 page verdict, the Gopher quality signals and
-    every drop reason are row-local columns of it."""
+    every drop reason are row-local columns of it. With --near-dedup
+    the duplicate clusters are labelled first (``dup_clusters`` labels
+    small pair graphs on the driver) and left-joined on too; the
+    near-duplicate survivor is a window over each cluster inside the
+    frame. The frame is checkpointed once and both writes filter the
+    checkpoint."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -318,21 +328,17 @@ def cmd_clean(args) -> int:
                 F.concat(F.col("drop_reasons"), F.array(F.lit("duplicate"))),
             ).otherwise(F.col("drop_reasons")),
         )
-    # the per-document frame, materialized ONCE: the output columns
-    # plus text_redacted and drop_reasons (id column first). The
-    # near-dedup canon choice and both writes read this checkpoint, so
-    # the hygiene subtree (PII regexes, n-gram aggregation) executes
-    # once per pass, not once per action.
-    d = d.select(idc, *out_cols, "text_redacted", "drop_reasons").localCheckpoint()
     if args.near_dedup:
-        # MinHash-LSH pairs -> connected components. Pairs scan the
-        # post-C4 (id, text) projection, NOT the fully-annotated
-        # frame: the hygiene signals are 1:1 per doc so the pair set
-        # is identical, and the repetition/PII/gopher stages don't
-        # execute a second time under dup_clusters' edge checkpoint.
-        # Banding stays the library's recall-first default so the
-        # --near-dedup-threshold flag means what it says (the tight
-        # bands=2 config trades recall for cost; see BENCH.md).
+        # MinHash-LSH pairs -> connected components, labelled before
+        # the per-document checkpoint so the canon choice below is a
+        # window inside that one frame, not a join back onto it. Pairs
+        # scan the post-C4 (id, text) projection, NOT the annotated
+        # frame: the hygiene signals are 1:1 per doc so the pair set is
+        # identical, and the repetition/PII/gopher stages don't run
+        # under dup_clusters' edge checkpoint. Banding stays the
+        # library's recall-first default so --near-dedup-threshold
+        # means what it says (the tight bands=2 config trades recall
+        # for cost; see BENCH.md).
         from .functions.dedup import dup_clusters, minhash_dedup_pairs
 
         pairs = minhash_dedup_pairs(
@@ -341,36 +347,36 @@ def cmd_clean(args) -> int:
             id_col=idc,
             text_col=txt,
         )
-        clusters = dup_clusters(pairs)
+        cid = tx.fresh_col(d, "__cluster")
+        # the verified pairs come from distinct LSH candidates, so
+        # dup_clusters skips its own distinct (a repeated pair would
+        # not change the components either)
+        clusters = dup_clusters(pairs, assume_distinct=True).select(
+            F.col("doc_id").alias(idc), F.col("cluster_id").alias(cid)
+        )
         # the kept copy must be one the OTHER rules keep: blindly
         # taking the min id can hand the cluster to a row already
-        # dropped (e.g. too_long), deleting every copy of the content
-        ok = d.select(
-            F.col(idc).alias("doc_id"),
-            (F.size("drop_reasons") == 0).alias("__ok"),
-        )
-        cl = clusters.join(ok, "doc_id")
-        canon = cl.groupBy("cluster_id").agg(
-            F.min(F.when(F.col("__ok"), F.col("doc_id"))).alias("__canon")
-        )
-        losers = (
-            cl.join(canon, "cluster_id")
-            .filter(
-                F.col("__ok")
-                & F.col("__canon").isNotNull()
-                & (F.col("doc_id") != F.col("__canon"))
-            )
-            .select(F.col("doc_id").alias(idc))
-            .withColumn("__neardup", F.lit(True))
-        )
-        d = d.join(losers, idc, "left")
-        d = d.withColumn(
+        # dropped (e.g. too_long), deleting every copy of the content.
+        # The canon is the min id among a cluster's kept rows. The
+        # window key is skew-free: a document in no pair partitions
+        # alone, and its id is no cluster's id (a cluster id is a
+        # member of a pair).
+        ok = F.size("drop_reasons") == 0
+        w = Window.partitionBy(F.coalesce(F.col(cid), F.col(idc)))
+        canon = F.min(F.when(ok, F.col(idc))).over(w)
+        d = d.join(clusters, idc, "left").withColumn(
             "drop_reasons",
             F.when(
-                F.col("__neardup"),
+                ok & (F.col(idc) != canon),
                 F.concat(F.col("drop_reasons"), F.array(F.lit("near_duplicate"))),
             ).otherwise(F.col("drop_reasons")),
-        ).drop("__neardup")
+        )
+    # the per-document frame, materialized ONCE: the output columns
+    # plus text_redacted and drop_reasons (id column first). Both
+    # writes are plain filters of this checkpoint, so the hygiene
+    # subtree (PII regexes, n-gram aggregation, the dedup windows)
+    # executes once per pass, not once per write.
+    d = d.select(idc, *out_cols, "text_redacted", "drop_reasons").localCheckpoint()
     keep = F.size("drop_reasons") == 0
     kept = (
         d.filter(keep)

@@ -47,6 +47,13 @@ from .manifest import Manifest, new_run_id, shard_col
 from .spec import TableSpec
 
 
+class MixedOutputError(ValueError):
+    """Raised by :meth:`ValidationEngine.run_resumable` when its
+    ``output`` already holds outputs that are not ``run_id=<id>``
+    partitions, such as the part files of a plain run: a reader of the
+    directory would see the partitions and silently skip those rows."""
+
+
 class TableValidationError(Exception):
     """Raised by :meth:`ValidationEngine.enforce` when a table fails.
 
@@ -403,7 +410,9 @@ class ValidationEngine:
         ``run_id=<id>/``, then commit them to the manifest. Returns the
         write_outputs summary plus run_id, units_total, units_skipped
         and recorded (units, rows and invalid rows the manifest holds
-        for this scope, this run included).
+        for this scope, this run included). Raises
+        :class:`MixedOutputError` when ``output``'s verdicts, violations
+        or split directory holds anything but ``run_id=<id>`` entries.
 
         Shard units (default): ``df`` is the input frame and
         ``fingerprint`` identifies it. File units: ``files`` maps each
@@ -420,6 +429,19 @@ class ValidationEngine:
         None). ``profile`` stores :meth:`profile_kernels` of the run
         on its first manifest row (the stats are whole-run, not
         per-unit)."""
+        for name in ("verdicts", "violations", "split"):
+            root = f"{output}/{name}"
+            if os.path.isdir(root):
+                stray = sorted(
+                    e for e in os.listdir(root) if not e.startswith("run_id=")
+                )
+                if stray:
+                    raise MixedOutputError(
+                        f"{root} holds {stray[0]!r}, which is not a"
+                        " run_id=<id> partition (a run without a manifest"
+                        " wrote there); readers would skip those rows, so"
+                        " give a manifest run its own --output"
+                    )
         spark = SparkSession.active()
         manifest = Manifest(spark, manifest_path)
         run_id = run_id or new_run_id()

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .bounded import CollectBoundExceeded, bounded_collect
 from .text import fingerprint, norm_text, tokens_ws
 
 MINHASH_K = 8  # signature length
@@ -145,27 +146,32 @@ def minhash_signature(toks: Column, k: int = MINHASH_K) -> list[Column]:
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = MINHASH_K
-) -> DataFrame:
-    # project the token set to a real column first: passing the
-    # tokenization expression straight into k transforms would
-    # re-tokenize k times per row (the transform INPUT is evaluated
-    # per call; see decontam.word_ngrams_from_tokens for the
-    # per-element variant of the same trap)
-    t = df.select(
+def _token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __toks): each document's distinct token set. Projected to
+    a real column so the k minhash transforms read it: passing the
+    tokenization expression straight into them would re-tokenize k
+    times per row (the transform INPUT is evaluated per call; see
+    decontam.word_ngrams_from_tokens for the per-element variant of
+    the same trap)."""
+    return df.select(
         F.col(id_col),
         F.array_distinct(tokens_ws(F.col(text_col))).alias("__toks"),
     )
+
+
+def minhash_signatures(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = MINHASH_K
+) -> DataFrame:
+    t = _token_sets(df, id_col, text_col)
     return t.select(F.col(id_col), *minhash_signature(F.col("__toks"), k))
 
 
-def _lsh_band_buckets(
+def _lsh_docs(
     df: DataFrame, id_col: str, text_col: str, k: int, bands: int
 ) -> DataFrame:
-    """(id, band, bucket) — one row per document per band. Bucket =
-    md5 of the band's signature slice. Shared by the candidate join
-    and the oversized-bucket report so both see identical buckets."""
+    """(id, __toks, __bb) — one row per document: its distinct token
+    set and its ``bands`` band buckets (md5 of each band's signature
+    slice)."""
     if bands <= 0 or k % bands != 0:
         raise ValueError(
             f"k ({k}) must be divisible by bands ({bands}); otherwise the"
@@ -173,7 +179,8 @@ def _lsh_band_buckets(
             " recall (simhash_pairs enforces the same for bits/chunks)"
         )
     rows_per_band = k // bands
-    sigs = minhash_signatures(df, id_col, text_col, k)
+    t = _token_sets(df, id_col, text_col)
+    sigs = t.select(id_col, "__toks", *minhash_signature(F.col("__toks"), k))
     buckets = []
     for b in range(bands):
         cols = [
@@ -186,9 +193,49 @@ def _lsh_band_buckets(
                 F.md5(F.concat_ws(",", *cols)).alias("bucket"),
             )
         )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*buckets)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
+    return sigs.select(id_col, "__toks", F.array(*buckets).alias("__bb"))
+
+
+def _explode_buckets(docs: DataFrame, id_col: str) -> DataFrame:
+    """(id, band, bucket) — one row per document per band of a
+    :func:`_lsh_docs` frame."""
+    return docs.select(F.col(id_col), F.explode("__bb").alias("bb")).select(
+        id_col, "bb.band", "bb.bucket"
+    )
+
+
+def _lsh_band_buckets(
+    df: DataFrame, id_col: str, text_col: str, k: int, bands: int
+) -> DataFrame:
+    """(id, band, bucket) — one row per document per band. Shared by
+    the candidate join and the oversized-bucket report so both see
+    identical buckets."""
+    return _explode_buckets(_lsh_docs(df, id_col, text_col, k, bands), id_col)
+
+
+def _band_pairs(
+    exploded: DataFrame, id_col: str, max_bucket_size: int | None = None
+) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of ids sharing a band
+    bucket of a materialized (id, band, bucket) frame."""
+    if max_bucket_size is not None:
+        # window count shares the (band, bucket) shuffle with the join
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("band", "bucket")
+        exploded = exploded.withColumn(
+            "__bsz", F.count(F.lit(1)).over(w)
+        ).filter(F.col("__bsz") <= max_bucket_size).drop("__bsz")
+    a = exploded.select(
+        F.col(id_col).alias("id_a"), "band", "bucket"
+    )
+    b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    return (
+        a.join(b_, ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -218,24 +265,7 @@ def lsh_candidate_pairs(
     # (id + int + 32-char bucket) at any corpus size. Measured r6:
     # dedup_minhash 3.8->3.3 s, conv_neardup 3.9->3.3 s at sf0.1.
     exploded = _lsh_band_buckets(df, id_col, text_col, k, bands).localCheckpoint()
-    if max_bucket_size is not None:
-        # window count shares the (band, bucket) shuffle with the join
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        exploded = exploded.withColumn(
-            "__bsz", F.count(F.lit(1)).over(w)
-        ).filter(F.col("__bsz") <= max_bucket_size).drop("__bsz")
-    a = exploded.select(
-        F.col(id_col).alias("id_a"), "band", "bucket"
-    )
-    b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    return (
-        a.join(b_, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _band_pairs(exploded, id_col, max_bucket_size)
 
 
 def lsh_oversized_buckets(
@@ -285,8 +315,10 @@ def minhash_dedup_pairs(
     (measured, BENCH.md) — that is the recommended PRODUCTION
     setting when the corpus is known to be duplicate-rich, and it is
     oracle-gated separately (``dedup_minhash_tight``)."""
-    cands = lsh_candidate_pairs(df, id_col, text_col, k=k, bands=bands)
-    # verify on 64-bit token hashes, not token strings: |A∩B| and
+    # One checkpoint per document carries the band buckets AND the
+    # verify side's token set, so the text is scanned and tokenized
+    # once: the band self-join and both verify sides read it.
+    # Verify on 64-bit token hashes, not token strings: |A∩B| and
     # |A∪B| over injectively-mapped sets equal the string-set counts,
     # so jac is unchanged, while the per-pair array_intersect compares
     # 8-byte longs instead of hashing/comparing strings (the verify
@@ -297,13 +329,17 @@ def minhash_dedup_pairs(
     # ANY colliding pair is ≲ V²/2⁶⁵ (V=10⁶ → ~3e-8). Union via
     # |A|+|B|−|A∩B| (both sides are already distinct arrays) instead
     # of array_distinct(concat(...)) — half the per-pair set work.
-    toks = df.select(
-        F.col(id_col),
-        F.transform(
-            F.array_distinct(tokens_ws(F.col(text_col))),
-            lambda t: F.xxhash64(t),
-        ).alias("toks"),
+    docs = (
+        _lsh_docs(df, id_col, text_col, k, bands)
+        .select(
+            id_col,
+            F.transform("__toks", lambda t: F.xxhash64(t)).alias("toks"),
+            "__bb",
+        )
+        .localCheckpoint()
     )
+    cands = _band_pairs(_explode_buckets(docs, id_col), id_col)
+    toks = docs.select(id_col, "toks")
     j = (
         cands.join(toks.withColumnsRenamed({id_col: "id_a", "toks": "toks_a"}), "id_a")
         .join(toks.withColumnsRenamed({id_col: "id_b", "toks": "toks_b"}), "id_b")
@@ -444,11 +480,43 @@ def minhash_dedup_pairs_collapsed(
     )
 
 
-def _cc_finish_driver(labels: DataFrame, und: DataFrame) -> DataFrame:
+def _components_frame(spark, rows: list, ntype) -> DataFrame:
+    """Exact driver union-find over ``(a, b)`` rows, as the ``(doc_id,
+    cluster_id)`` frame :func:`dup_clusters` returns: every node that
+    appears in a row, labelled with the min id of its component. Each
+    union hangs the larger root under the smaller, so a root is always
+    its component's min id."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    schema = StructType(
+        [
+            StructField("doc_id", ntype, False),
+            StructField("cluster_id", ntype, False),
+        ]
+    )
+    return spark.createDataFrame([(x, find(x)) for x in parent], schema)
+
+
+def _cc_finish_driver(labels: DataFrame, und: DataFrame, max_rows: int) -> DataFrame:
     """Exact driver-side finish for :func:`dup_clusters` once the
-    CONTRACTED graph fits the collect guard: union-find over the
-    collected ``(node, label)`` rows PLUS the contracted edges, min
-    member id per component.
+    CONTRACTED graph fits ``max_rows``: union-find over the collected
+    ``(node, label)`` rows PLUS the contracted edges, min member id per
+    component. Both collects are bounded; past ``max_rows`` rows in
+    total it raises :class:`~.bounded.CollectBoundExceeded`.
 
     The ``(node, label)`` unions are load-bearing, not decoration:
     labels can carry multi-hop chains (label(u)=v while label(v)=w),
@@ -459,44 +527,21 @@ def _cc_finish_driver(labels: DataFrame, und: DataFrame) -> DataFrame:
     original edge (u, x) appears as the contracted (label(u),
     label(x)) union plus the u~label(u) / x~label(x) chain unions, so
     components equal the original components restricted to
-    pair-participating nodes; the min over a component's label-table
-    keys is the min original member id (label values and contracted
-    endpoints are themselves node ids present as keys)."""
-    lab_rows = labels.collect()
-    edge_rows = und.collect()
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-
-    for r in lab_rows:
-        union(r[0], r[1])
-    for r in edge_rows:
-        union(r[0], r[1])
-    minid: dict = {}
-    for r in lab_rows:
-        rt = find(r[0])
-        if rt not in minid or r[0] < minid[rt]:
-            minid[rt] = r[0]
-    out = [(r[0], minid[find(r[0])]) for r in lab_rows]
-    ntype = labels.schema["node"].dataType
-    schema = StructType(
-        [
-            StructField("doc_id", ntype, False),
-            StructField("cluster_id", ntype, False),
-        ]
+    pair-participating nodes. Label values and contracted endpoints
+    are themselves label-table keys, so the output has exactly one
+    row per node."""
+    edge_rows = bounded_collect(
+        und, max_rows, "dup_clusters: contracted edges", "finish_collect_max"
     )
-    return labels.sparkSession.createDataFrame(out, schema)
+    lab_rows = bounded_collect(
+        labels,
+        max_rows - len(edge_rows),
+        "dup_clusters: labels",
+        "finish_collect_max - contracted edges",
+    )
+    return _components_frame(
+        labels.sparkSession, lab_rows + edge_rows, labels.schema["node"].dataType
+    )
 
 
 def dup_clusters(
@@ -547,13 +592,26 @@ def dup_clusters(
     count of changed labels. Raises after ``max_iter`` rounds instead
     of returning a partial labelling.
 
-    Once a contraction leaves the graph below ``finish_collect_max``
-    total rows (labels + contracted edges), the remaining rounds are
-    replaced by an exact driver-side union-find
-    (:func:`_cc_finish_driver`): on a trivial residual graph every
-    further round is fixed plan/checkpoint/count cost, not data. The
-    guard is a row-count bound, so the path never fires on
-    corpus-sized label tables.
+    Three paths, all exact, chosen by ``finish_collect_max``:
+
+    * **round-0 driver shortcut**: when the distinct pair list has at
+      most ``finish_collect_max`` rows, one bounded collect reads it
+      and a driver union-find labels it. Labels are still the identity
+      at round 0, so the edges alone are exact. The near-dup graphs
+      of typical ``clean`` passes are this small, and the rounds would
+      spend about 20 jobs of fixed cost on them.
+    * **distributed rounds** (the propagation above) for larger
+      graphs;
+    * **post-contraction driver finish** (:func:`_cc_finish_driver`):
+      once a contraction leaves labels plus contracted edges within
+      ``finish_collect_max`` rows, the remaining rounds are replaced by
+      a driver union-find over both, which also unions the label
+      chains the rounds left behind.
+
+    Every driver read is bounded by ``finish_collect_max`` rows, so
+    neither driver path fires on a corpus-sized graph.
+    ``finish_collect_max=0`` keeps every non-empty graph on the
+    distributed rounds.
     """
     dd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     if not assume_distinct:
@@ -575,14 +633,13 @@ def dup_clusters(
     # from runtime sizes (labels broadcast at test scale, exchange at
     # cluster scale).
     und = dd.localCheckpoint()
-    # isEmpty, not count(): the exact pair count is never needed —
-    # round 0 always contracts on a non-empty graph and later rounds
-    # count the (small) contracted frames — so don't pay a full scan
-    # of the checkpointed pair mass just for a boolean.
-    if und.isEmpty():
-        return und.select(
-            F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id")
-        )
+    # bound: the driver reads at most finish_collect_max + 1 pairs;
+    # a graph with more stays on the distributed rounds. One partition
+    # makes the limit one job: over several, it scans them in rounds.
+    rows = und.coalesce(1).limit(finish_collect_max + 1).collect()
+    if len(rows) <= finish_collect_max:
+        # round-0 labels are the identity: no label chains to union
+        return _components_frame(und.sparkSession, rows, und.schema["src"].dataType)
 
     def _both(e: DataFrame) -> DataFrame:
         return e.select(
@@ -597,7 +654,7 @@ def dup_clusters(
         ).select("e.src", "e.dst")
 
     n_edges = None  # unknown-large until the first contraction counts
-    n_nodes = None
+    n_nodes_min = 0  # lower bound on the node count, fixed from round 0
     edges = _both(und)
     labels = None
     for rnd in range(max_iter):
@@ -693,13 +750,14 @@ def dup_clusters(
             # guard bounds BOTH collected frames by row count, so the
             # path never fires when the label table is corpus-sized —
             # at 100 TB the distributed loop simply continues.
-            # The node set is fixed from round 0 on, so its count is
-            # scanned at most once.
-            if n_edges <= finish_collect_max:
-                if n_nodes is None:
-                    n_nodes = labels.count()
-                if n_nodes + n_edges // 2 <= finish_collect_max:
-                    return _cc_finish_driver(labels, und)
+            # The node set is fixed from round 0 on: a finish that
+            # finds too many labels raises that set's lower bound, so
+            # later rounds retry only once the edges leave room.
+            if n_nodes_min + n_edges // 2 <= finish_collect_max:
+                try:
+                    return _cc_finish_driver(labels, und, finish_collect_max)
+                except CollectBoundExceeded:
+                    n_nodes_min = finish_collect_max - n_edges // 2 + 1
     raise RuntimeError(
         f"dup_clusters did not converge in {max_iter} rounds — the pair "
         "graph has pathological diameter; raise max_iter"

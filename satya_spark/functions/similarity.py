@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..crossrow import salted_topn
+from .bounded import bounded_collect
 
 # Upper bound on a query batch collected to the driver: every ANN
 # search ships its queries to each task inside the scoring closure.
@@ -179,21 +180,17 @@ def _collect_queries(
     queries: DataFrame, query_id_col: str, vec_col: str, caller: str
 ) -> list[tuple]:
     """Bounded driver collect of a query batch → [(query_id, float64
-    vector)]. Reads at most ``MAX_QUERY_ROWS + 1`` rows, so a batch
-    over the bound fails with a ValueError naming ``caller`` instead of
-    pulling a corpus-sized frame onto the driver."""
+    vector)]. A batch over ``MAX_QUERY_ROWS`` fails with a
+    :class:`~.bounded.CollectBoundExceeded` (a ValueError) naming
+    ``caller``; split it into smaller batches."""
     import numpy as np
 
-    rows = (
-        queries.select(F.col(query_id_col), F.col(vec_col))
-        .limit(MAX_QUERY_ROWS + 1)
-        .collect()
+    rows = bounded_collect(
+        queries.select(F.col(query_id_col), F.col(vec_col)),
+        MAX_QUERY_ROWS,
+        f"{caller}: query batch",
+        "MAX_QUERY_ROWS",
     )
-    if len(rows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"{caller}: query batch has more than MAX_QUERY_ROWS="
-            f"{MAX_QUERY_ROWS} rows; split it into smaller batches"
-        )
     return [(r[0], np.asarray(r[1], dtype=np.float64)) for r in rows]
 
 

@@ -105,6 +105,31 @@ def test_cli_resume_via_manifest(spark, tmp_path):
     assert sorted(map(tuple, viol2)) == sorted(map(tuple, viol1))
 
 
+def test_cli_manifest_refuses_plain_output(spark, tmp_path):
+    """A manifest run into an --output that a run without a manifest
+    wrote exits 2, names the directory and writes nothing: readers of
+    <output>/verdicts would see the run_id= partitions and silently
+    skip the plain run's part files beside them."""
+    from satya_spark.__main__ import main
+    from satya_spark.transcripts import synthesize
+
+    inp = str(tmp_path / "in")
+    synthesize(spark, 100).coalesce(2).write.parquet(inp)
+    out = str(tmp_path / "out")
+    argv = ["validate", "--input", inp, "--output", out, "--shards", "8"]
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main(argv) == 3
+    before = sorted(os.listdir(f"{out}/verdicts"))
+    for flag in ("--manifest", "--file-manifest"):
+        err = io.StringIO()
+        with contextlib.redirect_stdout(io.StringIO()), contextlib.redirect_stderr(err):
+            rc = main([*argv, flag, str(tmp_path / flag.strip("-"))])
+        assert rc == 2, flag
+        assert f"{out}/verdicts" in err.getvalue(), err.getvalue()
+        assert not os.path.exists(tmp_path / flag.strip("-"))
+    assert sorted(os.listdir(f"{out}/verdicts")) == before
+
+
 def test_input_fingerprint_distinguishes_remote_uris():
     from satya_spark.__main__ import _input_fingerprint
 

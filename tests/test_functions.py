@@ -1253,35 +1253,67 @@ def test_vector_violations_huge_norm_never_fails(spark):
     assert got == {(1, "norm_high"): ">1e22"}
 
 
-def test_dup_clusters_driver_finish_parity(spark):
-    """The size-guarded driver finish (union-find over labels +
-    contracted edges) must label identically to the pure distributed
-    loop — including on the label-CHAIN shape that breaks an
-    edges-only union-find: after round 0 a path graph's label table
-    carries multi-hop chains (label(u)=v while label(v)=w), and the
-    contracted edges alone do not encode u~v; the (node, label)
-    unions restore them. Also pins the guard itself: finish off
-    (finish_collect_max=0) and forced-on give the same labelling."""
-    from satya_spark.functions.dedup import dup_clusters
+def test_dup_clusters_driver_finish_parity(spark, monkeypatch):
+    """The post-contraction driver finish (union-find over labels +
+    contracted edges) must label identically to the round-0 driver
+    shortcut and to the pure distributed loop — including on the
+    label-CHAIN shape that breaks an edges-only union-find: after
+    round 0 a path graph's label table carries multi-hop chains
+    (label(u)=v while label(v)=w), and the contracted edges alone do
+    not encode u~v; the (node, label) unions restore them. The finish
+    is pinned explicitly: a bound one row below the pair count keeps
+    round 0 distributed, and a spy checks that the finish ran on a
+    label table with chains."""
+    from satya_spark.functions import dedup
 
-    # path graph (worst chain shape) + a clique + a separate pair,
-    # with ids interleaved so min-ids are non-trivial
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(50, 66)]           # 17-node path
-        + [(9, 30), (30, 41), (9, 41)]                # triangle
-        + [(70, 3)],                                  # pair, min on right
-        "id_a long, id_b long",
+    # path graph (worst chain shape) + an 8-clique, which gives more
+    # pairs than nodes so the contracted graph fits a bound the pair
+    # list does not, + a triangle + a pair, with ids interleaved so
+    # min-ids are non-trivial
+    edges = (
+        [(i, i + 1) for i in range(50, 66)]                    # 17-node path
+        + [(a, b) for a in range(80, 88) for b in range(a + 1, 88)]  # clique
+        + [(9, 30), (30, 41), (9, 41)]                         # triangle
+        + [(70, 3)]                                            # min on right
     )
-    on = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dup_clusters(pairs).collect()  # guard fires (small graph)
-    }
-    off = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dup_clusters(pairs, finish_collect_max=0).collect()
-    }
-    assert on == off
-    assert {c for _, c in on} == {50, 9, 3}
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    chains = []
+    finish = dedup._cc_finish_driver
+
+    def spy(labels, und, max_rows):
+        lab = {r["node"]: r["label"] for r in labels.collect()}
+        chains.append(sum(lab[v] != v for v in lab.values()))
+        return finish(labels, und, max_rows)
+
+    monkeypatch.setattr(dedup, "_cc_finish_driver", spy)
+
+    def run(**kw):
+        out = dedup.dup_clusters(pairs, **kw).collect()
+        return {(r["doc_id"], r["cluster_id"]) for r in out}
+
+    shortcut = run()  # the pair list fits: round-0 shortcut
+    assert chains == []
+    finished = run(finish_collect_max=len(edges) - 1)
+    assert len(chains) == 1 and chains[0] > 0
+    off = run(finish_collect_max=0)
+    assert shortcut == finished == off
+    assert {c for _, c in off} == {50, 80, 9, 3}
+
+
+def test_dup_clusters_driver_finish_is_bounded(spark):
+    """The post-contraction finish reads labels and contracted edges
+    with bounded collects: within the bound it labels exactly (the
+    label chain 2 -> 1 plus the edge 1~3), past it it raises the typed
+    error that sends dup_clusters back to its distributed rounds."""
+    from satya_spark.functions.bounded import CollectBoundExceeded
+    from satya_spark.functions.dedup import _cc_finish_driver
+
+    labels = spark.createDataFrame([(1, 1), (2, 1), (3, 3)], "node long, label long")
+    und = spark.createDataFrame([(1, 3)], "src long, dst long")
+    got = _cc_finish_driver(labels, und, 4).collect()
+    assert sorted(map(tuple, got)) == [(1, 1), (2, 1), (3, 1)]
+    with pytest.raises(CollectBoundExceeded, match="^dup_clusters: labels .*=2 rows"):
+        _cc_finish_driver(labels, und, 3)
 
 
 def test_dup_clusters_empty_and_self_pairs(spark):

@@ -383,6 +383,66 @@ def test_clean_frame_one_scan_one_join(spark, tmp_path, monkeypatch):
     assert plan.count("Join ") <= 1, plan
 
 
+def test_clean_near_dedup_writes_read_only_the_checkpoint(spark, tmp_path, monkeypatch):
+    """``clean --gopher --dedup --near-dedup`` chooses the near-dup
+    survivor inside the checkpointed per-document frame: both parquet
+    writes are plain filters of the checkpoint, with no scan, join or
+    window left in their plans. ``dup_clusters`` labels a pair graph
+    that fits its driver bound in at most 2 jobs: the edge checkpoint
+    and one bounded collect."""
+    import contextlib
+    import io
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from satya_spark.__main__ import main
+    from satya_spark.functions.dedup import dup_clusters
+
+    def doc(word):  # passes every Gopher rule: 66 words, no repeats
+        words = " ".join(f"{word}{i}" for i in range(60))
+        return f"the quick and {words} to the end of it"
+
+    src, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    spark.createDataFrame(
+        [
+            (1, doc("alpha")),
+            (2, doc("alpha") + " more"),  # near duplicate of 1
+            (3, doc("alpha")),            # exact duplicate of 1
+            (4, doc("beta")),
+        ],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, *a, **k):
+        plans.append(self._df._jdf.queryExecution().optimizedPlan().toString())
+        return parquet(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    with contextlib.redirect_stdout(io.StringIO()):
+        main(["clean", "--input", src, "--output", out,
+              "--gopher", "--dedup", "--near-dedup"])
+    assert len(plans) == 2
+    for plan in plans:
+        for node in ("Relation [", "Join", "Window"):
+            assert node not in plan, plan
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    sc.setJobGroup("dup_clusters_small", "dup_clusters on a small graph")
+    try:
+        dup_clusters(pairs, assume_distinct=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dup_clusters_small")) <= 2
+    dropped = {
+        r["doc_id"]: sorted(r["drop_reasons"])
+        for r in spark.read.parquet(f"{out}/dropped").collect()
+    }
+    assert dropped == {3: ["duplicate"], 2: ["near_duplicate"]}
+
+
 def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
     """``validate`` evaluates the constraint kernels as often under a
     manifest flag as without one: once with ``--quarantine`` (the split

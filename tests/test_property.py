@@ -850,16 +850,24 @@ def _py_components(edges):
     return {n: find(n) for n in parent}
 
 
-# finish_collect_max=0 turns off the driver-side union-find finish, so
-# the distributed rounds are checked on their own
-@pytest.mark.parametrize(
-    "kw", [{}, {"finish_collect_max": 0}], ids=["default", "distributed"]
-)
+# One arm per dup_clusters path. "default" fits the round-0 driver
+# shortcut. "distributed" (finish_collect_max=0) keeps every graph on
+# the distributed rounds. "finish" bounds the driver one row below the
+# pair count, so round 0 runs distributed; graphs that contract below
+# the bound then take the post-contraction finish (labels with their
+# chains, plus the contracted edges), and the others hit its collect
+# bound and fall back to the rounds.
+@pytest.mark.parametrize("path", ["default", "distributed", "finish"])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=_edge_lists)
-def test_dup_clusters_matches_union_find(spark, kw, edges):
+def test_dup_clusters_matches_union_find(spark, path, edges):
     from satya_spark.functions.dedup import dup_clusters
 
+    kw = {
+        "default": {},
+        "distributed": {"finish_collect_max": 0},
+        "finish": {"finish_collect_max": len(set(edges)) - 1},
+    }[path]
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a long, id_b long"
     )
