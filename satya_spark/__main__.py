@@ -158,7 +158,13 @@ def cmd_triage(args) -> int:
     violation samples, worst conversations, per-group drift — the
     queries an operator runs when `validate` exits 3. Every output is
     driver-small by construction (samples are two-phase-salted
-    top-n; drift is one grouped histogram)."""
+    top-n; drift is one grouped histogram).
+
+    The kernels run once: the violation rows (as many as the
+    corruption rate makes them, the rows `validate` writes to
+    violations/) are materialized with ``localCheckpoint`` and both
+    the samples and the worst groups read them. Driver-small results
+    are sorted on the driver, not by a Spark sort."""
     from pyspark.sql import functions as F
 
     from .crossrow import top_violating_groups, violations_sample
@@ -174,7 +180,7 @@ def cmd_triage(args) -> int:
     eng = ValidationEngine(spec)
     df = read_ref(spark, args.input)
     keys = list(spec.unique_key or (spec.fields[0].name,))
-    viol = eng.violations(eng.annotate(df))
+    viol = eng.violations(eng.annotate(df)).localCheckpoint()
 
     sample = violations_sample(viol, keys, n=args.sample_n).collect()
     worst = top_violating_groups(viol, keys[0], n=args.top_n).collect()
@@ -192,12 +198,12 @@ def cmd_triage(args) -> int:
             conversation_structure_violations(df)
             .groupBy("constraint_name")
             .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("constraint_name")
             .collect()
         )
-        report["structure_violations"] = {
-            r["constraint_name"]: r["n"] for r in struct
-        }
+        # at most one row per structure check
+        report["structure_violations"] = dict(
+            sorted((r["constraint_name"], r["n"]) for r in struct)
+        )
     if args.drift_group and args.drift_metric:
         m = df.select(
             F.coalesce(F.col(args.drift_group).cast("string"), F.lit("<null>")).alias("g"),

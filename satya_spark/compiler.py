@@ -65,6 +65,10 @@ class CompiledRule:
     fail_sql: str
     offending_fn: Callable[[], "Column"]  # noqa: F821
     offending_sql: str
+    # a row rule without a SQL twin: ``fail_sql`` cannot tell two such
+    # rules apart, so :meth:`CompiledSpec.kernel_key` keys on this
+    # callable's identity
+    opaque_fn: Callable | None = None
 
     @property
     def fail(self):
@@ -886,6 +890,28 @@ class CompiledSpec:
         )
         return hashlib.md5(body.encode()).hexdigest()[:16]
 
+    def kernel_key(self, context: dict | None = None) -> str:
+        """Digest of everything :meth:`violations_array_col` builds
+        from: every rule's field, constraint and SQL twins (the twins
+        describe the Spark kernels they are checked against), the
+        identity of each row rule that has no SQL twin, and
+        ``context``, which a context-taking rule folds into its
+        Column. Equal keys build equal Columns, so engines may share
+        one build (``engine.shared_compiled``). Identities stay unique
+        only while their callables live: a cache keyed on this must
+        hold the CompiledSpec."""
+        import hashlib
+        import json
+
+        body = [
+            f"{r.field}:{r.constraint}:{r.fail_sql}:{r.offending_sql}"
+            + (f":fn{id(r.opaque_fn)}" if r.opaque_fn is not None else "")
+            for r in self.rules
+        ]
+        if context:
+            body.append("ctx:" + json.dumps(context, sort_keys=True, default=repr))
+        return hashlib.md5("|".join(body).encode()).hexdigest()
+
     # ---- oracle side --------------------------------------------------
     def violations_sql(self, table: str, key_cols: List[str]) -> str:
         """DuckDB SQL computing the identical violation rows via
@@ -959,6 +985,7 @@ def compile_row_rule(rule, context: dict | None = None) -> CompiledRule:
         fail_sql=fail_sql or "FALSE /* non-SQL custom rule */",
         offending_fn=_off,
         offending_sql="CAST(NULL AS VARCHAR)",
+        opaque_fn=None if fail_sql else rule.fail_fn,
     )
 
 

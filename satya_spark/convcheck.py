@@ -23,8 +23,8 @@ transcript-native extension of the same contract):
   duplicate of the enum kernel, kept so this report is
   self-contained for standalone use).
 * ``turn_idx_null`` — rows that cannot participate in ordering at
-  all (excluded from the window so NULL-ordering dialect differences
-  can never skew the sequence checks).
+  all (a window partition of their own, so NULL-ordering dialect
+  differences can never skew the sequence checks).
 
 Scale notes (10^12 turns): ONE shuffle — the window partitions by
 conv_id; every check is a lag/row_number over that single sort, then
@@ -60,28 +60,21 @@ def conversation_structure_violations(
     tool_roles: Sequence[str] = TOOL_ROLES,
 ) -> DataFrame:
     """(conv_id, turn_idx, role, constraint_name) for every
-    sequence-level violation. One window shuffle; all checks are
-    lag/row_number projections over the same sort.
+    sequence-level violation. One scan and one window shuffle; all
+    checks are lag/row_number projections over the same sort.
 
     Rows with NULL ``idx_col`` are reported as ``turn_idx_null`` and
-    excluded from the window — Spark sorts NULLS FIRST, DuckDB NULLS
-    LAST, so letting them into the lag chain would make the report
-    engine-dependent.
+    kept out of the lag chain — Spark sorts NULLS FIRST, DuckDB NULLS
+    LAST, so letting them in would make the report engine-dependent.
+    They sit in a window partition of their own
+    (``partitionBy(conv, idx IS NULL)``) and get only that flag, in
+    the same projection as the sequence checks.
     """
     conv, idx, role, tool = (
         F.col(conv_col), F.col(idx_col), F.col(role_col), F.col(tool_col)
     )
-    base = df.select(conv_col, idx_col, role_col, tool_col)
-
-    null_idx = base.filter(idx.isNull()).select(
-        conv.alias("conv_id"),
-        idx.alias("turn_idx"),
-        role.alias("role"),
-        F.lit("turn_idx_null").alias("constraint_name"),
-    )
-
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    lagged = base.filter(idx.isNotNull()).select(
+    w = Window.partitionBy(conv, idx.isNull()).orderBy(idx)
+    lagged = df.select(
         conv.alias("conv_id"),
         idx.alias("turn_idx"),
         role.alias("role"),
@@ -110,13 +103,15 @@ def conversation_structure_violations(
         ("role_unknown", t_role.isNotNull() & ~t_role.isin(*roles)),
     ]
     empty = F.array().cast("array<string>")
-    flags = F.concat(
-        *[
-            F.when(cond, F.array(F.lit(name))).otherwise(empty)
-            for name, cond in checks
-        ]
+    flags = F.when(t_idx.isNull(), F.array(F.lit("turn_idx_null"))).otherwise(
+        F.concat(
+            *[
+                F.when(cond, F.array(F.lit(name))).otherwise(empty)
+                for name, cond in checks
+            ]
+        )
     )
-    seq = (
+    return (
         lagged.withColumn("__v", flags)
         .filter(F.size("__v") > 0)
         .select(
@@ -126,7 +121,6 @@ def conversation_structure_violations(
             F.explode("__v").alias("constraint_name"),
         )
     )
-    return seq.unionByName(null_idx)
 
 
 def conversation_structure_sql(

@@ -3,7 +3,9 @@
 The Spark analog of satya's ``StreamValidator``
 (``src/satya/validator.py:10-21``): compile once, evaluate over
 arbitrarily many batches. Here a "batch" is a DataFrame (or a whole
-Iceberg/parquet table) and evaluation is:
+Iceberg/parquet table), and every engine of an equal spec and context
+in one SparkContext shares one compiled spec and its built kernel
+Column (:func:`shared_compiled`). Evaluation is:
 
     stage 1  per-column kernels        one codegen'd select (no shuffle)
     stage 2  per-shard verdicts        groupBy(shard) — counts only
@@ -32,19 +34,72 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass
 from typing import Dict, Optional, Sequence
 from urllib.parse import unquote, urlparse
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import crossrow, drift
 from .compiler import CompiledSpec, compile_spec, explode_violations
 from .io import write_observed
 from .manifest import Manifest, new_run_id, shard_col
 from .spec import TableSpec
+
+
+# one CompiledSpec per kernel_key in the active SparkContext, so the
+# kernel Column (thousands of py4j calls to build) is built once per
+# session and spec, not once per engine; the oldest entry goes first
+_KERNELS: Dict[str, CompiledSpec] = {}
+_KERNELS_MAX = 32
+_kernels_sc: Optional[SparkContext] = None
+_kernels_lock = threading.Lock()
+
+
+def shared_compiled(spec: TableSpec, context: Optional[dict] = None) -> CompiledSpec:
+    """``compile_spec(spec, context)``, shared by every engine whose
+    spec and context have the same :meth:`CompiledSpec.kernel_key` in
+    the active SparkContext. The cache belongs to that context: it is
+    dropped on the first call after the context stopped or was
+    replaced, so no Column outlives the session it was built in.
+    Without an active context nothing is cached."""
+    global _kernels_sc
+    compiled = compile_spec(spec, context)
+    sc = SparkContext._active_spark_context
+    with _kernels_lock:
+        if sc is not _kernels_sc:
+            _KERNELS.clear()
+            _kernels_sc = sc
+        if sc is None:
+            return compiled
+        key = compiled.kernel_key(context)
+        if key not in _KERNELS:
+            if len(_KERNELS) >= _KERNELS_MAX:
+                del _KERNELS[next(iter(_KERNELS))]
+            _KERNELS[key] = compiled
+        return _KERNELS[key]
+
+
+def _split_schema(df: DataFrame) -> T.StructType:
+    """The schema :meth:`ValidationEngine.write_split` writes for input
+    ``df``, taken from ``df.schema`` instead of from analysing the
+    kernel plan: ``annotate``'s ``withColumn`` replaces or appends
+    ``violations`` and ``valid``, and the split drops ``shard``."""
+    added = {
+        "violations": T.DataType.fromDDL(CompiledSpec.VIOLATION_TYPE),
+        "valid": T.BooleanType(),
+    }
+    fields = [
+        T.StructField(f.name, added.pop(f.name)) if f.name in added else f
+        for f in df.schema
+        if f.name != "shard"
+    ]
+    return T.StructType(fields + [T.StructField(n, t) for n, t in added.items()])
 
 
 class MixedOutputError(ValueError):
@@ -97,7 +152,7 @@ class ValidationEngine:
         # expressions, see compiler.compile_row_rule)
         self.spec = spec
         self.context = dict(context or {})
-        self.compiled: CompiledSpec = compile_spec(spec, self.context)
+        self.compiled: CompiledSpec = shared_compiled(spec, self.context)
         self.n_shards = n_shards
         # lineage/shard key: first unique-key column, else first field
         self.shard_key = (
@@ -337,8 +392,9 @@ class ValidationEngine:
         sub = f"/run_id={run_id}" if run_id else ""
         if quarantine:
             split = self.write_split(df, f"{output}/split{sub}")
-            schema = self.annotate(df).drop("shard").schema
-            ann = df.sparkSession.read.schema(schema).parquet(f"{output}/split{sub}")
+            ann = df.sparkSession.read.schema(_split_schema(df)).parquet(
+                f"{output}/split{sub}"
+            )
             bad = ann.filter(~F.col("valid"))
         else:
             ann = bad = self.annotate(df)
@@ -602,7 +658,10 @@ class ValidationEngine:
         n_buckets: int = 20,
     ) -> Dict[str, DataFrame]:
         """PSI + binned KS between two transcript populations on a
-        per-conversation metric ('text_len' avg chars or 'n_turns')."""
+        per-conversation metric ('text_len' avg chars or 'n_turns').
+        The tiny paired histogram both read is materialized with
+        ``localCheckpoint``: a ``persist`` would stay pinned in the
+        session's cache, since no caller can tell when to release it."""
         def conv_metric(d: DataFrame) -> DataFrame:
             s = crossrow.conv_stats(d)
             col = "avg_text_len" if metric == "text_len" else "n_turns"
@@ -610,7 +669,7 @@ class ValidationEngine:
 
         rh = drift.histogram(conv_metric(ref_df), "m", width, n_buckets)
         ch = drift.histogram(conv_metric(cur_df), "m", width, n_buckets)
-        pair = drift.pair_from_hists(rh, ch, n_buckets).persist()
+        pair = drift.pair_from_hists(rh, ch, n_buckets).localCheckpoint()
         return {"psi": drift.psi_pair(pair), "ks": drift.ks_pair(pair)}
 
     def drift_check_split(
@@ -624,9 +683,9 @@ class ValidationEngine:
         """Drift between two populations living in ONE table
         (``half_col`` = 0/1 evaluated on the per-conversation stats
         frame): per-conv stats once, both histograms in one
-        aggregation pass, PSI + KS from the tiny cached pair."""
+        aggregation pass, PSI + KS from the tiny checkpointed pair."""
         stats = crossrow.conv_stats(df)
         col = "avg_text_len" if metric == "text_len" else "n_turns"
         pair = drift.pair_from_split(stats, col, half_col, width, n_buckets)
-        pair = pair.persist()
+        pair = pair.localCheckpoint()
         return {"psi": drift.psi_pair(pair), "ks": drift.ks_pair(pair)}

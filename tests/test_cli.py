@@ -414,3 +414,40 @@ def test_cli_clean_near_dedup(spark, tmp_path):
     assert summary["rows_in"] == 4
     assert summary["rows_kept"] == spark.read.parquet(f"{out}/kept").count()
     assert summary["rows_dropped"] == spark.read.parquet(f"{out}/dropped").count()
+
+
+def test_cli_clean_near_dedup_survivor_after_c4_and_gopher(spark, tmp_path):
+    """clean --c4-lines --gopher --near-dedup on multi-line documents
+    that pass the C4 page and Gopher rules: a three-document cluster
+    whose min id (doc 1) is dropped by another rule (--max-tokens)
+    keeps its min KEPT id (doc 2), and only doc 3 is a near
+    duplicate."""
+    words = [chr(97 + i % 26) + chr(97 + i // 26) + "word" for i in range(200)]
+
+    def line(ws):
+        return "the " + " ".join(ws[:5]) + " and " + " ".join(ws[5:]) + "."
+
+    def doc(ws):
+        return "\n".join(line(ws[k : k + 10]) for k in range(0, len(ws), 10))
+
+    base = words[:60]  # 6 lines of 12 tokens each
+    rows = [
+        (1, doc(base + words[100:110])),  # 84 tokens: too_long
+        (2, doc(base[:-1] + [words[120]])),
+        (3, doc(base[:-1] + [words[121]])),
+        (4, doc(words[130:190])),  # unrelated
+    ]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
+    out = str(tmp_path / "out")
+    summary = _clean(
+        src, out, "--c4-lines", "--gopher", "--near-dedup", "--max-tokens", "80"
+    )
+    kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/kept").collect()}
+    dropped = {
+        r["doc_id"]: sorted(r["drop_reasons"])
+        for r in spark.read.parquet(f"{out}/dropped").collect()
+    }
+    assert kept == {2, 4}, dropped
+    assert dropped == {1: ["too_long"], 3: ["near_duplicate"]}
+    assert summary["rows_kept"] == 2 and summary["rows_dropped"] == 2

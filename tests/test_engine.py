@@ -71,6 +71,139 @@ def test_drift_check_shapes(spark):
     assert out["ks"].collect()[0]["ks_stat"] < 1e-9
 
 
+def test_drift_pairs_are_not_cached(spark):
+    """Both drift checks leave nothing pinned in the session's cache
+    once their PSI and KS frames have been read."""
+    spark.catalog.clearCache()
+    eng = ValidationEngine(transcript_spec())
+    a = synthesize(spark, n_conv=100)
+    b = synthesize(spark, n_conv=120)
+    half = (F.xxhash64("conv_id") % 2 == 0).cast("int")
+    for out in (eng.drift_check(a, b), eng.drift_check_split(a, half)):
+        out["psi"].collect()
+        out["ks"].collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _count_py4j(monkeypatch, fn):
+    """py4j commands ``fn()`` sends to the JVM. Only
+    ``GatewayClient.send_command`` is patched: ``JavaClient`` inherits
+    it, so patching both would count every call twice."""
+    from py4j.java_gateway import GatewayClient
+
+    calls = []
+    orig = GatewayClient.send_command
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", counting)
+        fn()
+    return len(calls)
+
+
+def test_engines_share_one_kernel_build(spark, monkeypatch):
+    """A second engine on an equal spec reuses the first one's kernel
+    Column instead of building it again (thousands of py4j calls)."""
+    from satya_spark.compiler import compile_spec
+
+    first = ValidationEngine(transcript_spec())
+    first.compiled.violations_array_col()
+    built = _count_py4j(
+        monkeypatch, lambda: compile_spec(transcript_spec()).violations_array_col()
+    )
+    assert built > 1000
+
+    def second_engine():
+        eng = ValidationEngine(transcript_spec(), n_shards=8)
+        assert eng.compiled.violations_array_col() is first.compiled.violations_array_col()
+
+    assert _count_py4j(monkeypatch, second_engine) < 10
+
+
+def test_kernel_cache_keys_on_row_rule_callable_and_context(spark):
+    """Specs that differ only in a non-SQL row rule's callable, or only
+    in the context, get kernels of their own; equal ones share."""
+    from satya_spark.spec import FieldSpec, RowRule, TableSpec
+
+    df = spark.createDataFrame([(3,)], "x long")
+    fields = (FieldSpec("x", "long"),)
+
+    def spec(*rules):
+        return TableSpec(name="t", fields=fields, row_rules=rules)
+
+    def valid(eng):
+        return eng.annotate(df).first()["valid"]
+
+    over1 = spec(RowRule("big", lambda: F.col("x") > 1))
+    over5 = spec(RowRule("big", lambda: F.col("x") > 5))
+    e1, e5 = ValidationEngine(over1), ValidationEngine(over5)
+    assert e1.compiled is not e5.compiled
+    assert (valid(e1), valid(e5)) == (False, True)
+    assert ValidationEngine(over1).compiled is e1.compiled
+
+    by_ctx = spec(RowRule("big", lambda ctx: F.col("x") > ctx["n"]))
+    c1 = ValidationEngine(by_ctx, context={"n": 1})
+    c5 = ValidationEngine(by_ctx, context={"n": 5})
+    assert c1.compiled is not c5.compiled
+    assert (valid(c1), valid(c5)) == (False, True)
+    assert ValidationEngine(by_ctx, context={"n": 1}).compiled is c1.compiled
+
+
+_RESTART = """
+import json
+from pyspark.sql import SparkSession
+from satya_spark.engine import ValidationEngine
+from satya_spark.spec import transcript_spec
+from satya_spark.transcripts import synthesize
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.shuffle.partitions", "2")
+            .config("spark.driver.memory", "1g").getOrCreate())
+
+def invalid_rows(spark):
+    eng = ValidationEngine(transcript_spec())
+    n = eng.annotate(synthesize(spark, n_conv=30)).filter("NOT valid").count()
+    return eng, n
+
+spark = session()
+first, n1 = invalid_rows(spark)
+spark.stop()
+spark = session()
+second, n2 = invalid_rows(spark)
+fresh = second.compiled is not first.compiled
+spark.stop()
+print(json.dumps({"fresh": fresh, "n1": n1, "n2": n2}))
+"""
+
+
+def test_kernel_cache_dropped_when_context_stops():
+    """An engine built after its SparkContext stopped and a new one
+    started gets a kernel of its own, never the stale Column (a fresh
+    process: the test session must not be stopped)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _RESTART],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        env=dict(os.environ, PYTHONPATH=repo),
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out["fresh"] and out["n1"] == out["n2"] > 0, out
+
+
 def test_shard_verdicts_split_equals_annotated(spark, tmp_path):
     """Verdicts of a written quarantine split (no ``shard`` column;
     the shard is recomputed from the shard key) agree exactly with

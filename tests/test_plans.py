@@ -443,21 +443,11 @@ def test_clean_near_dedup_writes_read_only_the_checkpoint(spark, tmp_path, monke
     assert dropped == {3: ["duplicate"], 2: ["near_duplicate"]}
 
 
-def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
-    """``validate`` evaluates the constraint kernels as often under a
-    manifest flag as without one: once with ``--quarantine`` (the split
-    write; verdicts and violations read the split back), twice without
-    (the verdicts write and the violations write). Manifest reads and
-    the verdict read-back behind the commit carry no kernel."""
-    import contextlib
-    import io
-
+def _record_plans(spark, monkeypatch) -> list:
+    """Optimized plans of every ``collect``, ``localCheckpoint`` and
+    parquet write from now on, in order."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from satya_spark.__main__ import main
-
-    src = str(tmp_path / "in")
-    synthesize(spark, 100).coalesce(2).write.parquet(src)
     plans = []
 
     def recording(cls, name, df_of):
@@ -469,9 +459,32 @@ def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
 
         monkeypatch.setattr(cls, name, record)
 
-    recording(type(spark.range(1)), "collect", lambda df: df)
+    for name in ("collect", "localCheckpoint"):
+        recording(type(spark.range(1)), name, lambda df: df)
     for name in ("parquet", "save"):
         recording(DataFrameWriter, name, lambda w: w._df)
+    return plans
+
+
+def _kernel_plans(plans) -> list:
+    # the kernel array builds one struct per failing rule
+    return [p for p in plans if "struct(field, " in p]
+
+
+def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
+    """``validate`` evaluates the constraint kernels as often under a
+    manifest flag as without one: once with ``--quarantine`` (the split
+    write; verdicts and violations read the split back), twice without
+    (the verdicts write and the violations write). Manifest reads and
+    the verdict read-back behind the commit carry no kernel."""
+    import contextlib
+    import io
+
+    from satya_spark.__main__ import main
+
+    src = str(tmp_path / "in")
+    synthesize(spark, 100).coalesce(2).write.parquet(src)
+    plans = _record_plans(spark, monkeypatch)
     for mode in ("plain", "manifest", "file-manifest"):
         for extra in ([], ["--quarantine"]):
             if mode == "file-manifest" and extra:
@@ -483,9 +496,34 @@ def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
             with contextlib.redirect_stdout(io.StringIO()):
                 rc = main(["validate", "--input", src, "--output", out, *flags, *extra])
             assert rc == 3, run
-            # the kernel array builds one struct per failing rule
-            kernel = [p for p in plans if "struct(field, " in p]
-            assert len(kernel) == (1 if extra else 2), (mode, extra, plans)
+            assert len(_kernel_plans(plans)) == (1 if extra else 2), (mode, extra, plans)
+
+
+def test_triage_kernel_once_structure_one_scan(spark, tmp_path, monkeypatch):
+    """One ``triage`` run evaluates the constraint kernels in exactly
+    one plan (the checkpoint of its violation rows, which the samples
+    and the worst groups both read), and the structure check reads its
+    input once, with no Union."""
+    import contextlib
+    import io
+    import json
+
+    from satya_spark.__main__ import main
+
+    src = str(tmp_path / "in")
+    synthesize(spark, 200).coalesce(2).write.parquet(src)
+    plans = _record_plans(spark, monkeypatch)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(["triage", "--input", src, "--drift-group", "role", "--drift-metric", "text"])
+    assert rc == 0
+    report = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert report["violation_sample"] and report["worst_groups"]
+    assert len(_kernel_plans(plans)) == 1, plans
+    structure = [p for p in plans if "turn_idx_null" in p]
+    assert len(structure) == 1, plans
+    assert structure[0].count("Relation [") == 1, structure[0]
+    assert "Union" not in structure[0], structure[0]
 
 
 def test_cap_per_group_windowgrouplimit_below_exchange(spark):
