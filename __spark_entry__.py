@@ -278,16 +278,12 @@ def q_conv_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_near_dups, nearest lower partner) — the pair set itself is
     quadratic in clique size by nature, not by plan shape.
 
-    Templated fixtures make exact duplicates the dominant clique
-    mass, so the pipeline runs MinHash over DISTINCT flattened texts
-    only (minhash_dedup_pairs_collapsed): tokenize/signature/verify
-    cost drops from per-conversation to per-distinct-text, and the
-    c² term degrades to a fan-back join of (id, id, jac) rows with no
-    token arrays attached (292 s → seconds at sf0.1, BENCH.md r5)."""
-    from satya_spark.functions.dedup import (
-        minhash_dedup_pairs_collapsed,
-        portable_hash64,
-    )
+    Templated fixtures make equal token sets the dominant clique
+    mass, and minhash_dedup_pairs collapses them before banding:
+    signature and verify cost follow the distinct token sets, and the
+    c² term is only the final fan-out of (id, id, jac) rows (292 s →
+    seconds at sf0.1, BENCH.md r5)."""
+    from satya_spark.functions.dedup import minhash_dedup_pairs, portable_hash64
 
     t = from_tpch(spark, sf_dir).select("conv_id", "turn_idx", "text")
     texts = F.transform(
@@ -297,7 +293,7 @@ def q_conv_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv_docs = t.groupBy("conv_id").agg(
         F.concat_ws(" ", texts).alias("text")
     ).filter(F.pmod(portable_hash64(F.col("conv_id"), "cn"), F.lit(11)) == 0)
-    pairs = minhash_dedup_pairs_collapsed(conv_docs, id_col="conv_id", text_col="text")
+    pairs = minhash_dedup_pairs(conv_docs, id_col="conv_id", text_col="text")
     return pairs.groupBy("id_b").agg(
         F.count(F.lit(1)).alias("n_near_dups"),
         F.min("id_a").alias("nearest_lower"),
@@ -663,25 +659,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate set is distinct before the verify join), so the CC
     # edge build skips its defensive distinct exchange (r6)
     return dup_clusters(pairs, assume_distinct=True)
-
-
-def q_dedup_minhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The token-set-collapse restructuring of the same pipeline
-    (minhash_dedup_pairs_collapsed): one minhash/LSH/verify run per
-    DISTINCT token set, pair results fanned back by fingerprint —
-    output-identical to dedup_minhash (same oracle SQL). WHEN TO USE
-    (measured, BENCH.md r5): a win iff the corpus collapses — the
-    transcripts fixture collapses 32× (conv_neardup 292 s → seconds);
-    the documents fixture only 1.3× (distinct-set NEAR-dup cliques),
-    where fingerprint + fan-back costs exceed the verify savings
-    (121 s vs 24.7 s at sf0.1). This gate exists for output parity;
-    the plain pipeline stays the documents default."""
-    from satya_spark.docfix import docs_from_testdata
-    from satya_spark.functions.dedup import minhash_dedup_pairs_collapsed
-
-    return minhash_dedup_pairs_collapsed(
-        docs_from_testdata(spark, sf_dir), threshold=0.6
-    )
 
 
 def q_dedup_minhash_tight(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1313,9 +1290,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness
     artifact covers the first ~50 registered queries, so gates are
     registered most-verification-starved first (r4 verdict task 1);
-    80 gates in all:
+    79 gates in all:
 
-    * tier 1 (19) — never driver-verified (new this round or
+    * tier 1 (18) — never driver-verified (new this round or
       previously pushed past the window), plus the ANN gates whose
       only implementation is now the numpy/Arrow one;
     * tier 2 (11) — r03-verified but the implementing code has changed
@@ -1327,14 +1304,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       runner (scripts/check_correctness.py) still sweeps all of them.
     """
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    # -- tier 1: never driver-verified (19) --
+    # -- tier 1: never driver-verified (18) --
     out.update(
         {
             "mix_cap": q_mix_cap,
             "dup_clusters": q_dup_clusters,
             "vector_check": q_vector_check,
             "web_params": q_web_params,
-            "dedup_minhash_collapsed": q_dedup_minhash_collapsed,
             "dup_spans": q_dup_spans,
             "dup_span_removal": q_dup_span_removal,
             "clf_score": q_clf_score,
@@ -2163,8 +2139,6 @@ def _doc_oracles() -> dict[str, str]:
         )
 
     o["dedup_minhash"] = _minhash_sql(MINHASH_BANDS)
-    # collapsed restructuring is output-identical — same oracle
-    o["dedup_minhash_collapsed"] = _minhash_sql(MINHASH_BANDS)
     o["dedup_minhash_tight"] = _minhash_sql(2)
     from satya_spark.functions.dedup import dup_clusters_sql
 

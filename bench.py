@@ -74,12 +74,6 @@ HEADLINE = [
 # serialization, not the dedup join
 DEDUP_HEADLINE = [
     "dedup_minhash",
-    # dedup_minhash_collapsed is gated for correctness but NOT benched
-    # here: the documents fixture collapses only 1.3× (5109 docs →
-    # 3990 distinct token sets), so the fingerprint + fan-back cost
-    # exceeds the verify savings (121 s vs 24.7 s at sf0.1, measured
-    # r5). Collapse is the DUP-HEAVY config — conv_neardup (32×
-    # collapse) is its benched showcase.
     "dedup_minhash_tight",  # production banding: 2×4-row bands
     "dedup_simhash_pairs",
     "dedup_embedding",  # arrow sketch + numpy pair-verify (r4)

@@ -22,7 +22,7 @@ Embedding-cosine near-dup lives in similarity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -63,6 +63,17 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 
 
 # --- n-gram Jaccard ------------------------------------------------------
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Jaccard of two DISTINCT arrays, rounded to 6 places. Union via
+    |A|+|B|−|A∩B| instead of array_distinct(concat(...)): half the
+    per-pair set work. Two empty (or NULL) sets give 0/0, guarded to
+    a NULL that fails every threshold filter; under ANSI mode an
+    unguarded divide would abort the job instead."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.round(F.when(union > 0, inter.cast("double") / union), 6)
 
 
 def jaccard_pairs(
@@ -113,15 +124,11 @@ def jaccard_pairs(
         (F.col("tc_s") < F.col("tc_l"))
         | ((F.col("tc_s") == F.col("tc_l")) & (F.col("id_s") < F.col("id_l")))
     )
-    inter = F.size(F.array_intersect("toks_s", "toks_l"))
-    union = F.size(F.array_distinct(F.concat("toks_s", "toks_l")))
-    # 0/0 guard (two empty-token docs share band 0): NULL → filtered
-    jac = F.round(F.when(union > 0, inter.cast("double") / union), 6)
     return (
         joined.select(
             F.least("id_s", "id_l").alias("id_a"),
             F.greatest("id_s", "id_l").alias("id_b"),
-            jac.alias("jac"),
+            _jaccard("toks_s", "toks_l").alias("jac"),
         )
         .filter(F.col("jac") >= threshold)
     )
@@ -166,42 +173,20 @@ def minhash_signatures(
     return t.select(F.col(id_col), *minhash_signature(F.col("__toks"), k))
 
 
-def _lsh_docs(
-    df: DataFrame, id_col: str, text_col: str, k: int, bands: int
-) -> DataFrame:
-    """(id, __toks, __bb) — one row per document: its distinct token
-    set and its ``bands`` band buckets (md5 of each band's signature
-    slice)."""
+def _lsh_bands(toks: Column, k: int, bands: int) -> Column:
+    """The ``bands`` LSH band buckets of a token-set column, as an
+    array indexed by band: md5 of each band's slice of the k-row
+    minhash signature. ``toks`` must be a projected column: each of
+    the k transforms reads it."""
     if bands <= 0 or k % bands != 0:
         raise ValueError(
             f"k ({k}) must be divisible by bands ({bands}); otherwise the"
             " trailing signature rows would be silently ignored, changing"
             " recall (simhash_pairs enforces the same for bits/chunks)"
         )
-    rows_per_band = k // bands
-    t = _token_sets(df, id_col, text_col)
-    sigs = t.select(id_col, "__toks", *minhash_signature(F.col("__toks"), k))
-    buckets = []
-    for b in range(bands):
-        cols = [
-            F.col(f"mh{b * rows_per_band + j}").cast("string")
-            for j in range(rows_per_band)
-        ]
-        buckets.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws(",", *cols)).alias("bucket"),
-            )
-        )
-    return sigs.select(id_col, "__toks", F.array(*buckets).alias("__bb"))
-
-
-def _explode_buckets(docs: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, bucket) — one row per document per band of a
-    :func:`_lsh_docs` frame."""
-    return docs.select(F.col(id_col), F.explode("__bb").alias("bb")).select(
-        id_col, "bb.band", "bb.bucket"
-    )
+    r = k // bands
+    sig = [c.cast("string") for c in minhash_signature(toks, k)]
+    return F.array(*(F.md5(F.concat_ws(",", *sig[b * r:(b + 1) * r])) for b in range(bands)))
 
 
 def _lsh_band_buckets(
@@ -210,32 +195,21 @@ def _lsh_band_buckets(
     """(id, band, bucket) — one row per document per band. Shared by
     the candidate join and the oversized-bucket report so both see
     identical buckets."""
-    return _explode_buckets(_lsh_docs(df, id_col, text_col, k, bands), id_col)
-
-
-def _band_pairs(
-    exploded: DataFrame, id_col: str, max_bucket_size: int | None = None
-) -> DataFrame:
-    """Distinct (id_a, id_b), id_a < id_b, of ids sharing a band
-    bucket of a materialized (id, band, bucket) frame."""
-    if max_bucket_size is not None:
-        # window count shares the (band, bucket) shuffle with the join
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        exploded = exploded.withColumn(
-            "__bsz", F.count(F.lit(1)).over(w)
-        ).filter(F.col("__bsz") <= max_bucket_size).drop("__bsz")
-    a = exploded.select(
-        F.col(id_col).alias("id_a"), "band", "bucket"
+    return _token_sets(df, id_col, text_col).select(
+        id_col, F.posexplode(_lsh_bands(F.col("__toks"), k, bands)).alias("band", "bucket")
     )
-    b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    return (
-        a.join(b_, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+
+
+def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """The rows of an (id, band, bucket) frame whose bucket has at most
+    ``max_bucket_size`` members (all rows when None). The window count
+    shares the (band, bucket) shuffle with the join that follows."""
+    if max_bucket_size is None:
+        return buckets
+    w = Window.partitionBy("band", "bucket")
+    return buckets.withColumn("__bsz", F.count(F.lit(1)).over(w)).filter(
+        F.col("__bsz") <= max_bucket_size
+    ).drop("__bsz")
 
 
 def lsh_candidate_pairs(
@@ -265,7 +239,15 @@ def lsh_candidate_pairs(
     # (id + int + 32-char bucket) at any corpus size. Measured r6:
     # dedup_minhash 3.8->3.3 s, conv_neardup 3.9->3.3 s at sf0.1.
     exploded = _lsh_band_buckets(df, id_col, text_col, k, bands).localCheckpoint()
-    return _band_pairs(exploded, id_col, max_bucket_size)
+    exploded = _cap_buckets(exploded, max_bucket_size)
+    a = exploded.select(F.col(id_col).alias("id_a"), "band", "bucket")
+    b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    return (
+        a.join(b_, ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def lsh_oversized_buckets(
@@ -280,8 +262,9 @@ def lsh_oversized_buckets(
     exceeds ``max_bucket_size`` — the 'no silent cap' companion to
     ``lsh_candidate_pairs(max_bucket_size=...)``: run this, log the
     rows, THEN cap. A bucket this hot is either a templated clique
-    (collapse exact dups first, see minhash_dedup_pairs_collapsed) or
-    a degenerate band (e.g. the all-empty-token bucket)."""
+    (:func:`minhash_dedup_pairs` collapses equal token sets before
+    banding, so exact-token-set copies count once there) or a
+    degenerate band (e.g. the all-empty-token bucket)."""
     return (
         _lsh_band_buckets(df, id_col, text_col, k, bands)
         .groupBy("band", "bucket")
@@ -300,7 +283,7 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """LSH candidates verified with true token-set Jaccard — the
     scalable near-dup pipeline (candidates are a tiny fraction of
-    n²; verification joins token sets back by id). ``k``/``bands``
+    n²). Returns (id_a, id_b, jac), id_a < id_b. ``k``/``bands``
     are the recall/cost banding knob: per-band collision probability
     is s^(k/bands), so fewer, wider bands collapse low-similarity
     false candidates (the verify step's cost is linear in candidate
@@ -315,168 +298,66 @@ def minhash_dedup_pairs(
     (measured, BENCH.md) — that is the recommended PRODUCTION
     setting when the corpus is known to be duplicate-rich, and it is
     oracle-gated separately (``dedup_minhash_tight``)."""
-    # One checkpoint per document carries the band buckets AND the
-    # verify side's token set, so the text is scanned and tokenized
-    # once: the band self-join and both verify sides read it.
-    # Verify on 64-bit token hashes, not token strings: |A∩B| and
-    # |A∪B| over injectively-mapped sets equal the string-set counts,
-    # so jac is unchanged, while the per-pair array_intersect compares
-    # 8-byte longs instead of hashing/comparing strings (the verify
-    # step runs per CANDIDATE — millions of times — where the hashing
-    # projection runs once per document). Collision bound: a false
-    # intersection needs two distinct tokens with equal xxhash64 in
-    # the same pair; with V distinct tokens corpus-wide the chance of
-    # ANY colliding pair is ≲ V²/2⁶⁵ (V=10⁶ → ~3e-8). Union via
-    # |A|+|B|−|A∩B| (both sides are already distinct arrays) instead
-    # of array_distinct(concat(...)) — half the per-pair set work.
-    docs = (
-        _lsh_docs(df, id_col, text_col, k, bands)
-        .select(
-            id_col,
-            F.transform("__toks", lambda t: F.xxhash64(t)).alias("toks"),
-            "__bb",
-        )
-        .localCheckpoint()
-    )
-    cands = _band_pairs(_explode_buckets(docs, id_col), id_col)
-    toks = docs.select(id_col, "toks")
-    j = (
-        cands.join(toks.withColumnsRenamed({id_col: "id_a", "toks": "toks_a"}), "id_a")
-        .join(toks.withColumnsRenamed({id_col: "id_b", "toks": "toks_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
-    # guard 0/0 (two empty-token docs collide in the null-signature
-    # bucket): NULL jac → dropped by the threshold filter. Under ANSI
-    # mode an unguarded divide would abort the job instead.
-    jac = F.round(F.when(union > 0, inter.cast("double") / union), 6)
-    return j.select("id_a", "id_b", jac.alias("jac")).filter(
-        F.col("jac") >= threshold
-    )
-
-
-def minhash_dedup_pairs_collapsed(
-    df: DataFrame,
-    threshold: float = 0.6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-) -> DataFrame:
-    """Same pair set as :func:`minhash_dedup_pairs`, restructured for
-    duplicate-heavy (templated) corpora: documents are collapsed to
-    one representative per TOKEN-SET fingerprint BEFORE
-    minhash/LSH/verify, and pair results are fanned back to ids by
-    fingerprint afterwards.
-
-    Why the token set is the right collapse key: every quantity the
-    plain pipeline computes — the k minhash values, hence the band
-    buckets, hence candidacy, AND the verified Jaccard — is a pure
-    function of ``array_distinct(tokens_ws(text))``. Two documents
-    with equal token sets are therefore interchangeable everywhere in
-    the pipeline, whatever their raw bytes. Templated corpora
-    (transcripts stamped from a message template) collapse brutally:
-    the sf0.1 conversation fixture has 13,502 sampled docs but only
-    415 distinct token sets, so the LSH self-join shrinks from 40M
-    candidate pairs to a few thousand and the token-array verify runs
-    415× less often (measured: conv_neardup 292 s → seconds, BENCH.md
-    r5). The c² clique term survives only as the fan-back join of
-    (id, id, double) rows — tiny fixed-width shuffle rows, no token
-    arrays — and that term is the OUTPUT's own size, not overhead.
-
-    Output-equivalence argument (per case):
-
-    * equal token sets, non-empty → plain pipeline yields jac = 1.0
-      (identical signature → same buckets → verify |s|/|s|); here the
-      group self-edge emits 1.0 directly.
-    * equal token sets, EMPTY → plain pipeline candidates collide
-      (null signature → one bucket) but verify yields 0/0 = NULL,
-      dropped by the threshold filter; here the self-edge is
-      suppressed for empty-token groups.
-    * different token sets → both pipelines run the identical
-      LSH+verify, just keyed by fingerprint here; cross-group results
-      fan out to every (id_a < id_b) member combination with the
-      group-level jac, exactly the per-id result.
-
-    The fingerprint hashes each token before joining (md5 hex cannot
-    contain the separator), so distinct token sets cannot collide
-    into one group short of an md5 collision.
-    """
-    toks_fp = F.md5(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.array_distinct(tokens_ws(F.col(text_col)))),
-                F.md5,
-            ),
+    # Every quantity below (the signature, hence the band buckets and
+    # candidacy, and the verified Jaccard) is a function of the
+    # document's distinct token set, so documents with equal token
+    # sets are collapsed into one group before any of it runs: cost
+    # follows the number of distinct token sets, not of documents
+    # (templated transcripts collapse 30x), and the pairs are fanned
+    # back to ids at the end. The group key and the verify side are
+    # the sorted xxhash64 token set: |A∩B| and |A∪B| over injectively
+    # mapped sets equal the string-set counts, and a false match needs
+    # two distinct tokens with equal xxhash64 (≲ V²/2⁶⁵ for V distinct
+    # tokens corpus-wide). The signature stays seeded on the token
+    # strings (the DuckDB twin's hash), taken from any member.
+    groups = (
+        _token_sets(df, id_col, text_col)
+        .groupBy(F.array_sort(F.transform("__toks", lambda t: F.xxhash64(t))).alias("toks"))
+        .agg(
+            F.min(id_col).alias("g"),
+            F.collect_list(id_col).alias("m"),
+            F.first("__toks").alias("__toks"),
         )
     )
-    # fp is scanned three times (groups + both member sides) and sits
-    # atop the caller's (possibly expensive) upstream plan — persist
-    # the tiny (id, fp, text) projection to pin upstream to one run.
-    # persist (lazy), NOT localCheckpoint: every reference below goes
-    # through this same DataFrame object, so cache lookup matches on
-    # node identity even though the fingerprint plan carries lambda
-    # HOFs (a re-ANALYZED branch — e.g. a self-union — would not
-    # match; that is why `sym` below uses explode, not union; an
-    # eager checkpoint also measured ~2x slower here, r6).
-    fp = df.select(
-        F.col(id_col), toks_fp.alias("__fp"), F.col(text_col)
-    ).persist()
-    groups = fp.groupBy("__fp").agg(
-        F.first(text_col).alias(text_col),  # any member: equal token sets
-        F.count(F.lit(1)).alias("__n"),
+    # one checkpointed row per group: the text is scanned and
+    # tokenized once, and the band self-join and both verify sides
+    # read it
+    docs = groups.select("g", "toks", "m", _lsh_bands(F.col("__toks"), k, bands).alias("bb"))
+    docs = docs.localCheckpoint()
+    buckets = docs.select(
+        "g", (F.size("m") > 1).alias("dup"), F.posexplode("bb").alias("band", "bucket")
     )
-    rep_pairs = minhash_dedup_pairs(
-        groups.select(F.col("__fp").alias(id_col), text_col),
-        threshold,
-        id_col,
-        text_col,
-        k=k,
-        bands=bands,
+    # A group is its own candidate when it has two or more members.
+    # The verify and the fan-out run in the partitions of the distinct
+    # exchange, and their work follows the pair count, not the few
+    # bytes of candidates that adaptive execution would coalesce into
+    # one task: so the exchange gets one partition per core
+    # (REPARTITION_BY_NUM is never coalesced). Measured on sf0.1: the
+    # conv_neardup input 9.0 s → 6.2 s per call; verifying inside the
+    # band join instead ran sf0.1 documents in 65 s against 20 s.
+    g_a, g_b = F.col("g_a"), F.col("g_b")
+    cands = (
+        buckets.withColumnRenamed("g", "g_a")
+        .join(buckets.select("band", "bucket", F.col("g").alias("g_b")), ["band", "bucket"])
+        .filter((g_a < g_b) | ((g_a == g_b) & F.col("dup")))
+        .select("g_a", "g_b")
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, "g_a", "g_b")
+        .distinct()
     )
-    cross = rep_pairs.select(
-        F.col("id_a").alias("fp_a"), F.col("id_b").alias("fp_b"), "jac"
+
+    def side(s: str) -> DataFrame:
+        return docs.select(*(F.col(c).alias(f"{c}_{s}") for c in ("g", "toks", "m")))
+
+    pairs = (
+        cands.join(side("a"), "g_a")
+        .join(side("b"), "g_b")
+        .select("g_a", "g_b", "m_a", "m_b", _jaccard("toks_a", "toks_b").alias("jac"))
+        .filter(F.col("jac") >= threshold)
+        .select("g_a", "g_b", "m_b", "jac", F.explode("m_a").alias("x"))
+        .select("g_a", "g_b", "x", "jac", F.explode("m_b").alias("y"))
     )
-    # both orientations IN ONE PASS via explode (member ids interleave
-    # across groups, so the final id_a < id_b filter must see each
-    # group pair both ways). NOT a self-union: the union's re-analyzed
-    # second branch fails sameResult against the first (lambda ids),
-    # so the whole rep-level LSH+verify pipeline would run twice —
-    # the same defect fixed in dup_clusters' edge build this round.
-    sym = cross.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("fp_a"), F.col("fp_b"), F.col("jac")),
-                F.struct(
-                    F.col("fp_b").alias("fp_a"),
-                    F.col("fp_a").alias("fp_b"),
-                    F.col("jac"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.fp_a", "e.fp_b", "e.jac")
-    self_edges = groups.filter(
-        (F.col("__n") >= 2)
-        & (F.size(F.array_distinct(tokens_ws(F.col(text_col)))) > 0)
-    ).select(
-        F.col("__fp").alias("fp_a"),
-        F.col("__fp").alias("fp_b"),
-        F.round(F.lit(1.0), 6).alias("jac"),
-    )
-    edges = sym.unionByName(self_edges)
-    members_a = fp.select(F.col(id_col).alias("id_a"), F.col("__fp").alias("fp_a"))
-    members_b = fp.select(F.col(id_col).alias("id_b"), F.col("__fp").alias("fp_b"))
-    # the fan-out is quadratic in clique size BY OUTPUT CONTRACT (it
-    # IS the pair set); broadcasting the per-doc member map keeps it
-    # a single shuffle-free generate stage. At cluster scale swap the
-    # broadcasts for a shuffle join keyed on fingerprint if the doc
-    # count outgrows the driver (both sides are fixed-width rows).
-    return (
-        F.broadcast(edges).join(members_a, "fp_a")
-        .join(F.broadcast(members_b), "fp_b")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "jac")
+    return pairs.filter((g_a < g_b) | (F.col("x") < F.col("y"))).select(
+        F.least("x", "y").alias("id_a"), F.greatest("x", "y").alias("id_b"), "jac"
     )
 
 
@@ -1163,6 +1044,15 @@ def remove_duplicated_spans_sql(
     )
 
 
+def _path_exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, on any Hadoop filesystem. An incremental
+    store is absent only when its directory is: a store that exists
+    but cannot be read must fail the batch, not silently turn dedup
+    off and then be appended to."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def incremental_exact_dedup(
     df: DataFrame,
     store_path: str,
@@ -1193,15 +1083,9 @@ def incremental_exact_dedup(
     fps = df.withColumn("fp", fingerprint(F.col(text_col)))
     winners = fps.groupBy("fp").agg(F.min(id_col).alias("__w"))
     batch_kept = fps.join(winners, "fp").filter(F.col(id_col) == F.col("__w"))
-    try:
-        store = spark.read.parquet(store_path).select("fp")
-        seen_store = True
-    except Exception:  # first batch: no store yet
-        store = None
-        seen_store = False
-    kept = (
-        batch_kept.join(store, "fp", "left_anti") if seen_store else batch_kept
-    )
+    kept = batch_kept
+    if _path_exists(spark, store_path):  # else the first batch
+        kept = kept.join(spark.read.parquet(store_path).select("fp"), "fp", "left_anti")
     # sever lineage before touching the store: `kept` is lazy and its
     # plan READS store_path — appending to the store and then running
     # another action would re-execute the anti-join against the
@@ -1266,9 +1150,8 @@ def incremental_minhash_dedup(
     ``max_bucket_size`` caps the STORE bucket fan-in the same way
     ``lsh_candidate_pairs`` caps its self-join (report the cut with
     :func:`lsh_oversized_buckets` over the batch — never silent);
-    templated corpora should also collapse exact dups first
-    (:func:`minhash_dedup_pairs_collapsed` rationale). NOT
-    DuckDB-oracle-able (the store is mutable state across calls);
+    within-batch pairs come from :func:`minhash_dedup_pairs`, which
+    collapses equal token sets first. NOT DuckDB-oracle-able (the store is mutable state across calls);
     covered by batch-sequence tests instead (same policy as
     incremental_exact_dedup)."""
     spark = df.sparkSession
@@ -1283,44 +1166,27 @@ def incremental_minhash_dedup(
     batch_kept = df.join(losers, id_col, "left_anti")
     n_batch_kept = batch_kept.count()
 
-    try:
+    if _path_exists(spark, bucket_store):  # else the first batch
         old_buckets = spark.read.parquet(bucket_store)
-        seen_store = True
-    except Exception:  # first batch: no store yet
-        seen_store = False
-    if seen_store:
         new_buckets = _lsh_band_buckets(batch_kept, id_col, text_col, k, bands)
-        if max_bucket_size is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("band", "bucket")
-            old_buckets = old_buckets.withColumn(
-                "__bsz", F.count(F.lit(1)).over(w)
-            ).filter(F.col("__bsz") <= max_bucket_size).drop("__bsz")
         cand = (
             new_buckets.withColumnRenamed(id_col, "new_id")
             .join(
-                old_buckets.withColumnRenamed(id_col, "old_id"),
+                _cap_buckets(old_buckets, max_bucket_size).withColumnRenamed(id_col, "old_id"),
                 ["band", "bucket"],
             )
             .select("new_id", "old_id")
             .distinct()
         )
-        new_toks = batch_kept.select(
-            F.col(id_col).alias("new_id"),
-            F.array_distinct(tokens_ws(F.col(text_col))).alias("toks_a"),
+        new_toks = _token_sets(batch_kept, id_col, text_col).withColumnsRenamed(
+            {id_col: "new_id", "__toks": "toks_a"}
         )
         old_toks = spark.read.parquet(toks_store).select(
             F.col(id_col).alias("old_id"), F.col("toks").alias("toks_b")
         )
         j = cand.join(new_toks, "new_id").join(old_toks, "old_id")
-        inter = F.size(F.array_intersect("toks_a", "toks_b"))
-        union = F.size(F.array_distinct(F.concat("toks_a", "toks_b")))
-        # 0/0 null-guard: two empty-token docs collide in the
-        # null-signature bucket; NULL jac fails the threshold filter
-        jac = F.when(union > 0, inter.cast("double") / union)
         dropped = (
-            j.filter(jac >= threshold)
+            j.filter(_jaccard("toks_a", "toks_b") >= threshold)
             .select(F.col("new_id").alias(id_col))
             .distinct()
         )
@@ -1335,10 +1201,9 @@ def incremental_minhash_dedup(
     _lsh_band_buckets(kept, id_col, text_col, k, bands).write.mode(
         "append"
     ).parquet(bucket_store)
-    kept.select(
-        F.col(id_col),
-        F.array_distinct(tokens_ws(F.col(text_col))).alias("toks"),
-    ).write.mode("append").parquet(toks_store)
+    _token_sets(kept, id_col, text_col).withColumnRenamed("__toks", "toks").write.mode(
+        "append"
+    ).parquet(toks_store)
     return {
         "rows_in": n_in,
         "rows_kept": n_kept,

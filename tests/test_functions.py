@@ -246,38 +246,50 @@ def _collapsed_equiv_fixture(spark):
         (2, base, "en"),
         (5, base, "en"),
         (9, base, "en"),
+        # the clique's token set in other bytes: reordered, upper-case,
+        # extra whitespace
+        (11, "  TOK29\t" + " ".join(reversed(base.split()[:29])) + "  ", "en"),
         # near-dup of the clique (cross-group edge)
         (3, base + " extra", "en"),
-        # second exact-dup pair, unrelated text
+        # a clique of 3, unrelated text, whose ids interleave with the
+        # first clique's
+        (0, other, "en"),
         (4, other, "en"),
         (8, other, "en"),
         # singleton, unrelated
         (6, "совсем other words", "en"),
-        # identical EMPTY-token texts: plain pipeline yields NULL
-        # jaccard (0/0) and drops them — collapsed must too
+        # identical EMPTY-token texts: their jaccard is 0/0, so no pair
         (7, "   ", "en"),
         (10, "   ", "en"),
+        # NULL text pairs with nothing
+        (12, None, "en"),
     ]
     return _docs(spark, rows)
 
 
-def test_minhash_collapsed_equals_plain(spark):
-    # output-equivalence pin: exact dups, cross-group near dups,
-    # interleaved ids across groups, and the empty-token edge case
-    df = _collapsed_equiv_fixture(spark)
-    plain = {
+def test_minhash_pairs_pin_on_collapsed_fixture(spark):
+    # equal token sets pair at 1.0 whatever their bytes, a near-dup of
+    # a clique pairs with every member, interleaved ids come out as
+    # (least, greatest), and empty and NULL texts pair with nothing
+    from itertools import combinations
+
+    clique, near = (1, 2, 5, 9, 11), round(30 / 31, 6)
+    want = {(a, b, 1.0) for a, b in combinations(clique, 2)}
+    want |= {(a, b, 1.0) for a, b in combinations((0, 4, 8), 2)}
+    want |= {(min(i, 3), max(i, 3), near) for i in clique}
+    got = [
         (r["id_a"], r["id_b"], r["jac"])
-        for r in dedup.minhash_dedup_pairs(df, 0.6).collect()
-    }
-    collapsed = {
-        (r["id_a"], r["id_b"], r["jac"])
-        for r in dedup.minhash_dedup_pairs_collapsed(df, 0.6).collect()
-    }
-    assert collapsed == plain
-    # non-vacuous: self-edge pairs, cross-group pairs, and full clique
-    assert (1, 2, 1.0) in plain and (4, 8, 1.0) in plain
-    assert any(a == 1 and b == 3 for a, b, _ in plain)
-    assert not any(7 in (a, b) or 10 in (a, b) for a, b, _ in plain)
+        for r in dedup.minhash_dedup_pairs(_collapsed_equiv_fixture(spark), 0.6).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_minhash_pairs_are_not_cached(spark):
+    """The pipeline leaves nothing pinned in the session's cache."""
+    spark.catalog.clearCache()
+    dedup.minhash_dedup_pairs(_collapsed_equiv_fixture(spark), 0.6).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lsh_bucket_cap_drops_reported_buckets(spark):
@@ -525,6 +537,23 @@ def test_incremental_minhash_dedup_batches(spark, tmp_path):
     s3 = incremental_minhash_dedup(b2, store, out)
     assert s3["rows_kept"] == 0
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 3, 5}
+
+
+@pytest.mark.parametrize("fn,table", [
+    ("incremental_exact_dedup", ""),
+    ("incremental_minhash_dedup", "buckets"),
+])
+def test_incremental_dedup_raises_on_corrupt_store(spark, tmp_path, fn, table):
+    # a store that exists but cannot be read fails the batch; it must
+    # not be taken for a first batch and then appended to
+    bad = tmp_path / "store" / table
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    batch = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        getattr(dedup, fn)(batch, str(tmp_path / "store"), str(tmp_path / "out"))
+    assert sorted(p.name for p in bad.iterdir()) == ["part-00000.parquet"]
+    assert not (tmp_path / "out").exists()
 
 
 def test_remove_duplicated_spans_hand_computed(spark):

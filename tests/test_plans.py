@@ -471,6 +471,24 @@ def _kernel_plans(plans) -> list:
     return [p for p in plans if "struct(field, " in p]
 
 
+def test_minhash_pairs_one_tokenization_no_cache_no_broadcast(spark, monkeypatch):
+    """One ``minhash_dedup_pairs`` call tokenizes its input once (in
+    the checkpoint of its token-set groups), caches nothing and
+    leaves the join strategies to the planner."""
+    from satya_spark.functions.dedup import minhash_dedup_pairs
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "e d c b a"), (3, "a b c d f"), (4, None)],
+        "doc_id long, text string",
+    )
+    plans = _record_plans(spark, monkeypatch)
+    assert len(minhash_dedup_pairs(df, 0.6).collect()) == 3
+    joined = "\n".join(plans)
+    assert joined.count("split(trim(regexp_replace(lower(") == 1, joined
+    assert "InMemoryRelation" not in joined, joined
+    assert "broadcast" not in joined.lower(), joined
+
+
 def test_validate_kernel_passes_per_mode(spark, tmp_path, monkeypatch):
     """``validate`` evaluates the constraint kernels as often under a
     manifest flag as without one: once with ``--quarantine`` (the split
